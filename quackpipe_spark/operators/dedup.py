@@ -31,6 +31,8 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from quackpipe_spark.plans import journal
+
 
 #: Default ceiling (in BATCH rows) under which the index probes force a
 #: broadcast of the batch side. Bands-per-doc ≈ 4 and ~80 bytes/banded row
@@ -703,18 +705,11 @@ def append_to_minhash_index(
     meta, so an append can never diverge from the recipe the index was
     built with.
 
-    The two relations (bands + fingerprints) must land ATOMICALLY
-    together: a crash between two plain appends leaves docs
-    near-dup-probable but invisible to the exact-dup probe (or vice
-    versa). On local paths the append therefore runs the same
-    stage→commit-marker→publish journal the FTS postings appends prove
-    (VERDICT r14 #2 closed in r15; the r14 pending-marker only DETECTED
-    the torn state and demanded a rebuild): both relations stage OUTSIDE
-    the live tree, one fsynced commit marker records the exact file
-    moves, and every post-commit step is an idempotent rename — a crash
-    anywhere either leaves nothing visible (pre-commit; the stage is
-    swept and a re-run is clean) or rolls FORWARD at the next index
-    access (post-commit; both halves complete, no rebuild).
+    The two relations (bands + fingerprints) land ATOMICALLY together:
+    on local paths both are staged and published as ONE plans.journal
+    commit, so a crash anywhere leaves neither visible or rolls both
+    forward at the next index access (see that module for the crash
+    and race contract).
 
     ``write_id``: opt-in REPLAY IDEMPOTENCE (local paths only, same
     contract as fts.append_postings): with a unique id per logical
@@ -727,9 +722,10 @@ def append_to_minhash_index(
     the append loop is the index's single writer, so this is exactly the
     safe point, and it keeps probe scan-planning flat without a separate
     maintenance scheduler. None disables (run the compactor yourself)."""
+    import glob as _glob
     import os as _os
 
-    from quackpipe_spark.plans.index import norm_index_path, read_applied_last
+    from quackpipe_spark.plans.index import norm_index_path
 
     spark = docs.sparkSession
     path = norm_index_path(path)
@@ -744,10 +740,8 @@ def append_to_minhash_index(
             f"(local index path); got {path!r} — omit write_id to accept "
             "that replayed appends double-insert on this store"
         )
-    # writer-entry recovery: roll forward committed appends, sweep orphan
-    # stages (safe ONLY here — the append loop is the single writer)
     m = _load_meta(spark, path, writer=local)
-    if write_id is not None and read_applied_last(path) == write_id:
+    if write_id is not None and journal.applied_last(path) == write_id:
         return  # replay of an already-applied batch
     text_col = _index_text_col(m, text_col)
     sigs = minhash_signatures(
@@ -758,7 +752,12 @@ def append_to_minhash_index(
     )
     fps = _fingerprints(docs, m["id_col"], text_col)
     if local:
-        _append_minhash_journal(banded, fps, path, write_id)
+        c = journal.begin(path)
+        for rel, df in (("bands", banded), ("fingerprints", fps)):
+            df.write.parquet(c.staged(rel))
+            for i, src in enumerate(sorted(_glob.glob(c.staged(rel, "*.parquet")))):
+                c.move(src, f"{rel}/append-{c.id}-{i}.parquet")
+        journal.commit(c, write_id)
     else:
         # object store: no posix renames, so the journal can't run — two
         # plain appends with the documented torn-append risk (the caller
@@ -775,173 +774,16 @@ def append_to_minhash_index(
             compact_minhash_index(spark, path)
 
 
-def _append_minhash_journal(
-    banded: DataFrame, fps: DataFrame, path: str, write_id: str | None
-) -> None:
-    """The stage→commit→publish half of append_to_minhash_index (local
-    paths; see its docstring). Stages BOTH relations under one hidden
-    dir, fsyncs staged data AND dentries before the marker (roll-forward
-    reads a missing src as 'already moved', so an un-fsynced stage
-    dentry lost to power loss would silently skip the move — the fts
-    r14 lesson), then commits one marker naming the exact moves. The
-    marker rename + root-dir fsync is the atomic commit point for the
-    PAIR of relations."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from quackpipe_spark.plans.index import fsync_dir, fsync_file
-
-    tag = write_id if write_id is not None else _uuid.uuid4().hex
-    stage = _os.path.join(path, f".append-stage-{tag}")
-    _shutil.rmtree(stage, ignore_errors=True)
-    banded.write.mode("overwrite").parquet(_os.path.join(stage, "bands"))
-    fps.write.mode("overwrite").parquet(_os.path.join(stage, "fingerprints"))
-    moves: list[tuple[str, str]] = []
-    for rel in ("bands", "fingerprints"):
-        srcs = sorted(_glob.glob(_os.path.join(stage, rel, "*.parquet")))
-        for i, src in enumerate(srcs):
-            fsync_file(src)
-            moves.append(
-                (src, _os.path.join(path, rel, f"append-{tag}-{i}.parquet"))
-            )
-        fsync_dir(_os.path.join(stage, rel))
-    fsync_dir(stage)
-    commit = _os.path.join(path, f".append-commit-{tag}")
-    tmp = commit + "." + _uuid.uuid4().hex
-    with open(tmp, "w") as f:
-        _json.dump(
-            {"write_id": write_id, "stage": stage, "moves": moves}, f
-        )
-        f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, commit)
-    fsync_dir(path)  # the COMMIT POINT: marker entry durable before publish
-    _roll_forward_minhash_append(path, commit)
-
-
-def _roll_forward_minhash_append(path: str, commit_path: str) -> None:
-    """Complete a COMMITTED minhash-index append (crashed or live):
-    finish the staged-file moves (os.replace — idempotent per pair),
-    record the write_id as applied (when the append carried one), drop
-    the marker and the stage. Runs from the appender AND from reader-side
-    recovery (_recover_index_dirs), so every step is quiet under a race:
-    a concurrent roll-forward of the same marker can win any individual
-    rename/unlink and both sides still converge to the identical end
-    state (the compactor journal's race contract)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from quackpipe_spark.plans.index import fsync_dir, write_applied_last
-
-    try:
-        with open(commit_path) as f:
-            meta = _json.load(f)
-    except FileNotFoundError:
-        return  # a racing recover already finished this marker
-    touched: set[str] = set()
-    for src, dst in meta["moves"]:
-        try:
-            _os.makedirs(_os.path.dirname(dst), exist_ok=True)
-            _os.replace(src, dst)
-            touched.add(_os.path.dirname(dst))
-        except FileNotFoundError:
-            pass  # already moved (by a prior run or a racing recover)
-    for d in sorted(touched):
-        fsync_dir(d)  # publish renames durable BEFORE the marker drops
-    if meta.get("write_id"):
-        write_applied_last(path, meta["write_id"])
-    try:
-        _os.unlink(commit_path)
-    except FileNotFoundError:
-        pass
-    fsync_dir(path)  # applied-last + marker unlink durable together
-    _shutil.rmtree(meta["stage"], ignore_errors=True)
-
-
-def _recover_index_dirs(path: str, writer: bool = False) -> None:
-    """Heal crashed state at the next index ACCESS (probe or append),
-    not just the next file-count-triggered compaction — between the two,
-    a crashed merge's (or committed append's) rows would be invisible to
-    every probe. One scandir when there is nothing to do.
-
-    - ``.append-commit-*`` marker → a journaled append COMMITTED: roll
-      it forward (idempotent, race-quiet — safe from readers).
-    - ``.append-stage-*`` with no marker → the append never committed:
-      swept, but ONLY from the single writer (``writer=True``; a reader
-      cannot distinguish a crash leftover from a LIVE appender's
-      in-progress stage — the compactor's reader-side rule).
-    - legacy ``.append-pending-*`` (pre-r15 marker protocol) → still the
-      loud refusal: those appends ran un-staged, the relations may
-      disagree, and no repair can identify the torn batch's rows."""
-    import os as _os
-    import shutil as _shutil
-
-    from quackpipe_spark.plans.compactor import maybe_recover_parquet_dir
-
-    try:
-        names = sorted(_os.listdir(path))
-    except OSError:
-        names = []
-    pending = [n for n in names if n.startswith(".append-pending-")]
-    if pending:
-        raise RuntimeError(
-            f"minhash index at {path} has leftover append-pending "
-            f"marker(s) {pending}: a pre-r15 append crashed between its "
-            "bands and fingerprints writes, so the two relations may "
-            "disagree — rebuild the index with write_minhash_index (or "
-            "restore it), then delete the marker(s)"
-        )
-    for n in names:
-        # tmp marker files are ".append-commit-<tag>.<32hexuuid>" — only
-        # the renamed (committed) form rolls forward; an uncommitted tmp
-        # is pre-commit debris, swept below when the writer recovers
-        if n.startswith(".append-commit-") and _is_committed_marker(n):
-            _roll_forward_minhash_append(path, _os.path.join(path, n))
-    if writer:
-        live_markers = {
-            n[len(".append-commit-"):]
-            for n in _os.listdir(path)
-            if n.startswith(".append-commit-") and _is_committed_marker(n)
-        }
-        for n in _os.listdir(path):
-            full = _os.path.join(path, n)
-            if n.startswith(".append-stage-"):
-                if n[len(".append-stage-"):] not in live_markers:
-                    _shutil.rmtree(full, ignore_errors=True)
-            elif n.startswith(".append-commit-") and not _is_committed_marker(n):
-                try:
-                    _os.unlink(full)  # crashed tmp marker (pre-commit)
-                except OSError:
-                    pass
-    maybe_recover_parquet_dir(f"{path}/bands")
-    maybe_recover_parquet_dir(f"{path}/fingerprints")
-
-
-def _is_committed_marker(name: str) -> bool:
-    # committed markers are ".append-commit-<32-hex-or-write-id>"; the
-    # tmp form appends ".<32hex>" — distinguish by the trailing dotted
-    # hex segment (write_ids themselves may contain dots in principle,
-    # so match the exact uuid4-hex shape the tmp path appends)
-    import re as _re
-
-    return _re.search(r"\.[0-9a-f]{32}$", name) is None
-
-
 def _load_meta(spark, path: str, writer: bool = False):
     """Crash recovery + the index meta row, single-sourced for every
-    probe/append entry point (the recipe was triplicated and a meta
-    change had to be edited in three places, review r12). Recovery's
-    stage sweep runs only for the single WRITER (see
-    _recover_index_dirs)."""
+    probe/append entry point. Every index access rolls committed journal
+    commits forward; only the append (the single WRITER) also sweeps
+    uncommitted stages (plans.journal's race contract)."""
     from quackpipe_spark.plans.index import norm_index_path
 
     path = norm_index_path(path)
     if "://" not in path:
-        _recover_index_dirs(path, writer=writer)
+        journal.recover_tree(path, writer)
     return spark.read.parquet(f"{path}/meta").collect()[0]
 
 
@@ -960,6 +802,7 @@ def compact_minhash_index(spark, path: str) -> list[str]:
     from quackpipe_spark.plans.index import norm_index_path
 
     path = norm_index_path(path)
+    journal.recover(path, writer=True)  # finish a pending append first
     out = compact_parquet_dir(spark, f"{path}/bands", order_by=["band", "bh"])
     out += compact_parquet_dir(
         spark, f"{path}/fingerprints", order_by=["fingerprint"]

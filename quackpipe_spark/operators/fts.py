@@ -42,6 +42,8 @@ from pyspark.sql.window import Window
 
 from quackpipe_spark.operators.dedup import tokenize
 from quackpipe_spark.operators.sampling import hash_mod, hash_mod_py
+from quackpipe_spark.plans import journal
+from quackpipe_spark.plans.index import norm_index_path
 
 
 def build_postings(
@@ -74,30 +76,29 @@ def _is_local_path(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
 
-def _norm_index_path(path: str) -> str:
-    """Strip a ``file:`` scheme down to the plain OS path — shared idiom
-    in plans/index.py since r15 (the minhash-index append protocol needs
-    the identical normalization; see norm_index_path's docstring)."""
-    from quackpipe_spark.plans.index import norm_index_path
-
-    return norm_index_path(path)
+def _read_stats(spark, path: str):
+    """The corpus-stats row (N, avgdl, n_buckets)."""
+    src = f"{path}/stats/stats.parquet" if _is_local_path(path) else f"{path}/stats"
+    return spark.read.parquet(src).collect()[0]
 
 
-def _write_stats_atomic(path: str, n: int, avgdl: float, n_buckets: int) -> None:
-    """Publish the corpus-stats row as ONE parquet file via tmp+rename —
-    atomic at the file level, so a reader never sees a missing or
-    half-written stats row (Spark's directory overwrite is
-    delete-then-write and can crash into either). Any older stats files
-    in the dir are swept after the new row is live. Local paths only
-    (see _is_local_path)."""
-    import os
-    import uuid
+def _doc_stats(postings: DataFrame, id_col: str) -> tuple[int, int]:
+    """(number of docs, Σ doc length) of a postings frame."""
+    r = (
+        postings.groupBy(id_col)
+        .agg(F.first("dl").alias("dl"))
+        .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
+        .collect()[0]
+    )
+    return int(r["n"]), int(r["sum_dl"] or 0)
 
+
+def _stage_stats(c, n: int, avgdl: float, n_buckets: int) -> None:
+    """Stage the stats row as one parquet file in journal commit ``c``,
+    replacing ``stats/stats.parquet`` when ``c`` commits."""
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    d = f"{path}/stats"
-    os.makedirs(d, exist_ok=True)
     t = pa.table(
         {
             "N": pa.array([int(n)], pa.int64()),
@@ -105,123 +106,8 @@ def _write_stats_atomic(path: str, n: int, avgdl: float, n_buckets: int) -> None
             "n_buckets": pa.array([int(n_buckets)], pa.int32()),
         }
     )
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-    papq.write_table(t, tmp)
-    try:
-        fd = os.open(tmp, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-    except OSError:
-        pass
-    os.replace(tmp, os.path.join(d, "stats.parquet"))
-    # the rename is durable only once the STATS dir's entry is — without
-    # this, a power loss could revert the stats row while the
-    # applied-last marker (fsynced via the index ROOT dir, not stats/)
-    # survives: postings hold the batch, stats stay the old N/avgdl, no
-    # marker exists to trigger repair, and the replayed write_id skips
-    # as already applied — silently wrong forever (review r14)
-    _fsync_dir(d)
-    for f in os.listdir(d):
-        if f != "stats.parquet" and not f.startswith("."):
-            os.unlink(os.path.join(d, f))
-
-
-def _read_stats(spark, path: str):
-    """Read the stats row, preferring the atomic stats.parquet when
-    present (a legacy Spark-written stats dir mid-migration could
-    briefly hold both)."""
-    import os
-
-    f = f"{path}/stats/stats.parquet"
-    src = f if _is_local_path(path) and os.path.exists(f) else f"{path}/stats"
-    return spark.read.parquet(src).collect()[0]
-
-
-def _fsync_dir(path: str) -> None:
-    """Best-effort directory fsync (shared helper in plans/index.py):
-    a rename is durable only once its directory entry is — without this,
-    a power loss could persist some published postings while losing the
-    commit/applied markers, a state no recovery path detects."""
-    from quackpipe_spark.plans.index import fsync_dir
-
-    fsync_dir(path)
-
-
-def _applied_last(path: str) -> str | None:
-    """Shared applied-last protocol (plans/index.py since r15 — the
-    minhash append journal uses the identical file and semantics)."""
-    from quackpipe_spark.plans.index import read_applied_last
-
-    return read_applied_last(path)
-
-
-def _write_applied_last(path: str, write_id: str) -> None:
-    from quackpipe_spark.plans.index import write_applied_last
-
-    write_applied_last(path, write_id)
-
-
-def _roll_forward_append(path: str, commit_path: str) -> None:
-    """Complete a COMMITTED idempotent append (crashed or live): finish
-    the staged-file moves (os.replace — idempotent per pair), overwrite
-    the stats row with the marker's ABSOLUTE values (recorded at commit
-    time, so re-running never double-applies a delta), record the
-    write_id as applied, then drop the marker and stage remnants."""
-    import json
-    import os
-    import shutil
-
-    with open(commit_path) as f:
-        meta = json.load(f)
-    touched: set[str] = set()
-    for src, dst in meta["moves"]:
-        if os.path.exists(src):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            touched.add(os.path.dirname(dst))
-    for d in sorted(touched):
-        _fsync_dir(d)  # publish renames durable BEFORE the marker flips
-    if touched:
-        # a BRAND-NEW bucket dir's own dentry lives in postings/ — fsync
-        # the parent too, or a power loss could drop the whole bucket
-        # while the applied marker survives (review r12 follow-up #2)
-        _fsync_dir(os.path.join(path, "postings"))
-    _write_stats_atomic(path, meta["new_n"], meta["new_avgdl"], meta["n_buckets"])
-    _write_applied_last(path, meta["write_id"])
-    os.unlink(commit_path)
-    _fsync_dir(path)  # applied-last + marker unlink durable together
-    shutil.rmtree(meta["stage"], ignore_errors=True)
-
-
-def repair_postings_stats(spark, path: str) -> None:
-    """Recompute the stats row from the postings (ground truth) and clear
-    any append-pending markers — run automatically when append_postings
-    finds a marker from a crashed predecessor, callable any time by the
-    index's single writer."""
-    import os
-
-    path = _norm_index_path(path)
-    post = spark.read.parquet(f"{path}/postings")
-    # the id column is whatever the build used: the one column that isn't
-    # part of the fixed postings shape
-    id_col = next(
-        c for c in post.columns if c not in ("term", "tf", "dl", "term_bucket")
-    )
-    st = (
-        post.groupBy(id_col)
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.count("*").alias("N"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
-    old = _read_stats(spark, path)
-    _write_stats_atomic(
-        path, int(st["N"]), float(st["avgdl"] or 1.0), int(old["n_buckets"])
-    )
-    for f in os.listdir(path):
-        if f.startswith(".append-pending-"):
-            os.unlink(os.path.join(path, f))
+    papq.write_table(t, c.staged("stats.parquet"))
+    c.move(c.staged("stats.parquet"), "stats/stats.parquet")
 
 
 def write_postings(
@@ -234,7 +120,7 @@ def write_postings(
     just-written compact parquet rather than re-running the postings
     lineage (a second explode over the raw corpus — the build must stay
     ONE heavy pass)."""
-    path = _norm_index_path(path)
+    path = norm_index_path(path)
     spark = postings.sparkSession
     out = postings.withColumn("term_bucket", hash_mod(F.col("term"), n_buckets))
     # cluster by bucket before the partitioned write: one file per bucket
@@ -243,20 +129,33 @@ def write_postings(
     out.repartition("term_bucket").write.partitionBy("term_bucket").mode(
         "overwrite"
     ).parquet(f"{path}/postings")
-    st = (
-        spark.read.parquet(f"{path}/postings")
-        .groupBy(id_col)
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.count("*").alias("N"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
+    _publish_stats(spark, path, id_col, n_buckets)
+
+
+def _publish_stats(spark, path: str, id_col: str, n_buckets: int) -> None:
+    """Aggregate the stats row from the whole postings and publish it."""
+    n, sum_dl = _doc_stats(spark.read.parquet(f"{path}/postings"), id_col)
+    avgdl = sum_dl / n if n else 1.0
     if _is_local_path(path):
-        _write_stats_atomic(path, int(st["N"]), float(st["avgdl"] or 1.0), n_buckets)
+        c = journal.begin(path)
+        _stage_stats(c, n, avgdl, n_buckets)
+        journal.commit(c)
     else:
-        spark.createDataFrame(
-            [(int(st["N"]), float(st["avgdl"] or 1.0), n_buckets)],
-            "N BIGINT, avgdl DOUBLE, n_buckets INT",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        _write_remote_stats(spark, path, n, avgdl, n_buckets)
+
+
+def _write_remote_stats(
+    spark, path: str, n: int, avgdl: float, n_buckets: int
+) -> None:
+    spark.createDataFrame(
+        [(n, avgdl, n_buckets)], "N BIGINT, avgdl DOUBLE, n_buckets INT"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+
+def _add_batch(st, n_new: int, sum_dl: int) -> tuple[int, float]:
+    """(N', avgdl') after a batch of ``n_new`` docs with Σdl ``sum_dl``."""
+    n = int(st["N"]) + n_new
+    return n, (int(st["N"]) * float(st["avgdl"]) + sum_dl) / n
 
 
 def append_postings(
@@ -273,11 +172,17 @@ def append_postings(
     tokenize/explode pass, and its postings append into the same
     term-bucket partition layout.
 
-    Corpus stats update INCREMENTALLY from the old stats row plus one
-    small aggregation over the batch (N' = N + n; avgdl' =
-    (N·avgdl + Σdl) / N') — never a full-index re-aggregation, so the
-    append cost is O(batch) at any index size. Batch ids must be
-    disjoint from the indexed corpus (same contract as the dedup index;
+    The batch's postings are written ONCE and the corpus stats update
+    INCREMENTALLY from its doc count n and Σdl (N' = N + n; avgdl' =
+    (N·avgdl + Σdl) / N'), so the append cost is O(batch) at any index
+    size. On local paths the postings go to a journal stage, n and Σdl
+    come from that small staged parquet, and the postings files and the
+    new stats row publish as ONE plans.journal commit: a crash anywhere
+    leaves the old index or rolls forward to the new one. On an object
+    store (no renames, no journal) the batch is pinned, appended in
+    place and counted from the pinned copy; a crash between the postings
+    and the stats write leaves them apart. Batch ids must be disjoint
+    from the indexed corpus (same contract as the dedup index;
     re-indexing a doc would double-count it in df and stats).
 
     ``compact_over_files``: when any single bucket directory exceeds the
@@ -286,45 +191,19 @@ def append_postings(
     dedup-index auto-compact).
 
     ``write_id``: opt-in REPLAY IDEMPOTENCE for streaming callers (local
-    paths only). With a unique id per logical batch, the append runs a
-    stage→commit-marker→publish protocol: a crash at any point either
-    leaves nothing visible (pre-commit — the replay re-runs cleanly) or
-    rolls FORWARD at the next index access (post-commit — the replay
-    sees the id applied and SKIPS), so a replayed micro-batch can never
-    double-count tf/df/N/avgdl. Only the most recent id is remembered
-    (Structured Streaming replays only the last uncommitted batch);
-    passing a reused id for different data silently skips it — ids must
-    be unique. Without write_id (batch callers), the original
-    pending-marker protocol applies: a crash never corrupts stats
-    (rebuilt from postings) but a replayed identical call appends again."""
+    paths only). With a unique id per logical batch, the id commits with
+    the batch and a replay of an applied id SKIPS, so a replayed
+    micro-batch can never double-count tf/df/N/avgdl. Only the most
+    recent id is remembered (Structured Streaming replays only the last
+    uncommitted batch); passing a reused id for different data silently
+    skips it — ids must be unique. Without write_id a replayed identical
+    call appends again."""
+    import glob
     import os
-    import shutil as _shutil
-    import uuid as _uuid
 
-    path = _norm_index_path(path)
+    path = norm_index_path(path)
     spark = docs.sparkSession
     local = _is_local_path(path)
-    if local:
-        # heal crashed COMPACTIONS at the next index access (not only the
-        # next file-count-triggered compaction); then roll forward any
-        # COMMITTED idempotent append a predecessor crashed mid-publish
-        # (its marker carries absolute stats, so this is replay-safe),
-        # sweep orphan pre-commit stage dirs, and finally: a pending
-        # marker from a crashed predecessor means postings may include a
-        # batch the stats row doesn't — rebuild stats from the postings
-        # (ground truth) before trusting the incremental update
-        from quackpipe_spark.plans.compactor import maybe_recover_parquet_dir
-
-        for dirpath, _d, _f in os.walk(f"{path}/postings"):
-            maybe_recover_parquet_dir(dirpath)
-        for f in sorted(os.listdir(path)):
-            if f.startswith(".append-commit-"):
-                _roll_forward_append(path, os.path.join(path, f))
-        for f in sorted(os.listdir(path)):
-            if f.startswith(".append-stage-"):  # no commit marker → orphan
-                _shutil.rmtree(os.path.join(path, f), ignore_errors=True)
-        if any(f.startswith(".append-pending-") for f in os.listdir(path)):
-            repair_postings_stats(spark, path)
     if write_id is not None and not local:
         # silently dropping the idempotence contract would re-introduce
         # the replay double-count this parameter exists to prevent — on
@@ -336,62 +215,42 @@ def append_postings(
             "replay_safe=False to postings_append_writer) to accept that "
             "replayed micro-batches double-count on this store"
         )
-    if write_id is not None and _applied_last(path) == write_id:
-        return  # replay of an already-applied batch
-    st = _read_stats(spark, path)
-    n_buckets = st["n_buckets"]
-    if write_id is not None:
-        _append_postings_idempotent(
-            spark, docs, path, id_col, text_col, st, write_id
-        )
-        if compact_over_files is not None:
-            _maybe_compact_postings(spark, path, compact_over_files)
-        return
-    marker = None
     if local:
-        marker = os.path.join(path, f".append-pending-{_uuid.uuid4().hex}")
-        with open(marker, "w"):
-            pass
-    # PIN the batch postings: the parquet append and the stats
-    # aggregation are two actions over the same heavy tokenize/explode
-    # lineage — unpinned, the batch pays it twice, and a source that is
-    # nondeterministic between the two actions (a directory still being
-    # written, a sampled frame) would write postings and stats from
-    # DIFFERENT data, the exact drift the marker/repair machinery
-    # exists to prevent
-    post = build_postings(docs, id_col, text_col).persist()
-    try:
-        out = post.withColumn("term_bucket", hash_mod(F.col("term"), n_buckets))
-        # cluster on the partition column first: one file per bucket per
-        # append instead of tasks × buckets (the write_postings r14 fix —
-        # an un-clustered append added up to `parallelism` files per
-        # bucket per batch, re-growing the probe fan-in between
-        # compactions)
-        out.repartition("term_bucket").write.partitionBy("term_bucket").mode(
-            "append"
-        ).parquet(f"{path}/postings")
-        b = (
-            post.groupBy(id_col)
-            .agg(F.first("dl").alias("dl"))
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
-            .collect()[0]
-        )
-    finally:
-        post.unpersist()
-    n_new = int(b["n"] or 0)
-    if n_new:
-        new_n = int(st["N"]) + n_new
-        new_avgdl = (int(st["N"]) * float(st["avgdl"]) + float(b["sum_dl"])) / new_n
-        if local:
-            _write_stats_atomic(path, new_n, new_avgdl, int(n_buckets))
-        else:
-            spark.createDataFrame(
-                [(new_n, new_avgdl, int(n_buckets))],
-                "N BIGINT, avgdl DOUBLE, n_buckets INT",
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    if marker is not None:
-        os.unlink(marker)
-    if compact_over_files is not None and local:
+        journal.recover_tree(path, writer=True)
+        if write_id is not None and journal.applied_last(path) == write_id:
+            return  # replay of an already-applied batch
+    st = _read_stats(spark, path)
+    n_buckets = int(st["n_buckets"])
+    post = build_postings(docs, id_col, text_col)
+    if not local:
+        post = post.persist()  # no stage to count from: one tokenize pass
+    # cluster on the partition column first: one file per bucket per
+    # append instead of tasks × buckets (the write_postings r14 fix)
+    writer = (
+        post.withColumn("term_bucket", hash_mod(F.col("term"), n_buckets))
+        .repartition("term_bucket")
+        .write.partitionBy("term_bucket")
+    )
+    if not local:
+        try:
+            writer.mode("append").parquet(f"{path}/postings")
+            n_new, sum_dl = _doc_stats(post, id_col)
+        finally:
+            post.unpersist()
+        if n_new:
+            _write_remote_stats(spark, path, *_add_batch(st, n_new, sum_dl), n_buckets)
+        return
+    c = journal.begin(path)
+    writer.parquet(c.staged("postings"))
+    staged = sorted(glob.glob(c.staged("postings", "term_bucket=*", "*.parquet")))
+    if staged:
+        n_new, sum_dl = _doc_stats(spark.read.parquet(c.staged("postings")), id_col)
+        for i, src in enumerate(staged):
+            bucket = os.path.basename(os.path.dirname(src))
+            c.move(src, f"postings/{bucket}/append-{c.id}-{i}.parquet")
+        _stage_stats(c, *_add_batch(st, n_new, sum_dl), n_buckets)
+    journal.commit(c, write_id)
+    if compact_over_files is not None:
         _maybe_compact_postings(spark, path, compact_over_files)
 
 
@@ -410,96 +269,10 @@ def _maybe_compact_postings(spark, path: str, compact_over_files: int) -> None:
             break
 
 
-def _append_postings_idempotent(
-    spark, docs: DataFrame, path: str, id_col: str, text_col: str, st, write_id: str
-) -> None:
-    """The write_id append protocol (local paths; see append_postings):
-    stage the batch postings OUTSIDE the live tree, commit a marker that
-    records the exact file moves and the ABSOLUTE post-append stats, then
-    publish. Every step after the marker is idempotent, so a crash
-    anywhere leaves the index recoverable to exactly-once semantics."""
-    import glob as _glob
-    import json as _json
-    import os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    n_buckets = int(st["n_buckets"])
-    stage = os.path.join(path, f".append-stage-{write_id}")
-    _shutil.rmtree(stage, ignore_errors=True)
-    post = build_postings(docs, id_col, text_col).persist()
-    try:
-        out = post.withColumn("term_bucket", hash_mod(F.col("term"), n_buckets))
-        # one file per bucket per append (see append_postings — fewer
-        # journaled moves and per-file fsyncs too)
-        out.repartition("term_bucket").write.partitionBy("term_bucket").mode(
-            "overwrite"
-        ).parquet(stage)
-        b = (
-            post.groupBy(id_col)
-            .agg(F.first("dl").alias("dl"))
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
-            .collect()[0]
-        )
-    finally:
-        post.unpersist()
-    n_new = int(b["n"] or 0)
-    if not n_new:
-        # nothing to publish, but the batch IS applied: remember the id
-        # so a replay of the same empty batch stays a no-op
-        _shutil.rmtree(stage, ignore_errors=True)
-        _write_applied_last(path, write_id)
-        return
-    new_n = int(st["N"]) + n_new
-    new_avgdl = (int(st["N"]) * float(st["avgdl"]) + float(b["sum_dl"])) / new_n
-    from quackpipe_spark.plans.compactor import _fsync_file
-
-    moves = []
-    for i, src in enumerate(
-        sorted(_glob.glob(os.path.join(stage, "term_bucket=*", "*.parquet")))
-    ):
-        _fsync_file(src)  # staged DATA must be durable before the marker:
-        # roll-forward must never publish a delayed-allocation-truncated
-        # file (same reasoning as the compactor's journaled publish)
-        bucket = os.path.basename(os.path.dirname(src))
-        dst = os.path.join(
-            path, "postings", bucket, f"append-{write_id}-{i}.parquet"
-        )
-        moves.append((src, dst))
-    # the staged files' DENTRIES must be durable before the marker too:
-    # roll-forward reads os.path.exists(src)==False as "already moved",
-    # so a power loss that kept the marker but dropped the un-fsynced
-    # stage dentries would skip every move yet still publish the
-    # marker's stats — postings lost, stats overcounted, replay skipped
-    # (review r14)
-    for d in sorted({os.path.dirname(src) for src, _ in moves}):
-        _fsync_dir(d)
-    _fsync_dir(stage)
-    commit = os.path.join(path, f".append-commit-{write_id}")
-    tmp = commit + "." + _uuid.uuid4().hex
-    with open(tmp, "w") as f:
-        _json.dump(
-            {
-                "write_id": write_id,
-                "stage": stage,
-                "moves": moves,
-                "new_n": new_n,
-                "new_avgdl": new_avgdl,
-                "n_buckets": n_buckets,
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, commit)
-    _fsync_dir(path)  # the COMMIT POINT: marker entry durable before publish
-    _roll_forward_append(path, commit)
-
-
 def load_postings(spark, path: str) -> DataFrame:
     """Reopen the postings table (all buckets — for re-aggregation or
     in-memory pinning; the per-query path is search_postings_index)."""
-    return spark.read.parquet(f"{_norm_index_path(path)}/postings").drop("term_bucket")
+    return spark.read.parquet(f"{norm_index_path(path)}/postings").drop("term_bucket")
 
 
 def compact_postings_index(spark, path: str) -> list[str]:
@@ -513,9 +286,9 @@ def compact_postings_index(spark, path: str) -> list[str]:
     unchanged — same rows, fewer files."""
     from quackpipe_spark.plans.compactor import compact_parquet_tree
 
-    return compact_parquet_tree(
-        spark, f"{_norm_index_path(path)}/postings", order_by=["term"]
-    )
+    path = norm_index_path(path)
+    journal.recover(path, writer=True)  # finish a pending append first
+    return compact_parquet_tree(spark, f"{path}/postings", order_by=["term"])
 
 
 def _terms(query: str) -> list[str]:
@@ -709,66 +482,27 @@ def search_postings_index(
     """Search a written index the scale-correct way: corpus stats come
     from the build artifact (no full-index aggregation), and the scan is
     pre-filtered to the query terms' md5 buckets — partition pruning
-    reads ≤ q of n_buckets directories for a q-term query."""
-    import os
-
-    path = _norm_index_path(path)
+    reads ≤ q of n_buckets directories for a q-term query. A committed
+    but unfinished append (in the root) or merge (in a probed bucket) is
+    rolled forward first (plans.journal), so stats and postings agree; a
+    search overlapping a LIVE append may still see its postings before
+    its stats (no snapshot isolation)."""
+    path = norm_index_path(path)
     terms = _terms(query)
-
-    def _pending() -> bool:
-        # .append-commit- counts too: during an idempotent publish the
-        # postings can briefly include a batch the stats row doesn't
-        return _is_local_path(path) and any(
-            f.startswith((".append-pending-", ".append-commit-"))
-            for f in os.listdir(path)
-        )
-
-    # marker check BRACKETS the stats read: a crashed append's marker is
-    # persistent so either check sees it; a LIVE append that completes
-    # entirely on one side of the read is consistent (fresh stats + fresh
-    # postings, or neither); one in flight during the read shows its
-    # marker to at least one check. (Markers give crash DURABILITY, not
-    # snapshot isolation — a reader overlapping a live appender can see a
-    # torn batch in the postings scan regardless; the guarantee is that
-    # stats and postings never remain inconsistent once writes quiesce.)
-    pending = _pending()
+    local = _is_local_path(path)
+    if local:
+        journal.recover(path, writer=False)
     st = _read_stats(spark, path)
-    pending = pending or _pending()
-    n_docs, avgdl = int(st["N"]), float(st["avgdl"])
-    if pending:
-        # a pending marker means the postings may include a batch the
-        # stats row doesn't (crashed append — or one in flight). A
-        # reader must NOT run repair_postings_stats: rewriting the stats
-        # row and deleting the marker races a LIVE appender and could
-        # erase the crash signal its successor relies on. Instead score
-        # THIS query with fresh stats aggregated read-only from the
-        # postings (ground truth) — costs one postings aggregation only
-        # while a marker is present, leaves healing to the writer.
-        post = spark.read.parquet(f"{path}/postings")
-        doc_col = next(
-            c for c in post.columns if c not in ("term", "tf", "dl", "term_bucket")
-        )
-        fresh = (
-            post.groupBy(doc_col)
-            .agg(F.first("dl").alias("dl"))
-            .agg(F.count("*").alias("N"), F.avg("dl").alias("avgdl"))
-            .collect()[0]
-        )
-        n_docs, avgdl = int(fresh["N"]), float(fresh["avgdl"] or 1.0)
     buckets = sorted({hash_mod_py(t, st["n_buckets"]) for t in terms})
-    if _is_local_path(path):
-        # heal a crashed compaction in the buckets this query will read
-        # — one listdir per probed bucket when there is nothing to do
-        # (recovery never touches the stats row, so the read above stays
-        # valid; NB: loop var must not shadow the BM25 ``b`` parameter)
-        from quackpipe_spark.plans.compactor import maybe_recover_parquet_dir
-
-        for _bucket in buckets:
-            maybe_recover_parquet_dir(f"{path}/postings/term_bucket={_bucket}")
+    if local:
+        for bucket in buckets:
+            journal.recover(f"{path}/postings/term_bucket={bucket}", writer=False)
     matched = (
         spark.read.parquet(f"{path}/postings")
         .filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
         .drop("term_bucket")
     )
-    return _bm25_rank(matched, id_col, n_docs, avgdl, topk, k1, b)
+    return _bm25_rank(
+        matched, id_col, int(st["N"]), float(st["avgdl"]), topk, k1, b
+    )

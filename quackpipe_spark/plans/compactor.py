@@ -32,6 +32,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from quackpipe_spark.catalog import Table
+from quackpipe_spark.plans import journal
 from quackpipe_spark.plans.index import FileEntry, PartitionIndex, locked_index
 
 MAX_LEVEL = 4
@@ -296,7 +297,8 @@ class Compactor:
 # big outputs are rarely rewritten).
 #
 # Concurrency contract: unlike the Table path there is no tombstone index,
-# so inputs are unlinked right after the output lands. Run compaction from
+# so inputs are unlinked as the output lands (one journal commit, inputs
+# first: a scan in that window may miss the bin's rows). Run compaction from
 # the index's single writer between probe cycles (the incremental-dedup
 # loop is sequential by construction: probe → append → [compact]); a scan
 # that already listed a deleted input would fail and re-run.
@@ -328,14 +330,10 @@ def plan_dir_merges(path: str) -> list[MergePlan]:
     return plans
 
 
-_COMMIT_PREFIX = ".compact-commit-"
-_HIDDEN_OUT_PREFIX = ".compact-out-"
-_STAGE_PREFIX = ".compact-stage-"
-
-
-# one shared fsync idiom (plans/index.py) — three drifting copies of the
-# open/fsync/close dance previously lived in this package (review r14)
-from quackpipe_spark.plans.index import fsync_dir as _fsync_dir
+# the shared fsync idiom (plans/index.py). _fsync_dir has no caller here
+# (flat-dir publishes go through plans/journal.py) but keeps its name:
+# perfbench/probes.py wraps both names to count fsyncs
+from quackpipe_spark.plans.index import fsync_dir as _fsync_dir  # noqa: F401
 from quackpipe_spark.plans.index import fsync_file as _fsync_file
 
 # staging entries older than this are provably not a live write's
@@ -399,158 +397,10 @@ def _sweep_tmp(tmp_dir: str, max_age_s: float = _TMP_SWEEP_AGE_S) -> int:
 
 
 def _unlink_quiet(p: str) -> None:
-    # recovery can race a concurrent recover (two probes noticing the
-    # same crashed state) — losing an unlink race is success
     try:
         os.unlink(p)
     except FileNotFoundError:
         pass
-
-
-def maybe_recover_parquet_dir(path: str) -> None:
-    """Reader-side healing: run ROLL-FORWARD-ONLY recovery when a commit
-    marker is present — one listdir when clean, so read entry points
-    (probes, searches) can afford to call it every time and a crashed
-    COMMITTED merge heals at the next index access instead of waiting
-    for the next compaction to be file-count-triggered.
-
-    Deliberately does NOT sweep uncommitted artifacts (hidden outputs,
-    staging dirs): a reader cannot distinguish a crash leftover from a
-    LIVE compactor's in-progress state, and rolling back a live writer's
-    hidden output just before it commits would let the writer unlink its
-    inputs and then fail the publish — data loss. Roll-forward is safe
-    to race (every post-commit step is idempotent and quiet on
-    FileNotFoundError, on both sides); uncommitted orphans are invisible
-    to Spark scans (dot-prefixed) and are swept by the single writer's
-    own recover_parquet_dir at the start of its next compaction."""
-    try:
-        names = os.listdir(path)
-    except (FileNotFoundError, NotADirectoryError):
-        return
-    if any(n.startswith(_COMMIT_PREFIX) for n in names):
-        recover_parquet_dir(path, sweep_orphans=False)
-
-
-def recover_parquet_dir(path: str, sweep_orphans: bool = True) -> None:
-    """Crash recovery for journaled flat-dir merges — idempotent, runs at
-    the start of every compact_parquet_dir (and is safe to call any time
-    from the dir's single writer).
-
-    The merge protocol below writes the merged data to a HIDDEN name
-    (dot-prefixed — invisible to Spark scans), then a commit marker
-    (atomic rename; the commit point), then unlinks inputs, then renames
-    the output visible, then drops the marker. Recovery therefore:
-
-    - marker present → the merge COMMITTED: roll FORWARD (unlink any
-      surviving inputs, publish the hidden output if still hidden, drop
-      the marker). A crash mid-unlink can thus never leave inputs AND
-      output both live (the duplicate-rows hazard).
-    - hidden output with no marker → the merge never committed: roll
-      BACK (unlink the orphan; inputs are untouched and complete).
-
-    ``sweep_orphans=False`` (reader-side, via maybe_recover_parquet_dir)
-    restricts recovery to the roll-forward half: uncommitted hidden
-    outputs and ``.compact-stage-*`` staging dirs are left alone because
-    they may belong to a LIVE writer, not a crash. Only the dir's single
-    writer runs the full sweep (``True``, the compact_parquet_dir
-    entry), where by construction no other writer is mid-merge.
-    """
-    import json
-    import warnings
-
-    unreadable = False
-    for name in list(os.listdir(path)):
-        if not name.startswith(_COMMIT_PREFIX):
-            continue
-        marker = os.path.join(path, name)
-        try:
-            with open(marker) as f:
-                j = json.load(f)
-        except FileNotFoundError:
-            continue  # concurrent recover finished this one
-        except (OSError, ValueError):
-            unreadable = True
-            warnings.warn(
-                f"unreadable compaction commit marker {marker!r}: leaving it "
-                "and all hidden outputs in place for inspection — if the "
-                "marker's merge had begun unlinking inputs, rows may be "
-                "missing until resolved manually",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        hidden = os.path.join(path, j["hidden"])
-        final = os.path.join(path, j["final"])
-        if os.path.exists(hidden) or os.path.exists(final):
-            for inp in j["inputs"]:
-                _unlink_quiet(os.path.join(path, inp))
-            if os.path.exists(hidden) and not os.path.exists(final):
-                try:
-                    os.replace(hidden, final)
-                except FileNotFoundError:
-                    pass  # concurrent recover published it
-        # defensive: marker without any output (should be impossible —
-        # the marker is written after the data) → keep inputs, just
-        # drop the marker
-        _unlink_quiet(marker)
-    if unreadable or not sweep_orphans:
-        # unreadable marker: it may reference a hidden output we can't
-        # identify — do NOT sweep orphans (warned above). Reader-side
-        # (sweep_orphans=False): orphans may be a live writer's state.
-        return
-    import shutil
-
-    for name in list(os.listdir(path)):
-        p = os.path.join(path, name)
-        if name.startswith(_HIDDEN_OUT_PREFIX):
-            _unlink_quiet(p)  # uncommitted orphan
-        elif name.startswith(_STAGE_PREFIX) and os.path.isdir(p):
-            # a crash during the Spark stage write leaves the staging dir
-            # behind; it is by construction uncommitted (the hidden
-            # rename out of it never happened, or happened and the data
-            # lives on as a hidden/final file) — remove it so its
-            # part files can never be walked into a later compaction
-            shutil.rmtree(p, ignore_errors=True)
-    _fsync_dir(path)
-
-
-def _journaled_publish(path: str, hidden_name: str, final_name: str, inputs: list[str]) -> str:
-    """Commit-marker protocol steps 2-5 (data already at hidden_name).
-
-    Every post-commit step tolerates losing a race against a READER'S
-    roll-forward (maybe_recover_parquet_dir sees the marker the instant
-    it lands and may unlink inputs / publish the hidden output / drop
-    the marker first): after the commit point each step is idempotent
-    with recovery, so "already done by someone else" is success, not an
-    exception that would kill the (possibly streaming-foreachBatch-
-    inline) maintenance op."""
-    import json
-
-    _fsync_file(os.path.join(path, hidden_name))  # data durable BEFORE commit
-    marker = os.path.join(path, f"{_COMMIT_PREFIX}{uuid.uuid4().hex}.json")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"hidden": hidden_name, "final": final_name, "inputs": inputs}, f)
-        f.flush()
-        try:
-            os.fsync(f.fileno())
-        except OSError:
-            pass
-    os.replace(tmp, marker)  # COMMIT POINT
-    _fsync_dir(path)
-    for inp in inputs:
-        _unlink_quiet(os.path.join(path, inp))
-    dst = os.path.join(path, final_name)
-    try:
-        os.replace(os.path.join(path, hidden_name), dst)
-    except FileNotFoundError:
-        # a racing roll-forward already published it; if the final is
-        # missing too, the data is genuinely gone — surface that
-        if not os.path.exists(dst):
-            raise
-    _unlink_quiet(marker)
-    _fsync_dir(path)
-    return dst
 
 
 # driver-local Arrow merge gate: a bin at or under this size merges in
@@ -564,7 +414,7 @@ def _journaled_publish(path: str, hidden_name: str, final_name: str, inputs: lis
 _ARROW_MERGE_MAX_BYTES = 256 << 20
 
 
-def _merge_bin_arrow(paths: list[str], hidden: str, order_by) -> None:
+def _merge_bin_arrow(paths: list[str], out: str, order_by) -> None:
     """Driver-local sorted merge of one small bin: read → union-by-name
     (permissive promotion ≈ Spark mergeSchema) → sort → ONE parquet.
     Same output contract as the Spark path; 1M-row groups keep min/max
@@ -601,7 +451,7 @@ def _merge_bin_arrow(paths: list[str], hidden: str, order_by) -> None:
         tbl = tbl.sort_by(
             [(c, "ascending") for c in order_by], null_placement="at_start"
         )
-    pq.write_table(tbl, hidden, compression="snappy", row_group_size=1 << 20)
+    pq.write_table(tbl, out, compression="snappy", row_group_size=1 << 20)
 
 
 def compact_parquet_dir(
@@ -620,86 +470,61 @@ def compact_parquet_dir(
     tiny-file append shape; any Arrow-side failure falls back to the
     Spark rewrite so exotic schema merges can't brick maintenance.
 
-    Crash-safe via a per-merge commit journal (see recover_parquet_dir):
-    a kill at ANY point leaves the dir either fully pre-merge (inputs
-    intact, orphans cleaned next run) or rolls forward to fully merged
-    on the next compaction — never inputs+output both live (which would
-    silently duplicate every bin row in probes/BM25). The transient
-    window between input-unlink and output-publish is invisible to
-    Spark (the output is dot-hidden) but means a CONCURRENT reader could
-    see missing rows — compaction remains a single-writer maintenance
-    op, run between probe cycles."""
-    recover_parquet_dir(path)
+    Each bin publishes as one plans.journal commit (output moved in,
+    inputs deleted), so a crash anywhere leaves the dir pre-merge or
+    rolls forward to merged — never inputs and output both live. This is
+    the dir's single writer: it runs the writer-side recovery first."""
+    journal.recover(path, writer=True)
     out: list[str] = []
     for plan in plan_dir_merges(path):
         paths = [os.path.join(path, f) for f in plan.files]
         paths = [p for p in paths if os.path.exists(p)]
-        final_name = f"{uuid.uuid4().hex}.{plan.out_level}.parquet"
-        hidden_name = f"{_HIDDEN_OUT_PREFIX}{final_name}"
-        hidden = os.path.join(path, hidden_name)
+        if len(paths) < (1 if plan.promote else 2):
+            continue
+        final = f"{uuid.uuid4().hex}.{plan.out_level}.parquet"
+        c = journal.begin(path)
+        staged = c.staged(final)
         if plan.promote:
-            if not paths:
-                continue
             try:
-                os.link(paths[0], hidden)
+                os.link(paths[0], staged)
             except OSError:
                 import shutil
 
-                shutil.copy2(paths[0], hidden)
-            out.append(
-                _journaled_publish(path, hidden_name, final_name, plan.files)
-            )
-            continue
-        if len(paths) < 2:
-            continue
-        merged = False
-        if sum(os.path.getsize(p) for p in paths) <= _ARROW_MERGE_MAX_BYTES:
-            try:
-                _merge_bin_arrow(paths, hidden, order_by)
-                merged = True
-            except Exception:
-                _unlink_quiet(hidden)  # partial output must not publish
-        if not merged:
-            df = spark.read.option("mergeSchema", "true").parquet(*paths)
-            if order_by:
-                df = df.sort(*order_by)
-            # stage INSIDE the target dir (dot-hidden: invisible to Spark
-            # scans) so a crash leftover is owned by this dir's recovery —
-            # the writer-side sweep removes it; a stage dir parked in the
-            # PARENT would be swept by nobody and walked into forever
-            stage = os.path.join(path, f"{_STAGE_PREFIX}{uuid.uuid4().hex}")
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            os.replace(os.path.join(stage, part), hidden)
-            import shutil
-
-            shutil.rmtree(stage, ignore_errors=True)
-        out.append(_journaled_publish(path, hidden_name, final_name, plan.files))
+                shutil.copy2(paths[0], staged)  # filesystems without hardlinks
+        else:
+            merged = False
+            if sum(os.path.getsize(p) for p in paths) <= _ARROW_MERGE_MAX_BYTES:
+                try:
+                    _merge_bin_arrow(paths, staged, order_by)
+                    merged = True
+                except Exception:
+                    pass  # a partial output stays in the stage, never moved
+            if not merged:
+                df = spark.read.option("mergeSchema", "true").parquet(*paths)
+                if order_by:
+                    df = df.sort(*order_by)
+                df.coalesce(1).write.parquet(c.staged("spark"))
+                part = next(
+                    f for f in os.listdir(c.staged("spark")) if f.endswith(".parquet")
+                )
+                staged = c.staged("spark", part)
+        c.move(staged, final)
+        c.deletes.extend(plan.files)
+        journal.commit(c)
+        out.append(os.path.join(path, final))
     return out
 
 
 def compact_parquet_tree(
     spark, root: str, order_by: list[str] | None = None
 ) -> list[str]:
-    """compact_parquet_dir over every leaf directory holding parquet files
-    under ``root`` — the hive-partitioned layout (e.g. postings
-    partitioned by term_bucket, IVF postings by cell). Partition columns
-    live in the directory names, so per-leaf rewrites preserve them."""
+    """compact_parquet_dir over every directory under ``root`` — the
+    hive-partitioned layout (e.g. postings partitioned by term_bucket,
+    IVF postings by cell). Partition columns live in the directory names,
+    so per-leaf rewrites preserve them. Dot-dirs (journal stages) are
+    never entered: their files were never published."""
     out: list[str] = []
-    for dirpath, dirnames, filenames in os.walk(root):
-        # never descend into dot-dirs: a `.compact-stage-*` staging dir
-        # holds part files from an in-flight (or crashed) merge —
-        # compacting those would resurrect never-published data
-        has_stage = any(d.startswith(_STAGE_PREFIX) for d in dirnames)
+    for dirpath, dirnames, _files in os.walk(root):
         dirnames[:] = [d for d in dirnames if not d.startswith(".")]
-        # visit dirs with visible parquet OR crash artifacts: a dir whose
-        # committed merge crashed after the last input unlink holds only
-        # hidden outputs + a marker (or just an orphan staging dir), and
-        # skipping it would orphan the roll-forward / sweep forever
-        if has_stage or any(
-            (_PART_FILE_RE.search(f) and not f.startswith((".", "_")))
-            or f.startswith(".compact-")
-            for f in filenames
-        ):
-            out.extend(compact_parquet_dir(spark, dirpath, order_by))
+        out.extend(compact_parquet_dir(spark, dirpath, order_by))
     return out

@@ -41,7 +41,7 @@ def _dir_lock(partition_dir: str) -> threading.Lock:
 def fsync_dir(path: str) -> None:
     """Best-effort directory fsync: a rename (or a new directory entry)
     is durable only once its PARENT directory's entry is — shared by the
-    index save and the FTS idempotent-append protocol so the subtle
+    index save and the publish journal (plans/journal.py) so the subtle
     idiom can't drift between copies."""
     try:
         fd = os.open(path, os.O_RDONLY)
@@ -59,8 +59,8 @@ def fsync_file(path: str) -> None:
     can be durable before the file's DATA blocks under delayed
     allocation, so a power loss leaves a durable index entry pointing at
     a truncated parquet. Same one-shared-copy rationale as fsync_dir
-    (the compactor's flat-dir journal and both Table publish paths all
-    need the identical idiom — review r14)."""
+    (the publish journal and both Table publish paths all need the
+    identical idiom — review r14)."""
     try:
         fd = os.open(path, os.O_RDONLY)
         try:
@@ -99,36 +99,6 @@ def norm_index_path(path: str) -> str:
     if path.startswith("file:"):
         return path[5:]
     return path
-
-
-def read_applied_last(path: str) -> str | None:
-    """The write_id of the most recently applied idempotent append to the
-    index rooted at ``path``, or None. One file, not one marker per
-    batch: Structured Streaming replays only the LAST uncommitted batch,
-    so remembering one id is exactly enough to detect it (and the file
-    count stays O(1)). Shared by the FTS postings and minhash-index
-    append protocols (r15 — the journal port must not fork the idiom)."""
-    p = os.path.join(path, ".applied-last")
-    try:
-        with open(p) as f:
-            return json.load(f)["write_id"]
-    except (OSError, ValueError, KeyError):
-        return None
-
-
-def write_applied_last(path: str, write_id: str) -> None:
-    """Durably record ``write_id`` as applied (tmp+fsync+rename, then a
-    dir fsync so the rename's dentry survives power loss with it)."""
-    import uuid as _uuid
-
-    p = os.path.join(path, ".applied-last")
-    tmp = p + "." + _uuid.uuid4().hex
-    with open(tmp, "w") as f:
-        json.dump({"write_id": write_id}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, p)
-    fsync_dir(path)
 
 
 @contextmanager

@@ -86,7 +86,7 @@ def _id_codec(docs: DataFrame, id_col: str):
         id_expr = F.coalesce(F.col(id_col).cast("long"), F.lit(_NULL_ID))
 
         def batch_min_of(pdf):
-            m = min(pdf["_id"].tolist())
+            m = min(pdf["_id"].tolist(), default=_NULL_ID)
             return None if m == _NULL_ID else m
 
         def batch_ids_of(pdf):
@@ -467,8 +467,8 @@ def postings_append_writer(
     writer by contract: one stream per index.
 
     Replay idempotence (r12): each micro-batch appends under
-    ``write_id=f"b{batch_id}"``, so append_postings' stage→commit→publish
-    protocol makes a replayed batch a NO-OP — a crash between the
+    ``write_id=f"b{batch_id}"``, which commits with the batch
+    (plans.journal), so a replayed batch is a NO-OP — a crash between the
     parquet append and the checkpoint commit previously re-appended the
     identical batch on restart, permanently double-counting tf/df/N/avgdl
     (dropDuplicates upstream could not prevent it: its state also rolls

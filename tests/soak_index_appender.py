@@ -5,7 +5,7 @@ the minhash dedup index (operators/dedup.py append_to_minhash_index) and
 the FTS postings index (operators/fts.py append_postings) — each with a
 per-batch write_id, recording progress to a status JSONL. The parent
 test SIGKILLs this process at random points; each restarted incarnation
-recovers from DISK ALONE (both appends' journal protocols run at entry)
+recovers from DISK ALONE (journal recovery runs at both append entries)
 and resumes from the last recorded batch, re-running it with the SAME
 write_id so exactly-once semantics decide whether it applied.
 

@@ -10,8 +10,8 @@ sufficient:
 - hive store: Catalog disk discovery + PartitionIndex atomic-save/.bak
   semantics (a kill anywhere must leave the indexed store an exact
   flushed-batch prefix);
-- flat dir: recover_parquet_dir (commit-journal roll-forward/rollback,
-  plans/compactor.py) + unlinking its own uncommitted ``.part-tmp-*``
+- flat dir: journal.recover (publish-journal roll-forward/sweep,
+  plans/journal.py) + unlinking its own uncommitted ``.part-tmp-*``
   appends.
 
 Determinism contract shared with the parent: hive rows are v=float(i)
@@ -71,11 +71,8 @@ def main() -> int:
 
     from quackpipe_spark.catalog import Catalog
     from quackpipe_spark.ingest import IngestService, ingest_lines
-    from quackpipe_spark.plans.compactor import (
-        Compactor,
-        compact_parquet_dir,
-        recover_parquet_dir,
-    )
+    from quackpipe_spark.plans import journal
+    from quackpipe_spark.plans.compactor import Compactor, compact_parquet_dir
     from quackpipe_spark.query import QueryEngine
     from quackpipe_spark.session import get_spark
 
@@ -101,7 +98,7 @@ def main() -> int:
                 os.unlink(os.path.join(flatdir, name))
             except FileNotFoundError:
                 pass
-    recover_parquet_dir(flatdir)  # journal roll-forward / orphan rollback
+    journal.recover(flatdir, writer=True)  # roll forward / sweep stages
 
     qe = QueryEngine(spark, catalog)
     n = 0

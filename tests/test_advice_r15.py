@@ -146,7 +146,7 @@ def test_minhash_index_append_accepts_file_scheme(spark, tmp_path):
         (200, 100),
     }
     # no journal debris
-    assert not [f for f in os.listdir(plain) if f.startswith(".append-")]
+    assert not [f for f in os.listdir(plain) if f.startswith(".journal-")]
 
 
 # --- 3. _sweep_tmp deep-tree mtime -------------------------------------------

@@ -876,15 +876,15 @@ def test_columnar_bulk_fallback_for_uncoercible_batch(spark, tmp_path, monkeypat
 def test_norm_index_path_rejects_remote_host():
     import pytest as _pytest
 
-    from quackpipe_spark.operators.fts import _norm_index_path
+    from quackpipe_spark.plans.index import norm_index_path
 
-    assert _norm_index_path("file:///a/b") == "/a/b"
-    assert _norm_index_path("file:/a/b") == "/a/b"
-    assert _norm_index_path("file://localhost/a/b") == "/a/b"
-    assert _norm_index_path("/a/b") == "/a/b"
-    assert _norm_index_path("s3a://bkt/x") == "s3a://bkt/x"
+    assert norm_index_path("file:///a/b") == "/a/b"
+    assert norm_index_path("file:/a/b") == "/a/b"
+    assert norm_index_path("file://localhost/a/b") == "/a/b"
+    assert norm_index_path("/a/b") == "/a/b"
+    assert norm_index_path("s3a://bkt/x") == "s3a://bkt/x"
     with _pytest.raises(ValueError, match="host"):
-        _norm_index_path("file://nas01/a/b")
+        norm_index_path("file://nas01/a/b")
 
 
 def test_asof_join_nearest_semantics(spark):

@@ -13,6 +13,7 @@ from quackpipe_spark.operators import dedup as D
 from quackpipe_spark.operators import fts as FTS
 from quackpipe_spark.plans.compactor import (
     compact_parquet_dir,
+    compact_parquet_tree,
     plan_dir_merges,
 )
 
@@ -235,6 +236,39 @@ def test_append_postings_matches_full_rebuild(spark, tmp_path):
     assert abs(si["avgdl"] - sf["avgdl"]) < 1e-12
 
 
+def test_remote_append_postings_updates_stats_incrementally(
+    spark, tmp_path, monkeypatch
+):
+    """The object-store append path (no journal), run on a local dir:
+    the stats update from the batch alone, never by re-aggregating the
+    whole postings."""
+    monkeypatch.setattr(FTS, "_is_local_path", lambda path: False)
+    path = str(tmp_path / "inc")
+    FTS.write_postings(
+        FTS.build_postings(
+            spark.createDataFrame(
+                [(1, "spark shuffles data"), (2, "duckdb scans parquet fast")],
+                "doc_id long, text string",
+            )
+        ),
+        path,
+        n_buckets=4,
+    )
+
+    def no_full_scan(*a, **k):
+        raise AssertionError("append re-aggregated the whole postings")
+
+    monkeypatch.setattr(FTS, "_publish_stats", no_full_scan)
+    batch = spark.createDataFrame(
+        [(3, "parquet scan speed in spark"), (4, "executors shuffle data")],
+        "doc_id long, text string",
+    )
+    FTS.append_postings(batch, path, compact_over_files=None)
+    st = FTS._read_stats(spark, path)
+    assert (st["N"], st["avgdl"]) == (4, (3 + 4 + 5 + 3) / 4)
+    assert FTS.load_postings(spark, path).count() == 15
+
+
 def test_append_postings_auto_compacts(spark, tmp_path):
     path = str(tmp_path / "fts_auto")
     base = spark.createDataFrame(
@@ -363,263 +397,125 @@ def test_streaming_postings_append_matches_batch(spark, tmp_path):
         assert got == exp, query
 
 
-def test_recovery_rolls_forward_committed_merge(spark, tmp_path):
-    """Crash AFTER the commit marker but before input-unlink/publish:
-    recovery must unlink inputs and publish the hidden output — never
+def _pq_inputs(d, n_files=2):
+    """``n_files`` visible 2-row parquet inputs in a fresh dir ``d``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir(parents=True)
+    for i in range(n_files):
+        pq.write_table(
+            pa.table({"id": [2 * i, 2 * i + 1], "v": ["a", "b"]}),
+            str(d / f"part-0000{i}-x.parquet"),
+        )
+    return str(d)
+
+
+def _no_journal_files(d):
+    return not [f for f in os.listdir(d) if f.startswith(".journal-")]
+
+
+def test_recovery_rolls_forward_committed_merge(spark, tmp_path, monkeypatch):
+    """Crash AFTER the commit point but before input-unlink/publish:
+    recovery must unlink inputs and publish the merged output — never
     leave inputs and output both live (duplicate rows)."""
-    import json as _json
+    from quackpipe_spark.plans import journal
 
-    from quackpipe_spark.plans.compactor import (
-        _COMMIT_PREFIX,
-        _HIDDEN_OUT_PREFIX,
-        recover_parquet_dir,
-    )
-
-    d = tmp_path / "dir"
-    d.mkdir()
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    # two "input" files + the merged hidden output
-    df.coalesce(1).write.parquet(str(tmp_path / "stage1"))
-    import shutil
-
-    p1 = next(f for f in os.listdir(tmp_path / "stage1") if f.endswith(".parquet"))
-    shutil.copy(tmp_path / "stage1" / p1, d / "part-00000-a.parquet")
-    shutil.copy(tmp_path / "stage1" / p1, d / "part-00001-b.parquet")
-    merged = spark.read.parquet(str(d))
-    merged.coalesce(1).write.parquet(str(tmp_path / "stage2"))
-    p2 = next(f for f in os.listdir(tmp_path / "stage2") if f.endswith(".parquet"))
-    final = "deadbeef.2.parquet"
-    hidden = f"{_HIDDEN_OUT_PREFIX}{final}"
-    shutil.copy(tmp_path / "stage2" / p2, d / hidden)
-    (d / f"{_COMMIT_PREFIX}x.json").write_text(
-        _json.dumps(
-            {
-                "hidden": hidden,
-                "final": final,
-                "inputs": ["part-00000-a.parquet", "part-00001-b.parquet"],
-            }
-        )
-    )
-    recover_parquet_dir(str(d))
-    files = sorted(os.listdir(d))
-    assert files == [final]
-    assert spark.read.parquet(str(d)).count() == 4  # merged content, once
+    d = _pq_inputs(tmp_path / "dir")
+    monkeypatch.setattr(journal, "_roll_forward", lambda root, name: None)
+    (final,) = compact_parquet_dir(spark, d)
+    monkeypatch.undo()
+    assert len(_parquet_files(d)) == 2  # committed, not yet published
+    journal.recover(d, writer=True)
+    assert _parquet_files(d) == [os.path.basename(final)]
+    assert _no_journal_files(d)
+    assert spark.read.parquet(d).count() == 4  # merged content, once
 
 
-def test_recovery_rolls_back_uncommitted_output(spark, tmp_path):
-    """Crash BEFORE the commit marker: the hidden output is an orphan —
-    recovery unlinks it and inputs stay authoritative."""
-    from quackpipe_spark.plans.compactor import (
-        _HIDDEN_OUT_PREFIX,
-        recover_parquet_dir,
-    )
+def test_recovery_rolls_back_uncommitted_output(tmp_path):
+    """Crash BEFORE the commit point: the staged output is an orphan —
+    the writer's recovery removes the stage and tmp marker, and inputs
+    stay authoritative."""
+    from quackpipe_spark.plans import journal
 
-    d = tmp_path / "dir"
-    d.mkdir()
-    (d / "part-00000-a.parquet").write_bytes(b"x" * 100)
-    (d / f"{_HIDDEN_OUT_PREFIX}feed.2.parquet").write_bytes(b"y" * 100)
-    recover_parquet_dir(str(d))
-    assert sorted(os.listdir(d)) == ["part-00000-a.parquet"]
-
-
-def test_recovery_is_idempotent_and_runs_on_compact(spark, tmp_path):
-    from quackpipe_spark.plans.compactor import recover_parquet_dir
-
-    d = tmp_path / "dir"
-    d.mkdir()
-    (d / "part-00000-a.parquet").write_bytes(b"x" * 10)
-    recover_parquet_dir(str(d))
-    recover_parquet_dir(str(d))
-    assert os.listdir(d) == ["part-00000-a.parquet"]
+    d = _pq_inputs(tmp_path / "dir", n_files=1)
+    c = journal.begin(d)
+    with open(c.staged("feed.2.parquet"), "wb") as f:
+        f.write(b"y" * 100)
+    open(os.path.join(d, f"{journal.TMP}{c.id}"), "w").close()
+    journal.recover(d, writer=True)
+    assert sorted(os.listdir(d)) == ["part-00000-x.parquet"]
 
 
-def test_append_postings_crash_recovery_rebuilds_stats(spark, tmp_path):
-    """Simulated crash between the postings append and the stats update
-    (pending marker left behind): the next append must rebuild stats
-    from the postings before trusting the incremental path, landing on
-    exactly the full-rebuild stats."""
-    base = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta epsilon")],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "fts_crash")
-    FTS.write_postings(FTS.build_postings(base), path, n_buckets=2)
-    # crash simulation: postings for doc 3 appended, stats NOT updated,
-    # marker left
-    from quackpipe_spark.operators.sampling import hash_mod
+def test_recovery_is_idempotent_and_runs_on_compact(tmp_path):
+    from quackpipe_spark.plans import journal
 
-    orphan = FTS.build_postings(
-        spark.createDataFrame([(3, "zeta eta")], "doc_id long, text string")
-    ).withColumn("term_bucket", hash_mod(F.col("term"), 2))
-    orphan.write.partitionBy("term_bucket").mode("append").parquet(
-        f"{path}/postings"
-    )
-    (tmp_path / "fts_crash" / ".append-pending-dead").touch()
-    stale = spark.read.parquet(f"{path}/stats").collect()[0]
-    assert stale["N"] == 2  # stats don't know doc 3 yet
-    # next append triggers repair first, then applies its own increment
-    FTS.append_postings(
-        spark.createDataFrame([(4, "theta iota kappa")], "doc_id long, text string"),
-        path,
-    )
-    st = spark.read.parquet(f"{path}/stats").collect()[0]
-    assert st["N"] == 4
-    full = FTS.build_postings(
-        spark.createDataFrame(
-            [(1, "alpha beta"), (2, "gamma delta epsilon"),
-             (3, "zeta eta"), (4, "theta iota kappa")],
-            "doc_id long, text string",
-        )
-    )
-    exp_avgdl = (2 + 3 + 2 + 3) / 4
-    assert abs(st["avgdl"] - exp_avgdl) < 1e-12
-    assert not any(
-        f.startswith(".append-pending-") for f in os.listdir(path)
-    )
+    d = _pq_inputs(tmp_path / "dir", n_files=1)
+    journal.recover(d, writer=True)
+    journal.recover(d, writer=True)
+    assert os.listdir(d) == ["part-00000-x.parquet"]
 
 
-def test_tree_recovers_dir_left_with_only_hidden_output(spark, tmp_path):
+def test_tree_recovers_dir_left_with_only_hidden_output(spark, tmp_path, monkeypatch):
     """A bucket dir whose committed merge crashed after ALL inputs were
-    unlinked (contents: hidden output + marker only) must still be
-    visited and rolled forward by compact_parquet_tree — the visible-
-    parquet gate alone would skip it forever."""
-    import json as _json
-
-    from quackpipe_spark.plans.compactor import (
-        _COMMIT_PREFIX,
-        _HIDDEN_OUT_PREFIX,
-        compact_parquet_tree,
-    )
+    unlinked holds only its hidden output (the merged bin, still in the
+    dot-hidden journal stage) and the marker. compact_parquet_tree must
+    still visit it and roll it forward — a visible-parquet gate would
+    skip it forever."""
+    from quackpipe_spark.plans import journal
 
     root = tmp_path / "tree"
-    leaf = root / "term_bucket=0"
-    leaf.mkdir(parents=True)
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    df.coalesce(1).write.parquet(str(tmp_path / "stage"))
-    part = next(f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet"))
-    final = "cafe.2.parquet"
-    hidden = f"{_HIDDEN_OUT_PREFIX}{final}"
-    import shutil
-
-    shutil.copy(tmp_path / "stage" / part, leaf / hidden)
-    (leaf / f"{_COMMIT_PREFIX}y.json").write_text(
-        _json.dumps({"hidden": hidden, "final": final, "inputs": ["gone.parquet"]})
-    )
+    leaf = _pq_inputs(root / "term_bucket=0")
+    monkeypatch.setattr(journal, "_roll_forward", lambda r, name: None)
+    (final,) = compact_parquet_dir(spark, leaf)
+    monkeypatch.undo()
+    for f in _parquet_files(leaf):  # the roll-forward's deletes ran
+        os.unlink(os.path.join(leaf, f))
     compact_parquet_tree(spark, str(root))
-    assert sorted(os.listdir(leaf)) == [final]
-    assert spark.read.parquet(str(leaf)).count() == 1
+    assert sorted(os.listdir(leaf)) == [os.path.basename(final)]
+    assert spark.read.parquet(leaf).count() == 4
 
 
-def test_reader_recovery_never_sweeps_uncommitted_artifacts(spark, tmp_path):
-    """maybe_recover_parquet_dir is called from READERS (probes,
-    searches) and so must not roll back artifacts that may belong to a
-    LIVE writer: an uncommitted hidden output or staging dir stays put
-    (they are invisible to Spark scans anyway); only the single writer's
-    full recover_parquet_dir sweeps them."""
-    from quackpipe_spark.plans.compactor import (
-        _HIDDEN_OUT_PREFIX,
-        _STAGE_PREFIX,
-        maybe_recover_parquet_dir,
-        recover_parquet_dir,
-    )
+def test_reader_recovery_never_sweeps_uncommitted_artifacts(tmp_path):
+    """Readers (probes, searches) run recover(writer=False) and so must
+    not remove artifacts that may belong to a LIVE writer: an
+    uncommitted stage or tmp marker stays put (they are invisible to
+    Spark scans anyway); only the single writer's recovery sweeps them."""
+    from quackpipe_spark.plans import journal
 
-    d = tmp_path / "dir"
-    d.mkdir()
-    (d / "part-00000-a.parquet").write_bytes(b"x" * 10)
-    (d / f"{_HIDDEN_OUT_PREFIX}live.2.parquet").write_bytes(b"y" * 10)
-    stage = d / f"{_STAGE_PREFIX}abc123"
-    stage.mkdir()
-    (stage / "part-00000-s.parquet").write_bytes(b"z" * 10)
-    maybe_recover_parquet_dir(str(d))  # reader side: no-op on orphans
-    assert (d / f"{_HIDDEN_OUT_PREFIX}live.2.parquet").exists()
-    assert stage.exists()
-    recover_parquet_dir(str(d))  # writer side: full sweep
-    assert sorted(os.listdir(d)) == ["part-00000-a.parquet"]
+    d = _pq_inputs(tmp_path / "dir", n_files=1)
+    c = journal.begin(d)
+    with open(c.staged("live.2.parquet"), "wb") as f:
+        f.write(b"y" * 10)
+    tmp_marker = os.path.join(d, f"{journal.TMP}{c.id}")
+    open(tmp_marker, "w").close()
+    journal.recover(d, writer=False)
+    assert os.path.exists(c.staged("live.2.parquet"))
+    assert os.path.exists(tmp_marker)
+    journal.recover(d, writer=True)
+    assert sorted(os.listdir(d)) == ["part-00000-x.parquet"]
 
 
-def test_reader_recovery_still_rolls_forward_committed_merge(spark, tmp_path):
+def test_reader_recovery_still_rolls_forward_committed_merge(spark, tmp_path, monkeypatch):
     """The reader-side restriction must NOT lose the roll-forward half:
-    a committed merge (marker present) heals at the next read access."""
-    import json as _json
-    import shutil
+    a committed merge heals at the next read access."""
+    from quackpipe_spark.plans import journal
 
-    from quackpipe_spark.plans.compactor import (
-        _COMMIT_PREFIX,
-        _HIDDEN_OUT_PREFIX,
-        maybe_recover_parquet_dir,
-    )
-
-    d = tmp_path / "dir"
-    d.mkdir()
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    df.coalesce(1).write.parquet(str(tmp_path / "stage"))
-    part = next(f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet"))
-    shutil.copy(tmp_path / "stage" / part, d / "part-00000-a.parquet")
-    final = "beef.2.parquet"
-    hidden = f"{_HIDDEN_OUT_PREFIX}{final}"
-    shutil.copy(tmp_path / "stage" / part, d / hidden)
-    (d / f"{_COMMIT_PREFIX}z.json").write_text(
-        _json.dumps(
-            {"hidden": hidden, "final": final, "inputs": ["part-00000-a.parquet"]}
-        )
-    )
-    maybe_recover_parquet_dir(str(d))
-    assert sorted(os.listdir(d)) == [final]
-    assert spark.read.parquet(str(d)).count() == 2
-
-
-def test_journaled_publish_survives_concurrent_reader_rollforward(spark, tmp_path, monkeypatch):
-    """Deterministic worst-case interleave of the ADVICE race: a reader's
-    maybe_recover fires the instant the commit marker lands (unlinking
-    inputs, publishing the hidden output, dropping the marker) while the
-    writer is still inside _journaled_publish. The writer's post-commit
-    steps must treat 'already done' as success — the publish returns,
-    the final file exists once, and no artifacts remain."""
-    import shutil
-
-    from quackpipe_spark.plans import compactor as C
-
-    d = tmp_path / "dir"
-    d.mkdir()
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    df.coalesce(1).write.parquet(str(tmp_path / "stage"))
-    part = next(f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet"))
-    shutil.copy(tmp_path / "stage" / part, d / "part-00000-a.parquet")
-    shutil.copy(tmp_path / "stage" / part, d / "part-00001-b.parquet")
-    final = "f00d.2.parquet"
-    hidden = f"{C._HIDDEN_OUT_PREFIX}{final}"
-    shutil.copy(tmp_path / "stage" / part, d / hidden)
-
-    real_fsync_dir = C._fsync_dir
-    fired = {"n": 0}
-
-    def racing_fsync_dir(p):
-        # the first _fsync_dir call inside _journaled_publish happens
-        # right after the commit point — the reader wins the race there
-        fired["n"] += 1
-        if fired["n"] == 1:
-            C.maybe_recover_parquet_dir(str(d))
-        real_fsync_dir(p)
-
-    monkeypatch.setattr(C, "_fsync_dir", racing_fsync_dir)
-    dst = C._journaled_publish(
-        str(d), hidden, final, ["part-00000-a.parquet", "part-00001-b.parquet"]
-    )
-    assert fired["n"] >= 1
-    assert os.path.basename(dst) == final
-    assert sorted(os.listdir(d)) == [final]
-    assert spark.read.parquet(str(d)).count() == 2
+    d = _pq_inputs(tmp_path / "dir")
+    monkeypatch.setattr(journal, "_roll_forward", lambda root, name: None)
+    (final,) = compact_parquet_dir(spark, d)
+    monkeypatch.undo()
+    journal.recover(d, writer=False)
+    assert sorted(os.listdir(d)) == [os.path.basename(final)]
+    assert spark.read.parquet(d).count() == 4
 
 
 def test_orphan_stage_dir_swept_not_compacted(spark, tmp_path):
-    """A crash during the Spark stage write leaves `.compact-stage-*`
+    """A crash during the Spark stage write leaves a journal stage
     behind; the next compaction must remove it and must NEVER walk into
     it — its part files are never-published data that would otherwise be
     resurrected into a merged output."""
-    from quackpipe_spark.plans.compactor import (
-        _STAGE_PREFIX,
-        compact_parquet_tree,
-    )
+    from quackpipe_spark.plans import journal
 
     root = tmp_path / "tree"
     leaf = root / "term_bucket=0"
@@ -629,7 +525,7 @@ def test_orphan_stage_dir_swept_not_compacted(spark, tmp_path):
     good.coalesce(1).write.mode("append").parquet(str(leaf))
     good.coalesce(1).write.mode("append").parquet(str(leaf))
     n_good = spark.read.parquet(str(leaf)).count()
-    stage = leaf / f"{_STAGE_PREFIX}deadbeef"
+    stage = leaf / f"{journal.STAGE}deadbeef"
     bogus = spark.createDataFrame([(99, "bogus")], "id long, v string")
     bogus.coalesce(1).write.parquet(str(stage))
     compact_parquet_tree(spark, str(root), order_by=["id"])
@@ -637,50 +533,6 @@ def test_orphan_stage_dir_swept_not_compacted(spark, tmp_path):
     out = spark.read.parquet(str(leaf))
     assert out.count() == n_good
     assert out.filter(F.col("v") == "bogus").count() == 0
-
-
-def test_search_uses_fresh_stats_under_pending_marker(spark, tmp_path):
-    """A crashed append leaves postings for a doc the stats row doesn't
-    count. A search arriving BEFORE the writer's next repair must not
-    score BM25 with the stale N/avgdl: it aggregates fresh stats from
-    the postings read-only — matching a clean same-corpus index — and
-    leaves the marker in place for the writer to heal."""
-    from quackpipe_spark.operators.sampling import hash_mod
-
-    base = [(1, "alpha beta"), (2, "gamma delta epsilon")]
-    extra = [(3, "alpha zeta eta")]
-    path = str(tmp_path / "fts_pend")
-    FTS.write_postings(
-        FTS.build_postings(spark.createDataFrame(base, "doc_id long, text string")),
-        path,
-        n_buckets=2,
-    )
-    orphan = FTS.build_postings(
-        spark.createDataFrame(extra, "doc_id long, text string")
-    ).withColumn("term_bucket", hash_mod(F.col("term"), 2))
-    orphan.write.partitionBy("term_bucket").mode("append").parquet(f"{path}/postings")
-    (tmp_path / "fts_pend" / ".append-pending-dead").touch()
-    clean = str(tmp_path / "fts_clean")
-    FTS.write_postings(
-        FTS.build_postings(
-            spark.createDataFrame(base + extra, "doc_id long, text string")
-        ),
-        clean,
-        n_buckets=2,
-    )
-    got = [
-        (r["doc_id"], r["score"])
-        for r in FTS.search_postings_index(spark, path, "alpha", topk=5).collect()
-    ]
-    exp = [
-        (r["doc_id"], r["score"])
-        for r in FTS.search_postings_index(spark, clean, "alpha", topk=5).collect()
-    ]
-    assert got == exp
-    # the reader must NOT consume the crash signal
-    assert any(f.startswith(".append-pending-") for f in os.listdir(path))
-    stale = spark.read.parquet(f"{path}/stats").collect()[0]
-    assert stale["N"] == 2  # stats row untouched by the read-only path
 
 
 def test_arrow_and_spark_bin_merges_identical(spark, tmp_path, monkeypatch):

@@ -1,10 +1,10 @@
-"""The minhash-index append journal (VERDICT r14 #2 → r15).
+"""The minhash-index append on the publish journal (plans/journal.py).
 
-append_to_minhash_index now runs the same stage→commit-marker→publish
-protocol the FTS postings appends prove (operators/fts.py), instead of
-the r14 pending-marker that merely DETECTED a torn append and demanded a
-full rebuild. These tests pin the protocol's state machine in-process;
-tests/test_soak_kill_index.py SIGKILLs a real appender subprocess.
+append_to_minhash_index stages both relations and publishes them as one
+journal commit. tests/test_journal.py proves the protocol at every
+filesystem step; these tests pin the append's integration with it
+in-process, and tests/test_soak_kill_index.py SIGKILLs a real appender
+subprocess.
 
 Crash taxonomy:
 - pre-commit (stage staged, no marker): nothing visible; the stage is
@@ -22,6 +22,7 @@ import os
 import pytest
 
 import quackpipe_spark.operators.dedup as D
+from quackpipe_spark.plans import journal
 
 
 def _docs(spark, ids):
@@ -58,19 +59,19 @@ def test_append_publishes_both_relations_atomically(spark, idx):
     bands = spark.read.parquet(f"{idx}/bands")
     assert bands.filter("doc_id = 100").count() == 4  # bands rows landed too
     assert _probe_pairs(spark, idx, 200, 3) == {(200, 3), (200, 100)}
-    assert not [f for f in os.listdir(idx) if f.startswith(".append-")]
+    assert not [f for f in os.listdir(idx) if f.startswith(".journal-")]
 
 
 def test_post_commit_crash_rolls_forward_at_next_probe(spark, idx, monkeypatch):
     # simulate a crash at the exact commit point: the marker is durable,
     # publish never ran
-    monkeypatch.setattr(D, "_roll_forward_minhash_append", lambda *a: None)
+    monkeypatch.setattr(journal, "_roll_forward", lambda *a: None)
     D.append_to_minhash_index(
         _clone(spark, 100, 3), idx, compact_over_files=None, write_id="batch-1"
     )
     monkeypatch.undo()
-    markers = [f for f in os.listdir(idx) if f.startswith(".append-commit-")]
-    stages = [f for f in os.listdir(idx) if f.startswith(".append-stage-")]
+    markers = [f for f in os.listdir(idx) if f.startswith(journal.MARKER)]
+    stages = [f for f in os.listdir(idx) if f.startswith(journal.STAGE)]
     assert markers and stages, (markers, stages)
     # nothing published yet (the batch is invisible, not torn)
     assert spark.read.parquet(f"{idx}/fingerprints").count() == 10
@@ -80,7 +81,7 @@ def test_post_commit_crash_rolls_forward_at_next_probe(spark, idx, monkeypatch):
     assert _probe_pairs(spark, idx, 200, 3) == {(200, 3), (200, 100)}
     assert spark.read.parquet(f"{idx}/fingerprints").count() == 11
     assert spark.read.parquet(f"{idx}/bands").filter("doc_id = 100").count() == 4
-    assert not [f for f in os.listdir(idx) if f.startswith(".append-")]
+    assert not [f for f in os.listdir(idx) if f.startswith(".journal-")]
 
     # the crashed appender's retry with the same write_id is a no-op
     D.append_to_minhash_index(
@@ -91,7 +92,7 @@ def test_post_commit_crash_rolls_forward_at_next_probe(spark, idx, monkeypatch):
 
 def test_pre_commit_crash_sweeps_at_writer_not_reader(spark, idx):
     # fabricate a pre-commit crash: a stage with no marker
-    stage = os.path.join(idx, ".append-stage-deadbeef")
+    stage = os.path.join(idx, f"{journal.STAGE}deadbeef")
     os.makedirs(os.path.join(stage, "bands"))
     with open(os.path.join(stage, "bands", "junk.parquet"), "wb") as f:
         f.write(b"not parquet")
@@ -105,7 +106,7 @@ def test_pre_commit_crash_sweeps_at_writer_not_reader(spark, idx):
     D.append_to_minhash_index(_clone(spark, 100, 3), idx, compact_over_files=None)
     assert not os.path.isdir(stage)
     assert spark.read.parquet(f"{idx}/fingerprints").count() == 11
-    assert not [f for f in os.listdir(idx) if f.startswith(".append-")]
+    assert not [f for f in os.listdir(idx) if f.startswith(".journal-")]
 
 
 def test_write_id_replay_is_exactly_once(spark, idx):

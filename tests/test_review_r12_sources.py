@@ -222,23 +222,25 @@ def test_append_postings_crash_after_commit_rolls_forward_once(spark, tmp_path, 
         "doc_id long, text string",
     )
 
-    def boom(p, c):
+    from quackpipe_spark.plans import journal
+
+    def boom(root, name):
         raise RuntimeError("simulated crash after commit")
 
-    monkeypatch.setattr(FTS, "_roll_forward_append", boom)
+    monkeypatch.setattr(journal, "_roll_forward", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         FTS.append_postings(batch, path, write_id="b9")
     monkeypatch.undo()
-    assert any(f.startswith(".append-commit-b9") for f in os.listdir(path))
-    # search while the marker is pending still self-heals stats read-only
+    assert any(f.startswith(journal.MARKER) for f in os.listdir(path))
+    # the replay's writer-side recovery rolls the committed append forward,
+    # then finds its write_id applied and skips
     FTS.append_postings(batch, path, write_id="b9")  # the replay
     n, avgdl, postings = _fts_state(spark, path)
     assert n == 4  # applied exactly once
     assert len([p for p in postings if p[0] in (3, 4)]) == len(
         {(d, t) for d, t, _ in postings if d in (3, 4)}
     )  # no duplicated (doc, term) rows
-    assert not any(f.startswith(".append-commit-") for f in os.listdir(path))
-    assert not any(f.startswith(".append-stage-") for f in os.listdir(path))
+    assert not any(f.startswith(".journal-") for f in os.listdir(path))
     # results equal a clean single append
     clean = _fts_base(spark, tmp_path, "clean")
     FTS.append_postings(batch, clean, write_id="b9")
@@ -277,13 +279,13 @@ def test_append_postings_crash_mid_publish_converges(spark, tmp_path, monkeypatc
                 raise OSError("simulated crash mid-move")
         return real_replace(src, dst)
 
-    # fts.py imports os function-locally, so patch the os module itself;
-    # the dst filter keeps the failure scoped to the publish moves
+    # patch the os module itself; the dst filter keeps the failure
+    # scoped to the publish moves
     monkeypatch.setattr("os.replace", failing_replace)
     with pytest.raises(OSError, match="mid-move"):
         FTS.append_postings(batch, path, write_id="b7")
     monkeypatch.undo()
-    assert any(f.startswith(".append-commit-b7") for f in os.listdir(path))
+    assert any(f.startswith(".journal-commit-") for f in os.listdir(path))
     FTS.append_postings(batch, path, write_id="b7")  # the replay
     n, _avgdl, postings = _fts_state(spark, path)
     assert n == 5

@@ -56,17 +56,6 @@ def test_decode_real_feature_width_uniform(spark):
     assert len(feat) == 8  # padded to the contract width
 
 
-def test_write_stats_atomic_fsyncs_stats_dir(tmp_path, monkeypatch):
-    """The stats rename must fsync the STATS dir (not just the file):
-    pin that the helper is invoked on it."""
-    import quackpipe_spark.operators.fts as fts
-
-    calls: list[str] = []
-    monkeypatch.setattr(fts, "_fsync_dir", lambda p: calls.append(os.path.abspath(p)))
-    fts._write_stats_atomic(str(tmp_path), 10, 3.5, 4)
-    assert os.path.abspath(str(tmp_path / "stats")) in calls
-
-
 def test_append_postings_single_file_per_bucket(spark, tmp_path):
     """Appends must cluster on term_bucket before partitionBy: one file
     per touched bucket per append, not tasks x buckets."""

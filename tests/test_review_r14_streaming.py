@@ -121,3 +121,18 @@ def test_running_totals_emits_full_precision(spark, tmp_path):
     row = rows[-1]
     assert row["total"] == pytest.approx(0.00003, rel=1e-9)
     assert row["total"] != 0.0
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_id_codec_empty_chunk_has_no_minimum(spark, id_type):
+    """An empty chunk has no batch minimum for integral ids, as for
+    string ids: min() of an empty list used to raise on the int path."""
+    import pandas as pd
+
+    from quackpipe_spark.streaming.stateful import _id_codec
+
+    docs = spark.createDataFrame([], f"doc_id {id_type}, text string")
+    _expr, _type, batch_min_of, batch_ids_of = _id_codec(docs, "doc_id")
+    empty = pd.DataFrame({"_id": []})
+    assert batch_min_of(empty) is None
+    assert batch_ids_of(empty) == []

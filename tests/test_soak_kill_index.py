@@ -2,14 +2,14 @@
 
 The hive store and the journaled flat dir are crash-proven by
 tests/test_soak_kill_writer.py; this soak closes the remaining seam: the
-minhash dedup index (newly journaled in r15) and the FTS postings index
-(journaled since r12, but replay-idempotence was tested in-process only).
+minhash dedup index and the FTS postings index, both published through
+plans/journal.py (whose every-step crash test runs in-process only).
 
 A subprocess (tests/soak_index_appender.py) appends a deterministic
 batch sequence to both indexes with per-batch write_ids and is SIGKILLed
 at a randomized point in each of >=5 cycles — mid-stage, mid-commit,
 mid-publish, mid-stats-update, wherever the kill lands. Each restart
-recovers from DISK ALONE (both journal protocols run at the append entry
+recovers from DISK ALONE (journal recovery runs at both append entry
 points) and re-runs the interrupted batch with the SAME write_id, so
 exactly-once semantics decide whether it applied. A final incarnation
 converges cleanly, and the parent verifies both indexes EQUAL a
@@ -20,7 +20,8 @@ never-crashed control built in-process from the same batch sequence:
 - FTS: identical (doc_id, score) BM25 top-k for probe queries — scores
   depend on N/avgdl/df, so equality proves postings AND stats converged
   (no double-count, no loss);
-- no journal debris (.append-* markers or stages) survives.
+- no journal debris (.journal-* markers, tmp markers or stages)
+  survives.
 """
 
 from __future__ import annotations
@@ -185,13 +186,8 @@ def test_kill_index_appender_soak(spark, tmp_path):
     for idx in (root + "/mh", root + "/fts"):
         debris = [
             os.path.join(r, n)
-            for r, _d, files in os.walk(idx)
-            for n in files
-            if n.startswith((".append-commit-", ".append-pending-"))
-        ] + [
-            os.path.join(r, n)
-            for r, dirs, _f in os.walk(idx)
-            for n in dirs
-            if n.startswith(".append-stage-")
+            for r, dirs, files in os.walk(idx)
+            for n in dirs + files
+            if n.startswith(".journal-")
         ]
         assert debris == [], debris

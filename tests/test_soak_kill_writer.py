@@ -16,8 +16,8 @@ CRASH story end to end:
   counts never go backwards;
 - each restarted writer recovers from DISK ALONE — Catalog discovery +
   PartitionIndex atomic-save semantics for the hive store,
-  recover_parquet_dir (commit-journal roll-forward/rollback,
-  plans/compactor.py:343,367,450) for the journaled flat dir — verifies
+  journal.recover (publish-journal roll-forward/sweep, plans/journal.py)
+  for the journaled flat dir — verifies
   its resume state is an exact prefix, and continues the sequence;
 - a final clean-exit incarnation converges the store, and the parent
   re-verifies both stores independently.
@@ -200,7 +200,5 @@ def test_kill_writer_crash_soak(spark, tmp_path):
     assert tbl.num_rows == final_nf == max(_snapshots(flat_snap_path))
     assert float(pc.sum(tbl.column("v")).as_py()) == _tri(final_nf)
     # no journal debris survived the final recover+compact cycles
-    leftover = [
-        x for x in os.listdir(flatdir) if x.startswith(".compact-commit-")
-    ]
+    leftover = [x for x in os.listdir(flatdir) if x.startswith(".journal-")]
     assert leftover == [], leftover
