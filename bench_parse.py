@@ -8,8 +8,12 @@ bench_ingest.py / bench_compact.py play for flush and merge):
    The pre-r9 design re-parsed the corpus once per schema fingerprint
    (S+1 passes); the exactly-once contract is accumulator-asserted here
    as well as in tests.
-2. **driver-side parse_line** (the HTTP door's hot loop): escape-free
-   fast path vs the general scanner, µs/line each.
+2. **driver-side parse_line** (the HTTP door's hot loop), µs/line on
+   each of its three routes: escape-free fast path, quoted string field
+   without a backslash, and the general scanner (escaped tag);
+3. **driver-side parse_lines** on ``perfbench.gen.lp_bodies`` request
+   bodies (the ``lp_ingest`` mix: three measurements, string fields,
+   5% escaped tags), µs/line including the batch build.
 
 Usage: python bench_parse.py [n_lines] [n_schemas]
 Prints ONE JSON line.
@@ -27,7 +31,12 @@ def main() -> None:
     n_schemas = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
     from quackpipe_spark.session import get_spark
-    from quackpipe_spark.sources.lineproto import parse_line, parse_lines_df
+    from perfbench.gen import lp_bodies
+    from quackpipe_spark.sources.lineproto import (
+        parse_line,
+        parse_lines,
+        parse_lines_df,
+    )
 
     spark = get_spark(app_name="quackpipe_parse_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -38,18 +47,25 @@ def main() -> None:
         fields = ",".join(f"f{j}={i}.5" for j in range(s + 1))
         return f"m{s},host=h{i % 50} {fields} {1_700_000_000_000_000_000 + i}"
 
-    # driver-side per-line cost (fast path; escaped variant for the
-    # general scanner)
+    # driver-side per-line cost on each parse_line route: fast path, a
+    # quoted string field (no backslash), an escaped tag (general scanner)
     sample = [_line(i) for i in range(min(n_lines, 20_000))]
+
+    def _us_per_line(lines) -> float:
+        t0 = time.perf_counter()
+        for r in lines:
+            parse_line(r)
+        return (time.perf_counter() - t0) / len(lines) * 1e6
+
+    fast_us = _us_per_line(sample)
+    quoted_us = _us_per_line(
+        [r.replace(" f0=", ' msg="GET /v1/items, 200",f0=') for r in sample]
+    )
+    gen_us = _us_per_line([r.replace("host=", "ho\\ st=") for r in sample])
+    bodies = [b.text.decode() for b in lp_bodies(1, 20, 1000)]
     t0 = time.perf_counter()
-    for r in sample:
-        parse_line(r)
-    fast_us = (time.perf_counter() - t0) / len(sample) * 1e6
-    esc = [r.replace("host=", "ho\\ st=") for r in sample]
-    t0 = time.perf_counter()
-    for r in esc:
-        parse_line(r)
-    gen_us = (time.perf_counter() - t0) / len(esc) * 1e6
+    body_lines = sum(b.num_rows() for t in bodies for b in parse_lines(t))
+    parse_lines_us = (time.perf_counter() - t0) / body_lines * 1e6
 
     if n_lines > 1_000_000:
         # corpus generated EXECUTOR-side with the same formula (a
@@ -111,7 +127,9 @@ def main() -> None:
                 "lines_per_s": round(n_lines / dt),
                 "parses_per_line": 1,
                 "driver_parse_us_per_line_fast": round(fast_us, 1),
+                "driver_parse_us_per_line_quoted": round(quoted_us, 1),
                 "driver_parse_us_per_line_general": round(gen_us, 1),
+                "driver_parse_lines_us_per_line_lp_bodies": round(parse_lines_us, 1),
                 **kernel_fields(k_before, k_after, dt),
             }
         )

@@ -178,8 +178,13 @@ class GigapiServer:
                     raise ValueError(
                         "Transfer-Encoding bodies unsupported; send Content-Length"
                     )
-                n = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(n)
+                n = self.headers.get("Content-Length", "0").strip()
+                # digits only: rfile.read(-1) reads to EOF, so the client
+                # waits for a reply that never comes and stop() blocks
+                # joining this handler; int() would also take '1_0'
+                if not (n.isascii() and n.isdigit()):
+                    raise ValueError(f"invalid Content-Length {n!r}")
+                raw = self.rfile.read(int(n))
                 if self.headers.get("Content-Encoding") == "gzip" or raw[:2] == b"\x1f\x8b":
                     raw = gzip.decompress(raw)
                 return raw

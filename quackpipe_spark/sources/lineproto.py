@@ -73,6 +73,26 @@ def schema_id(tag_keys: list[str], field_types: dict[str, str]) -> int:
     return acc
 
 
+# shapes a fingerprint memo holds before it is cleared: a batch has few
+# shapes, an adversarial one unbounded many
+_SHAPE_MEMO_MAX = 4096
+
+
+def shape_schema_id(memo: dict, tag_keys: tuple, field_types: tuple) -> int:
+    """``schema_id`` looked up by the line's shape — the tag-key tuple
+    and the ``(field, type)`` tuple — in a caller-owned ``memo``, so the
+    md5s run once per shape instead of once per line. The memo only
+    caches ``schema_id``'s result, so the fingerprint stays
+    order-invariant."""
+    key = (tag_keys, field_types)
+    sid = memo.get(key)
+    if sid is None:
+        if len(memo) >= _SHAPE_MEMO_MAX:
+            memo.clear()
+        sid = memo[key] = schema_id(tag_keys, dict(field_types))
+    return sid
+
+
 def _split_escaped(s: str, sep: str) -> list[str]:
     """Split on unescaped sep, KEEPING backslash escapes in the pieces —
     stripping them here would make a later '=' partition unable to tell
@@ -234,45 +254,111 @@ def _parse_field_value(raw: str) -> tuple[str, object]:
     return "FLOAT8", v
 
 
+def _find_unquoted(s: str, ch: str, i: int = 0) -> int:
+    """Index of the first ``ch`` at or after ``i`` that lies outside a
+    ``"…"`` pair, or -1. Quote parity counts from ``i`` and an
+    unterminated quote runs to the end of ``s``. Backslash-free input
+    only: the general scanner lets an escaped quote not toggle."""
+    while True:
+        j = s.find(ch, i)
+        if j == -1:
+            return -1
+        q = s.find('"', i, j)
+        if q == -1:
+            return j
+        i = s.find('"', q + 1)
+        if i == -1:
+            return -1
+        i += 1
+
+
+def _split_top_quoted(s: str) -> list[str]:
+    """``_split_top`` for a backslash-free line, by ``str.find`` jumps:
+    the measurement/tag token ends at the first space (quotes there are
+    literal), the field token at the first space outside quotes, and the
+    rest splits on spaces with quotes literal again."""
+    head, _, rest = s.partition(" ")
+    rest = rest.lstrip(" ")
+    if not rest:
+        return [head]
+    end = _find_unquoted(rest, " ")
+    if end == -1:
+        return [head, rest]
+    return [head, rest[:end]] + [p for p in rest[end + 1 :].split(" ") if p]
+
+
+def _split_fields_quoted(s: str) -> list[str]:
+    """``_split_fields`` for a backslash-free field section: split on
+    commas outside quotes and drop an empty last piece."""
+    out, i = [], 0
+    j = _find_unquoted(s, ",")
+    while j != -1:
+        out.append(s[i:j])
+        i = j + 1
+        j = _find_unquoted(s, ",", i)
+    if i < len(s):
+        out.append(s[i:])
+    return out
+
+
 def parse_line(line: str, precision: str = "ns") -> tuple[str, list[tuple[str, str]], list[tuple[str, str, object]], int | None]:
     """Parse one line → (measurement, tags, fields, ts_ns|None).
 
-    Escape-free lines (no ``\\`` and no ``\"`` anywhere — the
-    overwhelming majority of real telemetry) take a str.split fast path
-    that is behaviorally IDENTICAL to the general scanner: with no
-    escapes, _split_top degenerates to space-split-skip-empties,
-    _split_escaped/_split_fields to a plain comma split,
-    _partition_unescaped to str.partition, and _unescape to identity.
-    A differential property test pins the equivalence
-    (test_lineproto_property). ~4× per-line, which is the bulk ingest
-    hot loop (both the driver HTTP path and the distributed parse's
-    per-line fallback)."""
+    Three routes, chosen by what the stripped line contains:
+
+    - no ``\\`` and no ``"`` (most telemetry): ``str.split`` on spaces
+      and commas, which is what the general scanner does without those
+      characters — except that a trailing comma in the field section
+      leaves an empty piece that is rejected here and dropped there;
+    - ``"`` but no ``\\`` (string fields): ``_split_top_quoted`` and
+      ``_split_fields_quoted`` jump between quotes with ``str.find``
+      instead of walking every character;
+    - any ``\\``: the general scanner (``_parse_line_general``), the
+      reference the other two are tested against.
+
+    Without a backslash ``_partition_unescaped`` is ``str.partition`` and
+    ``_unescape`` the identity, so both fast routes share one tag/field
+    loop. ``test_lineproto_property`` pins the equivalence:
+    ``test_fast_path_matches_general_scanner`` renders valid lines with
+    and without string fields, and
+    ``test_quoted_route_matches_general_scanner`` feeds raw quoted lines
+    (unterminated quotes, trailing commas, extra tokens) and compares the
+    result or the ``ValueError`` text. The driver HTTP door
+    (``parse_lines``) and the distributed parse's per-line fallback both
+    run through here."""
     mult = _PRECISION_NS.get(precision)
     if mult is None:
         raise ValueError(f"unknown precision {precision!r}")
     s = line.strip()
-    if "\\" not in s and '"' not in s:
-        parts = [p for p in s.split(" ") if p]
-        if len(parts) < 2:
-            raise ValueError(f"malformed line (need measurement and fields): {line!r}")
-        head = parts[0].split(",")
-        measurement = head[0]
-        if not measurement:
-            raise ValueError(f"empty measurement: {line!r}")
-        tags = []
-        for t in head[1:]:
-            k, sep, v = t.partition("=")
-            if not sep:
-                raise ValueError(f"malformed tag {t!r} in {line!r}")
-            tags.append((k, v))
-        fields = []
-        for f in parts[1].split(","):
-            k, sep, v = f.partition("=")
-            if not sep:
-                raise ValueError(f"malformed field {f!r} in {line!r}")
-            typ, val = _parse_field_value(v)
-            fields.append((k, typ, val))
-        return _finish_line(line, parts, tags, fields, mult, measurement)
+    if "\\" in s:
+        return _parse_line_general(line, s, mult)
+    quoted = '"' in s
+    parts = _split_top_quoted(s) if quoted else [p for p in s.split(" ") if p]
+    if len(parts) < 2:
+        raise ValueError(f"malformed line (need measurement and fields): {line!r}")
+    head = parts[0].split(",")
+    measurement = head[0]
+    if not measurement:
+        raise ValueError(f"empty measurement: {line!r}")
+    tags = []
+    for t in head[1:]:
+        k, sep, v = t.partition("=")
+        if not sep:
+            raise ValueError(f"malformed tag {t!r} in {line!r}")
+        tags.append((k, v))
+    fields = []
+    for f in _split_fields_quoted(parts[1]) if quoted else parts[1].split(","):
+        k, sep, v = f.partition("=")
+        if not sep:
+            raise ValueError(f"malformed field {f!r} in {line!r}")
+        typ, val = _parse_field_value(v)
+        fields.append((k, typ, val))
+    return _finish_line(line, parts, tags, fields, mult, measurement)
+
+
+def _parse_line_general(line: str, s: str, mult: int):
+    """The general scanner: per-character splits that honour backslash
+    escapes and field-section quotes. ``s`` is ``line`` stripped."""
     parts = _split_top(s)
     if len(parts) < 2:
         raise ValueError(f"malformed line (need measurement and fields): {line!r}")
@@ -357,6 +443,7 @@ def parse_lines(
         lines = text_or_lines
     batches: list[ParsedBatch] = []
     cur: ParsedBatch | None = None
+    memo: dict = {}
     for raw in lines:
         line = raw.strip()
         if not line or line.startswith("#"):
@@ -383,8 +470,11 @@ def parse_lines(
             )
         if ts_ns is None:
             ts_ns = time.time_ns()
-        ftypes = {name: typ for name, typ, _ in fields}
-        sid = schema_id([k for k, _ in tags], ftypes)
+        sid = shape_schema_id(
+            memo,
+            tuple([k for k, _ in tags]),
+            tuple([(name, typ) for name, typ, _ in fields]),
+        )
         if cur is None or cur.table != table or cur.schema_id != sid:
             cur = ParsedBatch(database=database, table=table, schema_id=sid)
             for k, _ in tags:
@@ -461,7 +551,7 @@ def _sid_desc(tag_keys, ftypes, sid_memo, shape_key):
             )
         )
         ent = (schema_id(list(tag_keys), ftypes), desc)
-        if len(sid_memo) > 4096:
+        if len(sid_memo) >= _SHAPE_MEMO_MAX:
             sid_memo.clear()
         sid_memo[shape_key] = ent
     return ent

@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 import math
 
-from quackpipe_spark.sources.lineproto import ParsedBatch, schema_id
+from quackpipe_spark.sources.lineproto import ParsedBatch, shape_schema_id
 from quackpipe_spark.types import infer_canonical
 
 MAX_BATCH_BYTES = 10 * 1024 * 1024  # ndjson_insert_parser.go:40 (planned cap)
@@ -71,6 +71,7 @@ def parse_ndjson(
     batches: list[ParsedBatch] = []
     cur: ParsedBatch | None = None
     cur_bytes = 0
+    memo: dict = {}
     for raw in lines:
         line = raw.strip()
         if not line:
@@ -80,14 +81,14 @@ def parse_ndjson(
         )
         if not isinstance(obj, dict):
             raise ValueError(f"ndjson line must be an object, got {type(obj).__name__}")
-        ftypes = {}
+        ftypes = []
         for k, v in obj.items():
             if isinstance(v, (dict, list)):
                 raise TypeError(f"nested value for field {k!r} (4-type system)")
             if v is not None:
-                ftypes[k] = infer_canonical(v)
+                ftypes.append((k, infer_canonical(v)))
         obj = {k: v for k, v in obj.items() if v is not None}
-        sid = schema_id([], ftypes)
+        sid = shape_schema_id(memo, (), tuple(ftypes))
         # split BEFORE appending when this line would breach the cap —
         # checking the running total alone let every capped batch exceed
         # MAX_BATCH_BYTES by up to one full line (ndjson_insert_parser.go:40).

@@ -233,6 +233,49 @@ def test_stop_releases_port_for_restart(spark, tmp_path):
     srv2.stop()
 
 
+@pytest.mark.parametrize("length", [b"-1", b"1_0"])
+def test_bad_content_length_is_400_and_stop_returns(spark, tmp_path, length):
+    """A negative Content-Length made the handler read to EOF, and '1_0'
+    (int() accepts it as 10) past the body: either way the client got no
+    reply and stop() blocked joining the handler until the client hung
+    up. Both must get the JSON 400 at once while the client holds its
+    end open, and stop() must then return."""
+    import socket
+    import threading
+
+    srv = GigapiServer(spark, str(tmp_path / "root"), port=0)
+    srv.start()
+    sock = socket.create_connection(
+        ("127.0.0.1", srv._httpd.server_address[1]), timeout=5
+    )
+    stopper = None
+    try:
+        sock.sendall(
+            b"POST /write?db=cl HTTP/1.1\r\nHost: x\r\nContent-Length: "
+            + length
+            + b"\r\n\r\n"
+        )
+        reply = b""
+        try:
+            while chunk := sock.recv(4096):
+                reply += chunk
+        except TimeoutError:
+            pass
+        head, _, body = reply.partition(b"\r\n\r\n")
+        assert head.split(b"\r\n")[0].split(b" ")[1:2] == [b"400"], reply
+        assert "Content-Length" in json.loads(body)["error"]
+        stopper = threading.Thread(target=srv.stop, daemon=True)
+        stopper.start()
+        stopper.join(10)
+        assert not stopper.is_alive(), "stop() blocked on the handler"
+    finally:
+        sock.close()
+        if stopper is None:
+            srv.stop()
+        else:
+            stopper.join(30)
+
+
 def test_query_response_is_streamed_shape(server):
     _post(
         server.base + "/write?db=sdb&precision=s",

@@ -6,10 +6,15 @@ from __future__ import annotations
 
 import string
 
-from hypothesis import example, given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
-from quackpipe_spark.sources.lineproto import parse_line, parse_lines, schema_id
+from quackpipe_spark.sources.lineproto import (
+    parse_line,
+    parse_lines,
+    schema_id,
+    shape_schema_id,
+)
 
 # identifier-ish keys (no escaping needed) and value domains
 keys = st.text(string.ascii_lowercase + string.digits + "_", min_size=1, max_size=12)
@@ -87,12 +92,26 @@ def test_schema_id_permutation_invariant(tag_keys, field_items):
     import random
 
     base = schema_id(tag_keys, dict(field_items))
+    memo: dict = {}
     for _ in range(3):
         tk = list(tag_keys)
         fi = list(field_items)
         random.shuffle(tk)
         random.shuffle(fi)
         assert schema_id(tk, dict(fi)) == base
+        # the shape memo caches schema_id, so it inherits the invariance
+        assert shape_schema_id(memo, tuple(tk), tuple(fi)) == base
+        assert shape_schema_id(memo, tuple(tk), tuple(fi)) == base
+
+
+def test_shape_memo_is_bounded():
+    from quackpipe_spark.sources.lineproto import _SHAPE_MEMO_MAX
+
+    memo: dict = {}
+    for i in range(_SHAPE_MEMO_MAX + 10):
+        sid = shape_schema_id(memo, (f"t{i}",), (("f", "FLOAT8"),))
+        assert sid == schema_id([f"t{i}"], {"f": "FLOAT8"})
+        assert len(memo) <= _SHAPE_MEMO_MAX
 
 
 @settings(max_examples=100, deadline=None)
@@ -123,6 +142,7 @@ def test_batch_rows_conserved(lines):
             st.integers(min_value=-(2**62), max_value=2**62),
             st.floats(allow_nan=False, allow_infinity=False, width=32),
             st.booleans(),
+            str_values,
         ),
         min_size=1,
         max_size=4,
@@ -134,11 +154,13 @@ def test_batch_rows_conserved(lines):
     fields={"0": 0},
     ts=None,
 ).via("discovered failure")
+@example(tags={"host": "a"}, fields={"msg": "GET /x, 200 k=v", "n": 1}, ts=5)
 def test_fast_path_matches_general_scanner(tags, fields, ts):
-    """parse_line's escape-free fast path must be byte-for-byte equivalent
-    to the general scanner on every line it claims: force the general
-    path by appending an escaped no-op tag to an otherwise identical
-    line and compare the overlapping structure."""
+    """parse_line's two backslash-free routes — the plain split and the
+    quote-aware split that string fields take — must equal the general
+    scanner on every valid line they claim (string values here carry
+    spaces, commas and '=' but never a quote or backslash, so the line
+    stays backslash-free)."""
     from quackpipe_spark.sources import lineproto as L
 
     tags = {k: v for k, v in tags.items() if k != "time"}
@@ -154,25 +176,62 @@ def test_fast_path_matches_general_scanner(tags, fields, ts):
     head = "m" + "".join(f",{k}={v}" for k, v in tags.items())
     body = ",".join(f"{k}={render_field(v)}" for k, v in fields.items())
     line = f"{head} {body}" + (f" {ts}" if ts is not None else "")
-    if "\\" in line or '"' in line:
-        return  # string fields render quoted — not fast-path eligible
-    fast = parse_line(line)
-    # general scanner on the IDENTICAL line (bypass the dispatch)
-    parts = L._split_top(line.strip())
-    h = L._split_escaped(parts[0], ",")
-    g_tags = []
-    for t in h[1:]:
-        k, v = L._partition_unescaped(t, "=")
-        g_tags.append((L._unescape(k), L._unescape(v)))
-    g_fields = []
-    for f in L._split_fields(parts[1]):
-        k, v = L._partition_unescaped(f, "=")
-        typ, val = L._parse_field_value(v)
-        g_fields.append((L._unescape(k), typ, val))
-    general = L._finish_line(
-        line, parts, g_tags, g_fields, 1, L._unescape(h[0])
+    assert "\\" not in line
+    assert parse_line(line) == L._parse_line_general(line, line.strip(), 1)
+
+
+# raw pieces of a backslash-free line: quotes in the tag section and in
+# field values, with commas, spaces and '=' inside the quotes
+_q_key = st.text(st.sampled_from('ab"'), min_size=1, max_size=3)
+_q_value = st.one_of(
+    st.text(st.sampled_from("ab ,=1"), max_size=6).map(lambda v: f'"{v}"'),
+    st.text(st.sampled_from("ab ,=1"), max_size=6).map(lambda v: f'"{v}'),
+    st.sampled_from(["", "1", "2i", "3u", "t", "x", '"', 'a"b', '""']),
+)
+
+
+@st.composite
+def _quoted_line(draw):
+    head = draw(_q_key) + "".join(
+        f",{k}={v}"
+        for k, v in draw(
+            st.lists(st.tuples(_q_key, st.text(st.sampled_from('v"='), max_size=3)), max_size=2)
+        )
     )
-    assert fast == general
+    body = ",".join(
+        f"{k}={v}" for k, v in draw(st.lists(st.tuples(_q_key, _q_value), min_size=1, max_size=3))
+    )
+    body += draw(st.sampled_from(["", ",", ",,"]))
+    tail = draw(st.sampled_from(["", " 5", "  5", " 5 6", ' "7"', " x", " -1", " 5 "]))
+    return f"{head}{draw(st.sampled_from([' ', '  ']))}{body}{tail}"
+
+
+def _outcome(fn, *args):
+    try:
+        return "ok", fn(*args)
+    except ValueError as e:
+        return "error", str(e)
+
+
+@settings(max_examples=500, deadline=None)
+@given(line=st.one_of(_quoted_line(), st.text(st.sampled_from('ab"=, 1'), max_size=20)))
+@example(line='m,t=a"b s="x, y=z" 5')  # quote in a tag is literal
+@example(line='m s="open, to the end 5')  # unterminated quote
+@example(line='m s="x",')  # trailing comma dropped
+@example(line='m s="x",,n=1 5')  # empty middle piece
+@example(line='m s="x" 5 6')  # extra token
+@example(line='m s="x" "5"')  # bad timestamp
+@example(line='m s=,q="" 5')  # empty value
+def test_quoted_route_matches_general_scanner(line):
+    """A line with a quote and no backslash takes the str.find route; its
+    result, or its ValueError text, must equal the general scanner's."""
+    from quackpipe_spark.sources import lineproto as L
+
+    assume('"' in line)
+    assert "\\" not in line
+    assert _outcome(parse_line, line) == _outcome(
+        L._parse_line_general, line, line.strip(), 1
+    )
 
 
 def test_vectorized_df_parse_matches_driver_parse(spark):
