@@ -119,14 +119,12 @@ def prune_stress(n_files: int) -> dict:
         ts = []
         for _ in range(5):
             qe._plan_cache.clear()
+            qe._bounds_memo.clear()
             if disable_prune:
                 import quackpipe_spark.query as Q
 
                 orig = Q.extract_time_bounds_per_table
-                # signature must accept the engine's blanked= kwarg
-                Q.extract_time_bounds_per_table = (
-                    lambda sql, tables, blanked=None: {}
-                )
+                Q.extract_time_bounds_per_table = lambda *a, **k: {}
                 try:
                     t0 = time.perf_counter()
                     r = qe.sql(q, db="d").collect()

@@ -4,12 +4,17 @@ Parity with the gigapi-querier flow (ARCHITECTURE.md:2075-2083): resolve
 the table's parquet files from the metadata catalog **and the query's time
 range**, then execute the SQL against that file list. Two pruning layers:
 
-1. **Index pruning (ours, driver-side)** — `__timestamp` bounds extracted
-   from the SQL select only the files whose [min_time, max_time] overlap
-   (the reference's "resolve data location based on database, table and
-   timerange", README.md:115). At 100 TB this keeps the Spark file listing
-   itself small — partition pruning can't help if the driver enumerates
-   a million files first.
+1. **Index pruning (ours, driver-side)** — each referenced table's
+   ``__timestamp`` range selects only the files whose [min_time,
+   max_time] overlap (the reference's "resolve data location based on
+   database, table and timerange", README.md:115). At 100 TB this keeps
+   the Spark file listing itself small — partition pruning can't help if
+   the driver enumerates a million files first. The range is not parsed
+   from the SQL text: the query is analyzed once against schema-only
+   relations and read off Catalyst's optimized plan
+   (:func:`extract_time_bounds_per_table`), so every shape the optimizer
+   pushes a filter through — joins, CTEs, derived tables, subqueries,
+   set operations — prunes, and every shape it can't stays unpruned.
 2. **Catalyst pruning (built-in)** — remaining predicates push into the
    parquet scan (footer stats, partition columns date/hour).
 
@@ -24,75 +29,33 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+import threading
+from collections import OrderedDict
+from functools import reduce
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 
 from quackpipe_spark.catalog import Catalog, Table
-from quackpipe_spark.functions.dialect import register_dialect, rewrite_sql
+from quackpipe_spark.functions.dialect import (
+    register_dialect,
+    registry_fingerprint,
+    rewrite_sql,
+)
 from quackpipe_spark.plans.index import PartitionIndex
 
-_TS_VALUE = r"(\d+|epoch_ns\(\s*(?:TIMESTAMP\s*)?'[^']+'(?:\s*::\s*TIMESTAMP)?\s*\))"
-# the column must be exactly __timestamp: no preceding word char (else
-# event__timestamp matches). The UNQUALIFIED form (no table/alias
-# prefix) is attributable only when the query references one table; the
-# QUALIFIED form (alias.__timestamp) binds to one side of a join and is
-# resolved through the FROM/JOIN alias map so multi-table queries can
-# prune each side's file list independently.
-_TS_COL = r"(?<![A-Za-z0-9_.])__timestamp"
-_TS_BOUND = re.compile(
-    rf"{_TS_COL}\s*(>=|<=|>|<)\s*{_TS_VALUE}", re.IGNORECASE
-)
-_TS_BETWEEN = re.compile(
-    rf"{_TS_COL}\s+BETWEEN\s+{_TS_VALUE}\s+AND\s+{_TS_VALUE}", re.IGNORECASE
-)
-_TS_COL_Q = r"(?<![A-Za-z0-9_.])([A-Za-z_]\w*)\.__timestamp"
-_TS_BOUND_Q = re.compile(
-    rf"{_TS_COL_Q}\s*(>=|<=|>|<)\s*{_TS_VALUE}", re.IGNORECASE
-)
-_TS_BETWEEN_Q = re.compile(
-    rf"{_TS_COL_Q}\s+BETWEEN\s+{_TS_VALUE}\s+AND\s+{_TS_VALUE}", re.IGNORECASE
-)
-_EPOCH_NS_LIT = re.compile(r"'([^']+)'")
-# Constructs under which a textual __timestamp bound is NOT a conjunctive
-# top-level WHERE constraint — each would make ANDed bounds wrong:
-#   OR            — disjunctive ranges intersect to empty
-#   UNION/INTERSECT/EXCEPT — bounds from independent SELECT scopes
-#   NOT           — negation inverts the bound; NOT binds looser than a
-#                   comparison, so paren-less "NOT __timestamp >= x" is
-#                   just as inverting as "NOT (...)" — only the
-#                   IS [NOT] NULL / IS NOT DISTINCT FROM forms are safe
-#   CASE          — a bound inside an expression constrains nothing
-# A second SELECT (subquery) likewise scopes its bounds away from the
-# outer scan. Conservative: no pruning is slower, wrong pruning is
-# silent missing rows.
-_PRUNE_UNSAFE = re.compile(
-    r"\bOR\b|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b"
-    r"|\bNOT\b(?!\s+(NULL|DISTINCT)\b)|\bCASE\b",
-    re.IGNORECASE,
-)
-_SELECT_KW = re.compile(r"\bSELECT\b", re.IGNORECASE)
-# Bounds are read from the WHERE clause body ONLY (see _where_scope):
-# an ON-clause bound on the preserved side of an outer join keeps every
-# row (null-extended), a SELECT-list comparison is a projected boolean,
-# an ORDER BY comparison a sort key — none filters rows. A WHERE
-# predicate over one side's column filters that side's rows regardless
-# of join flavor (null-extended rows fail the comparison too), so
-# WHERE-scope bounds are safe under every join type.
-# backtick lookarounds (review r13): blank_noncode keeps PLAIN-WORD
-# backtick contents visible, so a projected column named `where` would
-# otherwise open the "WHERE scope" inside the SELECT list and let a
-# projected boolean register as a pruning bound — silent missing rows.
-_WHERE_KW = re.compile(r"(?<!`)\bWHERE\b(?!`)", re.IGNORECASE)
 _ALIAS_STOPWORDS = frozenset(
     "on where group order limit having join left right full inner cross outer "
     "semi anti using union intersect except as qualify lateral window natural "
     "tablesample values select distinct".split()
 )
-# FROM/JOIN relation + optional alias. The relation may be db-qualified
-# (dotted) — the LAST segment is the table name. The alias group must
-# REFUSE keywords via lookahead (not post-filter): consuming the JOIN of
-# `FROM a JOIN b` as a's "alias" would swallow the next clause and drop
-# b from the map entirely.
+# FROM/JOIN relation + optional alias, for the plan-cache pin. The
+# relation may be db-qualified (dotted). The alias group must REFUSE
+# keywords via lookahead (not post-filter): consuming the JOIN of
+# `FROM a JOIN b` as a's "alias" would swallow the next clause and hide
+# b from the scan entirely.
 _FROM_JOIN = re.compile(
     r"\b(?:FROM|JOIN)\s+(`[^`]*`[^\s,()]*|[A-Za-z_][\w.]*)"
     r"(?:\s+(?:AS\s+)?(?!(?:" + "|".join(sorted(_ALIAS_STOPWORDS)) + r")\b)"
@@ -102,12 +65,8 @@ _FROM_JOIN = re.compile(
 
 # a backtick-quoted relation: a plain \w+ name means exactly the bare
 # word (Spark resolution); anything else — blanked weird contents,
-# qualified `db`.`tbl` forms — is an OPAQUE relation that still COUNTS
-# (it vetoes unqualified-bound attribution and plan caching) but can
-# never be attributed to. Before r12's follow-up, backticked relations
-# were invisible to this scan entirely: `FROM events JOIN \`myview\``
-# defeated the single-relation guard, and `FROM \`tv\`` was judged
-# plan-cacheable with the temp view's contents unpinned.
+# qualified `db`.`tbl` forms — is an OPAQUE relation whose contents the
+# plan-cache key can't pin.
 _PLAIN_QUOTED = re.compile(r"^`(\w+)`$")
 _OPAQUE_REL = "\x00opaque"
 
@@ -119,191 +78,12 @@ def _rel_name(raw: str) -> str:
     return raw.split(".")[-1].lower()
 
 
-def _ts_literal_ns(lit: str) -> int:
-    """A bound literal: raw ns integer, or the reference's documented
-    epoch_ns('…'::TIMESTAMP) idiom (README.md:121) → ns since epoch UTC."""
-    if lit.isdigit():
-        return int(lit)
-    from datetime import datetime, timezone
-
-    raw = _EPOCH_NS_LIT.search(lit).group(1)
-    for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d"):
-        try:
-            dt = datetime.strptime(raw, fmt).replace(tzinfo=timezone.utc)
-            # exact integer arithmetic via timedelta (review r13): the
-            # previous int(dt.timestamp()) truncated toward zero, so a
-            # fractional PRE-epoch literal ('1969-12-31 23:59:59.5')
-            # yielded +0.5 s instead of -0.5 s — a sign-flipped bound
-            # that pruned files still satisfying the true predicate.
-            # timedelta normalizes (days may be negative, seconds/
-            # microseconds never are), so the fold floors correctly
-            # and never touches float.
-            td = dt - datetime(1970, 1, 1, tzinfo=timezone.utc)
-            secs = td.days * 86_400 + td.seconds
-            return secs * 1_000_000_000 + td.microseconds * 1000
-        except ValueError:
-            continue
-    raise ValueError(f"unparseable timestamp literal: {raw!r}")
-
-
-_FROM_KW = re.compile(r"\bFROM\b", re.IGNORECASE)
-_FROM_SCOPE_END = re.compile(
-    r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|WINDOW|QUALIFY)\b", re.IGNORECASE
-)
-_WHERE_SCOPE_END = re.compile(
-    r"\b(GROUP|HAVING|ORDER|LIMIT|WINDOW|QUALIFY|SORT|DISTRIBUTE|CLUSTER)\b",
-    re.IGNORECASE,
-)  # SORT/DISTRIBUTE/CLUSTER BY are Spark's hive-style tails — a bound
-# there is a sort/partition key, not a row filter. A COLUMN named e.g.
-# `sort` ends the scope early too: that only under-prunes (conservative).
-def _blank_literals(sql: str) -> str:
-    """Replace the CONTENTS of string literals (BOTH quote styles,
-    ``''``/``""`` doubling AND backslash escapes handled) and ENTIRE
-    comment spans (``--``-to-EOL, nested ``/* */``) with spaces,
-    preserving every offset — one shared scanner,
-    :func:`quackpipe_spark.sqltext.blank_noncode`. All keyword scanning
-    (WHERE position, clause terminators, unsafe constructs, FROM/JOIN
-    relations) runs over this blanked text so neither string data like
-    ``note = "WHERE __timestamp >= 1"`` nor a commented-out predicate
-    like ``-- AND __timestamp >= x`` can move the scanned scope or
-    fabricate a bound (a fabricated bound PRUNES — silent missing
-    rows); bound VALUES are then re-read from the original string at
-    the matched span (epoch_ns('…') keeps its timestamp literal)."""
-    from quackpipe_spark.sqltext import blank_noncode
-
-    return blank_noncode(sql)
-
-
-def _where_scope(blanked: str) -> tuple[int, int] | None:
-    """[start, end) of the WHERE clause BODY in the blanked text, or
-    None when the query has no top-level WHERE. Bounds are extracted
-    from this scope ONLY: a bare ``__timestamp >= x`` comparison is a
-    row filter exactly when it is a WHERE conjunct — in a SELECT list
-    it is a projected boolean, in ORDER BY a sort key, in an ON clause
-    of a preserved join side a null-extending condition; pruning from
-    any of those silently drops rows. (Subqueries are already refused
-    via the multi-SELECT guard, so the first WHERE is the query's one
-    top-level WHERE.) The scope ends at the first depth-0 clause
-    terminator (GROUP/HAVING/ORDER/…), so a HAVING/ORDER expression
-    can never contribute a bound either."""
-    m = _WHERE_KW.search(blanked)
-    if m is None:
-        return None
-    start = m.end()
-    depth = 0
-    i = start
-    while i < len(blanked):
-        ch = blanked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch == ";":
-            # statement terminator ends the scope (review r13): leaving
-            # the ';' inside the scope made the last conjunct fail
-            # _conjunct's scope-end check, silently disabling pruning
-            # for every copy-pasted `…;` query
-            return (start, i)
-        elif depth == 0 and ch.isalpha():
-            t = _WHERE_SCOPE_END.match(blanked, i)
-            if t and (i == 0 or not (blanked[i - 1].isalnum() or blanked[i - 1] in "_.")):
-                return (start, i)
-            while i + 1 < len(blanked) and (
-                blanked[i + 1].isalnum() or blanked[i + 1] in "_."
-            ):
-                i += 1
-        i += 1
-    return (start, len(blanked))
-
-
-_AND_TAIL = re.compile(r"\bAND\s*$", re.IGNORECASE)
-_AND_HEAD = re.compile(r"^\s*AND\b", re.IGNORECASE)
-
-
-def _conjunct(scope: str, start: int, end: int) -> bool:
-    """True if scope[start:end] is a TOP-LEVEL WHERE conjunct: at paren
-    depth 0, preceded by scope-start or AND, followed by scope-end or
-    AND. Anything else — chained comparisons (``__timestamp >= 1000 =
-    false``), function arguments (``coalesce(__timestamp >= 1, x)``),
-    IS TRUE/FALSE wrappers, or ANY parenthesized context (a paren group
-    can itself be an operand: ``c = (b AND __timestamp >= 1)``) — is
-    refused rather than reasoned about. A parenthesized bound just
-    doesn't prune; wrong pruning is silent missing rows."""
-    if scope[:start].count("(") != scope[:start].count(")"):
-        return False  # inside parens (literals are blanked, so counts are code-only)
-    before = scope[:start].rstrip()
-    if before and not _AND_TAIL.search(before):
-        return False
-    after = scope[end:].lstrip()
-    if after and not _AND_HEAD.match(after):
-        return False
-    return True
-
-
-def _comma_join_present(sql: str) -> bool:
-    """True if any FROM clause contains a top-level comma — legacy
-    comma-join syntax (``FROM events e, events e2``). _FROM_JOIN only
-    counts relations introduced by a FROM/JOIN keyword, so a
-    comma-introduced relation would evade both the alias map and the
-    referenced-twice self-join guard: a qualified bound on one alias
-    would prune files the comma alias still needs (silent missing
-    rows). Rather than parse the comma list (and its mixed
-    ``JOIN … ON cond, tbl`` forms), pruning is disabled outright when
-    the syntax appears — no pruning is just slower.
-
-    Scope: from each FROM keyword to the first depth-0 clause
-    terminator (WHERE/GROUP/…), end of string, or an unbalanced ')'
-    (covers ``EXTRACT(MONTH FROM ts)`` — the closing paren of the
-    enclosing call ends that scan before any SELECT-list comma is
-    seen). Commas inside parens (function args, row values,
-    TABLESAMPLE) don't count; quoted strings are skipped."""
-    for m in _FROM_KW.finditer(sql):
-        depth = 0
-        i = m.end()
-        while i < len(sql):
-            ch = sql[i]
-            if ch == "'":
-                j = sql.find("'", i + 1)
-                if j < 0:
-                    return True  # unterminated string: refuse to reason
-                i = j + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    break  # FROM belonged to an enclosing call (EXTRACT)
-            elif depth == 0:
-                if ch == ",":
-                    return True
-                if ch.isalpha():
-                    t = _FROM_SCOPE_END.match(sql, i)
-                    if t:
-                        break
-                    # skip the word to not re-test each letter
-                    while i + 1 < len(sql) and (
-                        sql[i + 1].isalnum() or sql[i + 1] in "_."
-                    ):
-                        i += 1
-            i += 1
-    return False
-
-
 # a parenthesized RELATION (`FROM (events e1 JOIN events e2 ON …)`) —
-# valid Spark SQL whose relations _FROM_JOIN cannot see: FROM is
-# followed by '(' and the next token is a relation, not a subquery
-# keyword. Same hazard class as the legacy comma join (review r13): the
-# invisible relations defeat the self-join reference count, so a
-# qualified bound on one alias prunes the shared view the other alias
-# still reads — silent missing rows — and _plan_cacheable can't pin an
-# unseen temp view's contents. Both refuse outright when the shape
-# appears. Conservatively also matches `IS DISTINCT FROM (expr)` —
-# that query just loses pruning/caching, never rows.
-# the positive lookahead requires a relation-ish first token (identifier
-# or backtick): scope texts arriving here may carry a BLANKED-OUT
-# subquery body (`FROM (        ) t`), which must not read as a paren
-# relation — the derived-table path's own guards govern those.
+# valid Spark SQL whose relations _FROM_JOIN cannot see, so
+# _plan_cacheable can't pin an unseen temp view's contents and refuses
+# the shape. Conservatively also matches `IS DISTINCT FROM (expr)` —
+# that query just loses caching. The positive lookahead requires a
+# relation-ish first token, so `FROM (SELECT …` is not this shape.
 _PAREN_REL = re.compile(
     r"\b(?:FROM|JOIN)\s*\(\s*(?!SELECT\b|VALUES\b|WITH\b)(?=[`A-Za-z_])",
     re.IGNORECASE,
@@ -314,80 +94,7 @@ def _paren_relation_present(sql: str) -> bool:
     return bool(_PAREN_REL.search(sql))
 
 
-def _relations(sql: str) -> tuple[dict[str, str], dict[str, int]]:
-    """One pass over the FROM/JOIN clauses: (alias→table map, table→
-    relation-entry count), keys and values lowercased. An aliased
-    relation is addressable ONLY by its alias (standard SQL); an
-    unaliased one by its (last-segment) name. Map keys claimed by two
-    different tables are dropped — attributing a bound through an
-    ambiguous name could prune the wrong side. The counts feed the
-    self-join guard: a table referenced twice is never pruned."""
-    amap: dict[str, str] = {}
-    counts: dict[str, int] = {}
-    bad: set[str] = set()
-    for m in _FROM_JOIN.finditer(sql):
-        tbl = _rel_name(m.group(1))
-        counts[tbl] = counts.get(tbl, 0) + 1
-        alias = (m.group(2) or "").lower()
-        if alias in _ALIAS_STOPWORDS:
-            alias = ""
-        key = alias or tbl
-        if key in amap and amap[key] != tbl:
-            bad.add(key)
-        amap[key] = tbl
-    for key in bad:
-        del amap[key]
-    return amap, counts
-
-
-def _from_relation_counts(blanked: str) -> dict[str, int]:
-    """Relation-entry counts restricted to TRUE FROM scopes: each FROM
-    keyword to its depth-0 clause terminator. A scope closed by an
-    UNBALANCED ')' belongs to an enclosing call (``EXTRACT(MONTH FROM
-    ts)``) and contributes nothing, and text outside FROM scopes (``a IS
-    NOT DISTINCT FROM b`` in WHERE) is never scanned — _relations over
-    the whole statement counts both as phantom relations, which must not
-    veto unqualified-bound attribution (review r12)."""
-    counts: dict[str, int] = {}
-    for m in _FROM_KW.finditer(blanked):
-        # `IS [NOT] DISTINCT FROM b` is the one bare depth-0 FROM that is
-        # not a relation list (EXTRACT/SUBSTRING/TRIM-style FROMs live
-        # inside parens and end on the unbalanced ')' below)
-        if re.search(r"\bDISTINCT\s*$", blanked[: m.start()], re.IGNORECASE):
-            continue
-        depth = 0
-        i = m.end()
-        end = len(blanked)
-        skip = False
-        while i < len(blanked):
-            ch = blanked[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    skip = True  # function-internal FROM, not a relation list
-                    break
-            elif depth == 0 and ch.isalpha():
-                t = _FROM_SCOPE_END.match(blanked, i)
-                if t and not (blanked[i - 1].isalnum() or blanked[i - 1] in "_."):
-                    end = i
-                    break
-                while i + 1 < len(blanked) and (
-                    blanked[i + 1].isalnum() or blanked[i + 1] in "_."
-                ):
-                    i += 1
-            i += 1
-        if skip:
-            continue
-        _amap, seg_counts = _relations(blanked[m.start() : end])
-        for t2, n in seg_counts.items():
-            counts[t2] = counts.get(t2, 0) + n
-    return counts
-
-
 _WITH_HEAD = re.compile(r"^\s*WITH\b", re.IGNORECASE)
-_RECURSIVE_KW = re.compile(r"\bRECURSIVE\b", re.IGNORECASE)
 _CTE_NAME_AS = re.compile(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", re.IGNORECASE)
 
 
@@ -405,520 +112,186 @@ def _match_paren(blanked: str, open_idx: int) -> int:
     return -1
 
 
-_OR_KW = re.compile(r"\bOR\b", re.IGNORECASE)
+# A statement's time range is derived only for a query (SELECT/WITH)
+# that names the time column; anything else is never analyzed.
+_QUERY_HEAD = re.compile(r"\s*(SELECT|WITH)\b", re.IGNORECASE)
+_TS_TOKEN = re.compile(r"\b__timestamp\b", re.IGNORECASE)
+
+Range = tuple[int | None, int | None]
+_UNBOUNDED: Range = (None, None)
+# `__timestamp <op> literal`: which side of the range the literal bounds
+# (strict comparisons keep the literal — an inclusive, conservative
+# bound); a literal on the left flips the operator
+_LOWER = frozenset({"GreaterThanOrEqual", "GreaterThan"})
+_UPPER = frozenset({"LessThanOrEqual", "LessThan"})
+_FLIP = {
+    "GreaterThanOrEqual": "LessThanOrEqual",
+    "GreaterThan": "LessThan",
+    "LessThanOrEqual": "GreaterThanOrEqual",
+    "LessThan": "GreaterThan",
+    "EqualTo": "EqualTo",
+}
+
+# A text the schema-only relations can't analyze (a `_metadata` column
+# does not resolve on them) is an expected miss, not a query error, but
+# PySpark logs every converted SQL error at ERROR: drop those records
+# while this thread is analyzing.
+_ANALYZING = threading.local()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_ANALYZING, "on", False)
+)
 
 
-def _conjunct_paren_groups(bscope: str) -> list[tuple[int, int]]:
-    """Spans [start, end) of parenthesized groups in a WHERE scope body
-    that are themselves top-level conjuncts (``… AND ( … ) AND …``).
-    Nested parens are skipped wholesale — only depth-0 groups qualify."""
-    out: list[tuple[int, int]] = []
-    i = 0
-    while i < len(bscope):
-        if bscope[i] == "(":
-            close = _match_paren(bscope, i)
-            if close < 0:
-                return out
-            if _conjunct(bscope, i, close + 1):
-                out.append((i, close + 1))
-            i = close + 1
-        else:
-            i += 1
-    return out
+def _table_shape(t: Table) -> tuple:
+    """What a table's schema-only relation is built from."""
+    return (tuple(t.schema.items()), tuple(t.partition_by))
 
 
-def _or_range_envelope(
-    orig: str, blanked: str, gs0: int, gs1: int
-) -> tuple[str | None, int | None, int | None] | None:
-    """Read blanked[gs0:gs1] — a parenthesized conjunct group, parens
-    included — as ``( T OR T [OR T …] )`` where every T is exactly one
-    __timestamp BETWEEN or comparison, all with the SAME qualifier (all
-    unqualified, or all the same alias). Returns (qualifier_or_None,
-    lo, hi) — the branches' interval-UNION ENVELOPE: lo = min of branch
-    lower bounds (None if any branch is unbounded below), hi = max of
-    uppers likewise. The envelope covers every branch (and the gaps
-    between them), so pruning files wholly outside it is safe — a file
-    outside [lo, hi] satisfies NO branch. Returns None for any other
-    shape (the group then stays in the text and the scope's OR refusal
-    applies — conservative).
+def _seq(s) -> list:
+    """A Scala Seq over py4j as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
-    Literal values are re-read from ``orig`` at the matched offsets
-    (epoch_ns('…') timestamps are blanked in the scan text)."""
-    inner_s, inner_e = gs0 + 1, gs1 - 1
-    # unwrap redundant nesting: ``((a OR b))`` / ``( ( a OR b ) )`` — a
-    # body that is ENTIRELY one parenthesized group is the same
-    # conjunct, so peel until the ORs are at depth 0 (r15, VERDICT r14
-    # optional #6; previously such groups refused pruning). Only a
-    # whole-body wrap peels — ``(a OR b) AND (c)`` never matches here.
-    while True:
-        seg = blanked[inner_s:inner_e]
-        ls = len(seg) - len(seg.lstrip())
-        rs = len(seg) - len(seg.rstrip())
-        if ls >= len(seg) or seg.lstrip()[:1] != "(":
-            break
-        open_i = inner_s + ls
-        close = _match_paren(blanked[open_i:], 0)
-        if close < 0 or open_i + close != inner_e - 1 - rs:
-            break
-        inner_s, inner_e = open_i + 1, open_i + close
-    inner = blanked[inner_s:inner_e]
-    # split on top-level ORs (BETWEEN's AND stays inside its branch)
-    cuts: list[int] = []
-    depth = 0
-    for m in _OR_KW.finditer(inner):
-        d = inner[: m.start()].count("(") - inner[: m.start()].count(")")
-        if d == 0:
-            cuts.append(m.start())
-    if not cuts:
-        return None
-    spans: list[tuple[int, int]] = []
-    last = 0
-    for c in cuts:
-        spans.append((last, c))
-        last = c + 2  # len("OR")
-    spans.append((last, len(inner)))
-    quals: set[str | None] = set()
-    lo: int | None = None
-    hi: int | None = None
-    lo_unbounded = hi_unbounded = False
 
-    def _one(seg: str, base: int):
-        """The segment must be EXACTLY one recognized comparison; returns
-        (qual, blo, bhi) with literal offsets re-read from orig, or None."""
-        for pat, kind in (
-            (_TS_BETWEEN_Q, "betq"),
-            (_TS_BOUND_Q, "cmpq"),
-            (_TS_BETWEEN, "bet"),
-            (_TS_BOUND, "cmp"),
-        ):
-            m = pat.search(seg)
-            if m is None:
-                continue
-            if seg[: m.start()].strip() or seg[m.end() :].strip():
-                return None  # extra content in the branch → not our shape
+def _as_long(v) -> int | None:
+    return v if isinstance(v, int) and not isinstance(v, bool) else None
 
-            def lit(g: int) -> int | None:
-                try:
-                    return _ts_literal_ns(orig[base + m.start(g) : base + m.end(g)])
-                except ValueError:
-                    return None
 
-            if kind == "bet":
-                a, b = lit(1), lit(2)
-                return None if a is None or b is None else (None, a, b)
-            if kind == "betq":
-                a, b = lit(2), lit(3)
-                return None if a is None or b is None else (m.group(1).lower(), a, b)
-            q = m.group(1).lower() if kind == "cmpq" else None
-            op = m.group(2 if kind == "cmpq" else 1)
-            v = lit(3 if kind == "cmpq" else 2)
-            if v is None:
-                return None
-            return (q, v, None) if op in (">=", ">") else (q, None, v)
-        return None
+def _long_literal(e) -> int | None:
+    return _as_long(e.value()) if e.nodeName() == "Literal" else None
 
-    for a, b in spans:
-        one = _one(inner[a:b], inner_s + a)
-        if one is None:
-            return None
-        q, blo, bhi = one
-        quals.add(q)
-        if blo is None:
-            lo_unbounded = True
-        else:
-            lo = blo if lo is None else min(lo, blo)
-        if bhi is None:
-            hi_unbounded = True
-        else:
-            hi = bhi if hi is None else max(hi, bhi)
-    if len(quals) != 1:
-        return None  # mixed qualifiers: branches bound different relations
+
+def _intersect(a: Range, b: Range) -> Range:
+    (alo, ahi), (blo, bhi) = a, b
     return (
-        quals.pop(),
-        None if lo_unbounded else lo,
-        None if hi_unbounded else hi,
+        alo if blo is None else blo if alo is None else max(alo, blo),
+        ahi if bhi is None else bhi if ahi is None else min(ahi, bhi),
     )
 
 
-def _scope_bounds(
-    orig: str,
-    blanked: str,
-    canon: dict[str, str],
-    visible_ctes: set[str],
-    sole: str | None = None,
-) -> tuple[dict[str, tuple[int | None, int | None]], dict[str, int]] | None:
-    """Bounds + real-table reference counts for ONE select scope (a CTE
-    body, one derived-table side, or a whole single-SELECT statement —
-    since r14 the ONE extraction path; two real drift bugs were caught in
-    the former copies, PLAN_AUDIT_r13.md).
-
-    Returns ``None`` when the scope's relations can't be trusted (legacy
-    comma-join: its relations are invisible to _FROM_JOIN, so the
-    caller's global reference counting would undercount — the whole
-    statement must refuse pruning). A scope containing unsafe constructs
-    (OR/NOT/CASE/set-ops) or nested SELECTs still reports reference
-    counts — its tables stay visible to the global self-join guard — but
-    contributes no bounds.
-
-    A relation name in ``visible_ctes`` is a CTE reference, not a table
-    read: excluded from counts, and bounds resolving to it are dropped
-    (the CTE's own body already carries any filter that matters).
-
-    ``sole`` is the caller's SINGLE candidate table (set only by the
-    top-level single-SELECT path when ``len(tables) == 1``); it enables
-    two extra unqualified-attribution shapes the scope itself can't
-    justify: a bare fragment with no FROM at all (``WHERE __timestamp >=
-    5``) attributes to ``sole``, and the ``"_"`` sentinel (the
-    single-table convenience wrapper) attributes a ONE-relation scope's
-    unqualified bound regardless of the relation's name."""
-    if _comma_join_present(blanked) or _paren_relation_present(blanked):
-        return None
-    amap, counts = _relations(blanked)
-    real_counts = {
-        t: n for t, n in counts.items() if t not in visible_ctes
-    }
-    bounds: dict[str, tuple[int | None, int | None]] = {}
-    span = _where_scope(blanked)
-    # OR-of-time-ranges (r14, VERDICT r13 #7): a top-level WHERE conjunct
-    # of the exact shape ``( range OR range [OR …] )`` contributes its
-    # interval-union ENVELOPE as a bound — the one disjunction a
-    # dashboard comparing two windows actually writes. Each such group
-    # is EXCISED from the text the _PRUNE_UNSAFE scan sees (its OR is
-    # accounted for by the envelope); any OTHER disjunction/NOT/CASE in
-    # the scope still refuses everything, envelopes included.
-    or_groups: list[tuple[str | None, int | None, int | None]] = []
-    checked = blanked
-    if span is not None:
-        s0, s1 = span
-        for ga, gb in _conjunct_paren_groups(blanked[s0:s1]):
-            env = _or_range_envelope(orig, blanked, s0 + ga, s0 + gb)
-            if env is not None:
-                or_groups.append(env)
-                checked = (
-                    checked[: s0 + ga] + " " * (gb - ga) + checked[s0 + gb :]
-                )
-    if _PRUNE_UNSAFE.search(checked) or len(_SELECT_KW.findall(checked)) > 1:
-        return bounds, real_counts
-    if span is None:
-        return bounds, real_counts
-    s0, s1 = span
-    bscope = blanked[s0:s1]
-
-    def _lit(m: re.Match, g: int) -> str:
-        return orig[s0 + m.start(g) : s0 + m.end(g)]
-
-    def _apply_env(tname: str, lo: int | None, hi: int | None) -> None:
-        # THE one bound-merge rule for this scope (max of los, min of his)
-        # — plain bounds and OR-group envelopes both fold through here so
-        # the merge logic can't drift between the two paths (the same
-        # copy-drift class the r14 consolidation exists to kill)
-        plo, phi = bounds.get(tname, (None, None))
-        if lo is not None:
-            plo = lo if plo is None else max(plo, lo)
-        if hi is not None:
-            phi = hi if phi is None else min(phi, hi)
-        bounds[tname] = (plo, phi)
-
-    def _apply(tname: str, op: str, lit: str) -> None:
-        try:
-            v = _ts_literal_ns(lit)
-        except ValueError:
-            return
-        if op in (">=", ">"):
-            _apply_env(tname, v, None)
-        else:
-            _apply_env(tname, None, v)
-
-    # Unqualified bounds attribute only when the scope reads exactly ONE
-    # relation and it is a real catalog table (or the sole-rules above).
-    # Counted over TRUE FROM scopes (not raw _relations output), so
-    # `EXTRACT(MONTH FROM ts)` / `a IS NOT DISTINCT FROM b` phantom
-    # relations can't veto attribution (review r12) — while real_counts
-    # keeps the raw (over-counting, conservative) tally for the global
-    # self-join guard: a subquery's inner read must still count there.
-    fcounts = _from_relation_counts(blanked)
-    only = None
-    if not fcounts and sole is not None:
-        only = sole.lower()  # bare fragment: no FROM at all
-    elif sum(fcounts.values()) == 1:
-        t = next(iter(fcounts))
-        if t not in visible_ctes and t in canon:
-            only = t
-        elif sole is not None and sole.lower() == "_":
-            only = "_"  # sentinel wrapper: one relation of ANY name
-    if only is not None:
-        # the sole-rule targets may have no relation entry of their own
-        # ("_", bare fragment) — they count as the one reference they are,
-        # or the caller's grefs==1 filter would drop the bound
-        real_counts.setdefault(only, 1)
-        for m in _TS_BOUND.finditer(bscope):
-            if _conjunct(bscope, m.start(), m.end()):
-                _apply(only, m.group(1), _lit(m, 2))
-        for m in _TS_BETWEEN.finditer(bscope):
-            if _conjunct(bscope, m.start(), m.end()):
-                _apply(only, ">=", _lit(m, 1))
-                _apply(only, "<=", _lit(m, 2))
-    for m in _TS_BOUND_Q.finditer(bscope):
-        tbl = amap.get(m.group(1).lower())
-        if (
-            tbl is not None
-            and tbl not in visible_ctes
-            and tbl in canon
-            and counts.get(tbl, 0) == 1
-            and _conjunct(bscope, m.start(), m.end())
-        ):
-            _apply(tbl, m.group(2), _lit(m, 3))
-    for m in _TS_BETWEEN_Q.finditer(bscope):
-        tbl = amap.get(m.group(1).lower())
-        if (
-            tbl is not None
-            and tbl not in visible_ctes
-            and tbl in canon
-            and counts.get(tbl, 0) == 1
-            and _conjunct(bscope, m.start(), m.end())
-        ):
-            _apply(tbl, ">=", _lit(m, 2))
-            _apply(tbl, "<=", _lit(m, 3))
-    # OR-group envelopes: same attribution guards as plain bounds — an
-    # unqualified group needs the single-relation target, a qualified one
-    # resolves through the alias map with the self-join/CTE guards
-    for qual, glo, ghi in or_groups:
-        if glo is None and ghi is None:
-            continue
-        if qual is None:
-            if only is not None:
-                _apply_env(only, glo, ghi)
-        else:
-            tbl = amap.get(qual)
-            if (
-                tbl is not None
-                and tbl not in visible_ctes
-                and tbl in canon
-                and counts.get(tbl, 0) == 1
-            ):
-                _apply_env(tbl, glo, ghi)
-    return bounds, real_counts
-
-
-def _merge_scopes(
-    results, canon: dict[str, str]
-) -> dict[str, tuple[int | None, int | None]]:
-    """Combine per-scope (bounds, reference-counts) pairs into the final
-    per-table bounds: reference counts SUM across scopes, bounds merge
-    conservatively (max lo / min hi), and a table prunes only when it is
-    read by exactly ONE relation entry across the WHOLE statement — two
-    scopes reading the same table is the self-join hazard in another
-    shape (one scope's bound would drop the other scope's rows)."""
-    merged: dict[str, tuple[int | None, int | None]] = {}
-    grefs: dict[str, int] = {}
-    for sbounds, scounts in results:
-        for t, n in scounts.items():
-            grefs[t] = grefs.get(t, 0) + n
-        for t, (lo, hi) in sbounds.items():
-            plo, phi = merged.get(t, (None, None))
-            lo = plo if lo is None else (lo if plo is None else max(lo, plo))
-            hi = phi if hi is None else (hi if phi is None else min(hi, phi))
-            merged[t] = (lo, hi)
-    return {
-        canon[t]: bh
-        for t, bh in merged.items()
-        if grefs.get(t, 0) == 1 and t in canon
-    }
-
-
-def _cte_bounds(
-    sql: str, blanked: str, tables: list[str]
-) -> dict[str, tuple[int | None, int | None]]:
-    """Per-table bounds for the simple CTE family
-    ``WITH a AS (SELECT …), b AS (SELECT …) SELECT …`` — the #1
-    real-user shape the whole-statement multi-SELECT guard used to
-    refuse (the reference prunes by timerange regardless of SQL shape,
-    README.md:115). Each CTE body and the main query are independent
-    select scopes: a bound extracted from a scope attributes to a real
-    table read by THAT scope, and a table is pruned only when it is
-    read by exactly ONE relation entry across the WHOLE statement —
-    two scopes reading the same table is the self-join hazard in CTE
-    clothing (one scope's bound would drop the other scope's rows).
-
-    Refused outright (→ {}): RECURSIVE, a chain that doesn't parse as
-    ``name AS ( … )[, …] SELECT``, the column-list form
-    ``name (cols) AS``, and any scope with a comma-join (its relations
-    evade the reference counting)."""
-    if _RECURSIVE_KW.search(blanked):
-        return {}
-    m = _WITH_HEAD.match(blanked)
-    scopes: list[tuple[int, int]] = []  # [start, end) spans, blanked offsets
-    cte_spans: list[tuple[str, int, int]] = []  # (name, start, end)
-    i = m.end()
-    while True:
-        nm = _CTE_NAME_AS.match(blanked, i)
-        if nm is None:
-            return {}
-        open_idx = nm.end() - 1
-        close = _match_paren(blanked, open_idx)
-        if close < 0:
-            return {}
-        cte_spans.append((nm.group(1).lower(), open_idx + 1, close))
-        i = close + 1
-        while i < len(blanked) and blanked[i].isspace():
-            i += 1
-        if i < len(blanked) and blanked[i] == ",":
-            i += 1
-            continue
-        break
-    # the main query must be a plain SELECT (INSERT/EXPLAIN/… → refuse)
-    if not _SELECT_KW.match(blanked, i):
-        return {}
-    canon = {t.lower(): t for t in tables}
-    visible: set[str] = set()
-    scope_list: list[tuple[int, int, frozenset]] = []
-    for name, a, b in cte_spans:
-        # non-recursive WITH: a CTE's own name is NOT visible in its
-        # body (there it still means the real table), only in LATER
-        # bodies and the main query — matching Spark's resolution
-        scope_list.append((a, b, frozenset(visible)))
-        visible.add(name)
-    scope_list.append((i, len(blanked), frozenset(visible)))
-    results = []
-    for a, b, vis in scope_list:
-        res = _scope_bounds(sql[a:b], blanked[a:b], canon, vis)
-        if res is None:
-            return {}
-        results.append(res)
-    return _merge_scopes(results, canon)
-
-
-_FROM_DERIVED = re.compile(r"\b(?:FROM|JOIN)\s*\(\s*SELECT\b", re.IGNORECASE)
-
-
-def _derived_bounds(
-    sql: str, blanked: str, tables: list[str]
-) -> dict[str, tuple[int | None, int | None]]:
-    """Per-table bounds for the ONE-derived-table family
-    ``SELECT … FROM ( SELECT … WHERE __timestamp >= X ) t …`` — the
-    derived-table spelling of the CTE chain :func:`_cte_bounds` already
-    prunes (the reference prunes by time range regardless of SQL shape,
-    README.md:115). The subquery body and the outer query are two
-    independent select scopes, each analyzed by :func:`_scope_bounds`
-    under the same guards as CTE bodies.
-
-    Soundness: a WHERE conjunct of the subquery filters THAT scope's
-    own table read in every consuming context — files wholly outside
-    the bound contain only rows the scope's WHERE rejects, so the
-    subquery's output (and anything composed on top of it, set-ops and
-    NOT EXISTS included) is byte-identical after pruning. The global
-    reference count (inner + outer scopes summed) keeps the self-join
-    guard: a table read by more than one relation entry anywhere in the
-    statement is never pruned. The derived alias is invisible to
-    _relations (no FROM/JOIN-introduced name), so an alias that shadows
-    a real table name (``FROM (SELECT … FROM orders) events``) can
-    never attribute an outer bound to the real table.
-
-    Refused outright (→ {}): zero or 2+ ``FROM/JOIN ( SELECT`` groups
-    (covers nested derived tables and derived-JOIN-derived), an
-    unterminated group, and any scope with a comma-join."""
-    if not tables:
-        return {}
-    groups: list[tuple[int, int]] = []
-    for m in _FROM_DERIVED.finditer(blanked):
-        open_idx = blanked.index("(", m.start())
-        close = _match_paren(blanked, open_idx)
-        if close < 0:
-            return {}
-        groups.append((open_idx + 1, close))
-    if len(groups) != 1:
-        return {}
-    a, b = groups[0]
-    canon = {t.lower(): t for t in tables}
-    inner = _scope_bounds(sql[a:b], blanked[a:b], canon, frozenset())
-    # the outer scope sees the group's interior as whitespace (offsets
-    # preserved so bound literals still re-read from the original)
-    pad = " " * (b - a)
-    outer = _scope_bounds(
-        sql[:a] + pad + sql[b:], blanked[:a] + pad + blanked[b:], canon, frozenset()
+def _envelope(a: Range, b: Range) -> Range:
+    (alo, ahi), (blo, bhi) = a, b
+    return (
+        None if alo is None or blo is None else min(alo, blo),
+        None if ahi is None or bhi is None else max(ahi, bhi),
     )
-    if inner is None or outer is None:
-        return {}
-    return _merge_scopes((inner, outer), canon)
+
+
+def _fold(e, ts_id: int) -> Range:
+    """Inclusive [lo, hi] of the time attribute (exprId ``ts_id``) over
+    every row that passes the predicate ``e``; a None side is unbounded.
+    ``And`` intersects, ``Or`` takes the envelope, a comparison with a
+    literal or an ``In``/``InSet`` of literals bounds, anything else is
+    unbounded (Catalyst has already pushed NOT inward and folded
+    constants such as ``epoch_ns('…'::TIMESTAMP)``)."""
+
+    def is_ts(x) -> bool:
+        return x.nodeName() == "AttributeReference" and x.exprId().id() == ts_id
+
+    kind = e.nodeName()
+    if kind in ("And", "Or"):
+        merge = _intersect if kind == "And" else _envelope
+        return merge(_fold(e.left(), ts_id), _fold(e.right(), ts_id))
+    if kind in _FLIP:
+        left, right = e.left(), e.right()
+        if not is_ts(left):
+            left, right, kind = right, left, _FLIP[kind]
+        v = _long_literal(right) if is_ts(left) else None
+        if v is None:
+            return _UNBOUNDED
+        if kind in _LOWER:
+            return (v, None)
+        return (None, v) if kind in _UPPER else (v, v)
+    if kind == "In" and is_ts(e.value()):
+        vals = [_long_literal(x) for x in _seq(e.list())]
+    elif kind == "InSet" and is_ts(e.child()):
+        it, vals = e.hset().iterator(), []
+        while it.hasNext():
+            vals.append(_as_long(it.next()))
+    else:
+        return _UNBOUNDED
+    return (min(vals), max(vals)) if vals and None not in vals else _UNBOUNDED
+
+
+def _leaf_range(leaf, conds: list) -> Range:
+    """The range the Filter conditions directly above ``leaf`` allow its
+    ``__timestamp`` (a bigint column; any other type is unbounded)."""
+    if not conds:
+        return _UNBOUNDED
+    idx = leaf.schema().getFieldIndex("__timestamp")
+    if idx.isEmpty():
+        return _UNBOUNDED
+    attr = leaf.output().apply(idx.get())
+    if attr.dataType().typeName() != "long":
+        return _UNBOUNDED
+    ts_id = attr.exprId().id()
+    return reduce(_intersect, (_fold(c, ts_id) for c in conds))
+
+
+def _walk(node, conds: list, leaves: dict[int, str], found: dict[str, list]) -> None:
+    """Collect one range per instance of each schema-only leaf in the
+    optimized plan (subquery plans included). ``conds`` holds the
+    conditions of the Filter chain directly above ``node``."""
+    kind = node.nodeName()
+    if kind == "LogicalRDD":
+        name = leaves.get(node.rdd().id())
+        if name is not None:
+            found.setdefault(name, []).append(_leaf_range(node, conds))
+        return
+    for sub in _seq(node.subqueries()):
+        _walk(sub, [], leaves, found)
+    below = conds + [node.condition()] if kind == "Filter" else []
+    for child in _seq(node.children()):
+        _walk(child, below, leaves, found)
 
 
 def extract_time_bounds_per_table(
-    sql: str, tables: list[str], blanked: str | None = None
+    spark: SparkSession, sql: str, leaves: dict[int, str]
 ) -> dict[str, tuple[int | None, int | None]]:
-    """Best-effort per-table [lo, hi] from literal __timestamp
-    predicates. Bounds must be CONSERVATIVE in both directions:
-    unparseable predicates skip pruning, an unresolvable qualifier skips
-    that bound, and any construct that could make an ANDed bound wrong —
-    OR, set operations, NOT(...), CASE, subqueries, legacy comma-joins
-    — disables pruning entirely (see _PRUNE_UNSAFE and
-    _comma_join_present). Wrong pruning is silent missing rows; no
-    pruning is just slower.
+    """Per-table inclusive ``__timestamp`` range ``{table: (lo, hi)}``
+    (None = unbounded side) that ``sql`` can read, from Catalyst's
+    optimized plan. ``leaves`` maps the RDD id of each table's
+    schema-only relation — registered under the table's name by the
+    caller — to the table name.
 
-    Unqualified bounds attribute only when exactly ONE table is
-    referenced; qualified bounds (alias.__timestamp) resolve through the
-    FROM/JOIN alias map, so a join over two big stores prunes each
-    side's file list.
-
-    Bounds are read from the WHERE clause BODY only (never the SELECT
-    list, ON clauses, or GROUP/HAVING/ORDER tails — a textual
-    comparison there is a projected boolean / join condition / sort
-    key, not a row filter), and each must be a top-level conjunct
-    (:func:`_conjunct`). All keyword scanning runs over literal-blanked
-    text so string data can't move the scope or fabricate bounds.
-
-    A table referenced by MORE THAN ONE relation entry (a self-join:
-    ``events a JOIN events b``) is never pruned: both aliases read the
-    same registered view, so a bound on one alias would silently drop
-    the other alias's rows — and conflicting per-alias bounds would
-    intersect to an empty range that prunes everything.
-
-    ``WITH``-prefixed statements route to :func:`_cte_bounds`: the
-    simple CTE-chain family prunes per scope; everything else about the
-    shape refuses.
-
-    Since r14 every family runs through the SAME scope analyzer
-    (:func:`_scope_bounds`) and merge filter (:func:`_merge_scopes`):
-    the single-SELECT statement is simply a one-scope statement. The
-    former hand-inlined copy drifted twice (review r12's unqualified
-    guard, review r13's parenthesized-relation hole) before being
-    deleted.
-
-    ``blanked``: the caller's already-computed blank_noncode(sql), to
-    avoid re-scanning on the serving hot path (MUST be exactly
-    blank_noncode(sql) — offsets are read back into ``sql``)."""
-    blanked = blanked if blanked is not None else _blank_literals(sql)
-    if _WITH_HEAD.match(blanked):
-        return _cte_bounds(sql, blanked, tables)
-    if len(_SELECT_KW.findall(blanked)) > 1:
-        # multi-SELECT: the one-derived-table family analyzes per scope
-        # (each scope under the same guards); every other shape refuses
-        return _derived_bounds(sql, blanked, tables)
-    canon = {t.lower(): t for t in tables}
-    sole = tables[0] if len(tables) == 1 else None
-    res = _scope_bounds(sql, blanked, canon, frozenset(), sole=sole)
-    if res is None:
+    Each instance of a table in the plan gets the range of the Filter
+    conditions directly above it (after pushdown); the table's range is
+    the envelope of its instances. Sound by construction: every row an
+    instance reads outside its range is dropped by that Filter, so files
+    wholly outside the envelope hold no row the query uses. A table is
+    left out (not pruned) when any instance is unbounded or none was
+    found; the result is ``{}`` when the text does not analyze against
+    the schema-only relations. The statement is analyzed and optimized
+    only, never executed: a ``WITH … INSERT`` runs no command here."""
+    found: dict[str, list[Range]] = {}
+    state = spark._jsparkSession.sessionState()
+    skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+    _ANALYZING.on = True
+    try:
+        plan = state.executePlan(state.sqlParser().parsePlan(sql), skip).optimizedPlan()
+        _walk(plan, [], leaves, found)
+    except (Py4JError, PySparkException):
         return {}
-    return _merge_scopes((res,), canon)
-
-
-def extract_time_bounds(sql: str) -> tuple[int | None, int | None]:
-    """Single-table convenience wrapper over
-    :func:`extract_time_bounds_per_table` (unqualified bounds only)."""
-    return extract_time_bounds_per_table(sql, ["_"]).get("_", (None, None))
+    finally:
+        _ANALYZING.on = False
+    out = {}
+    for name, ranges in found.items():
+        rng = reduce(_envelope, ranges)
+        if rng != _UNBOUNDED:
+            out[name] = rng
+    return out
 
 
 class QueryEngine:
     def __init__(self, spark: SparkSession, catalog: Catalog):
-        import threading
-
         self.spark = spark
         self.catalog = catalog
-        # sql() registers per-query pruned temp views under the BARE table
-        # name; concurrent /query handler threads would otherwise swap each
-        # other's file lists mid-flight (silent missing rows). The lock
-        # covers registration + spark.sql() only — Spark analyzes eagerly,
-        # so the view's file list is captured before the lock releases and
-        # execution/collect proceeds unlocked.
+        # sql() registers per-query schema-only and pruned temp views under
+        # the BARE table name; concurrent /query handler threads would
+        # otherwise swap each other's file lists mid-flight (silent missing
+        # rows). The lock covers registration + analysis only — Spark
+        # analyzes eagerly, so the view's file list is captured before the
+        # lock releases; building the scans and execution/collect proceed
+        # unlocked.
         self._sql_lock = threading.Lock()
         # Bounded LRU of analyzed plans for the /query serving path:
         # (db, rewritten SQL, session tz, per-table pruned FILE LISTS) →
@@ -932,22 +305,22 @@ class QueryEngine:
         # DuckDB re-plans in single-digit ms. bench.py does not route
         # through QueryEngine.sql, so the honest bench still compiles
         # fresh per rep.
-        from collections import OrderedDict
-
         self._plan_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
         self._plan_cache_cap = 64
+        # time ranges of plan-cacheable texts, same bound and flush as the
+        # plan cache: (db, SQL, tz, registry fingerprint, referenced table
+        # schemas) → {table: (lo, hi)}, so a repeat runs no schema-only
+        # analysis. Ranges depend on the text and schemas, not on files.
+        self._bounds_memo: "OrderedDict[tuple, dict]" = OrderedDict()
+        # (db, table) → (schema signature, schema-only DataFrame, RDD id)
+        self._schema_views: dict[tuple[str, str], tuple] = {}
+        # bumped by each SET/RESET run through sql(); a query whose ranges
+        # were derived under an older value is planned again
+        self._conf_gen = 0
         register_dialect(spark)
-        # epoch_ns('…') literals evaluate in the SESSION timezone inside
-        # Catalyst while the pruner parses them as UTC — pin UTC (the
-        # engine's time domain) so both agree; if the session rejects the
-        # conf (locked-down) and sits non-UTC, disable index pruning
-        # rather than prune with mismatched bounds.
         from quackpipe_spark.sources.tables import _ensure_read_confs
 
         _ensure_read_confs(spark)
-        # (tz is re-checked per query — see _prune_ok(); a client can
-        # mutate the session timezone at runtime, even via POST /query
-        # itself, after which UTC-parsed bounds would mismatch Catalyst.)
 
     # time-dependent or nondeterministic expressions: a cached
     # DataFrame's optimized plan is memoized by Spark, so Catalyst's
@@ -972,8 +345,7 @@ class QueryEngine:
     @staticmethod
     def _with_chain_names(blanked: str) -> set[str]:
         """Names DEFINED by the statement's WITH chain (lowered), by
-        walking ``WITH [RECURSIVE] name AS ( …balanced… )[, …]`` exactly
-        like the pruner's _cte_bounds. A bare '<name> AS (' regex also
+        walking ``WITH [RECURSIVE] name AS ( …balanced… )[, …]``. A bare '<name> AS (' regex also
         matched Spark's WINDOW clause (``WINDOW w AS (ORDER BY x)``),
         which defines no relation — a FROM over a session temp view
         named w was wrongly judged pinnable and could serve a stale
@@ -1019,7 +391,7 @@ class QueryEngine:
         from quackpipe_spark.sqltext import blank_noncode
 
         blanked = blanked if blanked is not None else blank_noncode(query)
-        if not re.match(r"\s*(SELECT|WITH)\b", blanked, re.IGNORECASE):
+        if not _QUERY_HEAD.match(blanked):
             return False
         if self._CACHE_UNSAFE.search(blanked) or "parquet.`" in query:
             return False
@@ -1047,18 +419,6 @@ class QueryEngine:
             if name not in catalog_names and name not in local:
                 return False
         return True
-
-    def _prune_ok(self) -> bool:
-        """Time pruning is safe only under a UTC session — checked PER
-        QUERY, not pinned at init: the session timezone is runtime-mutable
-        (a client can SET it through /query), and epoch_ns bound literals
-        evaluate in the session zone inside Catalyst while the pruner
-        parses them as UTC. Mismatched zones would silently drop files."""
-        try:
-            tz = self.spark.conf.get("spark.sql.session.timeZone", "")
-        except Exception:
-            tz = ""
-        return tz in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z")
 
     def table_files(
         self, table: Table, lo: int | None = None, hi: int | None = None
@@ -1112,6 +472,49 @@ class QueryEngine:
             .option("basePath", table.path)
             .parquet(*files)
         )
+
+    def _schema_leaves(self, refs: list[Table]) -> dict[int, str]:
+        """Register each table's schema-only relation (``table_df`` with
+        no files: a LogicalRDD carrying the hive partition columns) under
+        its bare name and map the relation's RDD id to the table name.
+        The relation is built once per table schema. Caller holds
+        ``_sql_lock``."""
+        leaves = {}
+        for t in refs:
+            sig = _table_shape(t)
+            hit = self._schema_views.get((t.database, t.name))
+            if hit is None or hit[0] != sig:
+                df = self.table_df(t, files=[])
+                rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+                hit = self._schema_views[(t.database, t.name)] = (sig, df, rdd_id)
+            hit[1].createOrReplaceTempView(t.name)
+            leaves[hit[2]] = t.name
+        return leaves
+
+    def _time_bounds(
+        self, text_key: tuple | None, query: str, blanked: str, refs: list[Table]
+    ) -> dict[str, tuple[int | None, int | None]]:
+        """Per-table time range of ``query`` (see
+        extract_time_bounds_per_table), memoized under ``text_key`` —
+        set only for plan-cacheable texts, whose relations are all
+        catalog tables or CTEs. Caller holds ``_sql_lock``."""
+        if not (refs and _QUERY_HEAD.match(blanked) and _TS_TOKEN.search(blanked)):
+            return {}
+        mkey = None
+        if text_key is not None:
+            mkey = text_key + (tuple((t.name, _table_shape(t)) for t in refs),)
+            hit = self._bounds_memo.get(mkey)
+            if hit is not None:
+                self._bounds_memo.move_to_end(mkey)
+                return hit
+        bounds = extract_time_bounds_per_table(
+            self.spark, query, self._schema_leaves(refs)
+        )
+        if mkey is not None:
+            self._bounds_memo[mkey] = bounds
+            if len(self._bounds_memo) > self._plan_cache_cap:
+                self._bounds_memo.popitem(last=False)
+        return bounds
 
     # read_parquet(<ARRAY[...] | 'path'> [, key = value ...]) — the
     # reference's scan idiom in both forms (merge_service_fs.go:215:
@@ -1245,7 +648,7 @@ class QueryEngine:
             return name
 
         # read_parquet / read_parquet_mergetree interception matches the
-        # BLANKED view of the query (one scanner with the rewriter/pruner):
+        # BLANKED view of the query (one scanner with the rewriter):
         # a read_parquet('http://…') inside a string literal or a comment
         # is user data / dead text — intercepting it would mutate the
         # literal AND fetch the URL driver-side at registration time (the
@@ -1262,7 +665,7 @@ class QueryEngine:
             query = "".join(out)
         query = rewrite_sql(query)
         # ONE blanked view of the final text, shared by the reference
-        # scan, the SET/RESET check, cacheability, and bound extraction —
+        # scan, the SET/RESET check, cacheability and the time-range gate —
         # each was independently re-blanking the same string on the
         # serving hot path, two of them inside the lock (review r12)
         blanked_q = blank_noncode(query)
@@ -1280,81 +683,83 @@ class QueryEngine:
             for t in self.catalog.tables(db)
             if re.search(rf"\b{re.escape(t.name)}\b", blanked_q, re.IGNORECASE)
         ]
-        # Index pruning applies only when it is provably safe: UTC session
-        # (bound literals parse as UTC), the bound is attributable to ONE
-        # table (unqualified → single referenced table; qualified
-        # alias.__timestamp → resolved per join side), and that table's
-        # index min/max actually track __timestamp (a custom order_by
-        # indexes a different column — comparing time bounds against it
-        # would prune the wrong files).
-        bounds: dict[str, tuple[int | None, int | None]] = {}
-        if self._prune_ok() and refs:
-            bounds = extract_time_bounds_per_table(
-                query, [t.name for t in refs], blanked=blanked_q
-            )
-        with self._sql_lock:
-            per_table: list[tuple[Table, list[str]]] = []
-            for t in refs:
-                tracks_ts = (
-                    t.order_by[0] if t.order_by else "__timestamp"
-                ) == "__timestamp"
-                lo, hi = bounds.get(t.name, (None, None)) if tracks_ts else (None, None)
-                per_table.append((t, self.table_files(t, lo, hi)))
-            key = None
-            # match against the comment-blanked text: '-- note\nSET ...'
-            # still executes the conf change, so it must still flush
-            if re.match(r"\s*(SET|RESET)\b", blanked_q, re.IGNORECASE):
-                # a conf change (ansi.enabled, caseSensitive, …) can alter
-                # the semantics of an already-analyzed plan — the key only
-                # pins the timezone, so flush everything. (Conf mutations
-                # made directly on the SparkSession bypass this engine and
-                # are out of scope.)
-                self._plan_cache.clear()
-            if self._plan_cacheable(
-                query, {t.name.lower() for t in refs}, blanked=blanked_q
-            ):
-                try:
-                    tz = self.spark.conf.get("spark.sql.session.timeZone", "")
-                except Exception:
-                    tz = ""
-                from quackpipe_spark.functions.dialect import registry_fingerprint
-
-                key = (
-                    db,
-                    query,
-                    tz,
+        # match against the comment-blanked text: '-- note\nSET ...'
+        # still executes the conf change, so it must still flush
+        conf_change = re.match(r"\s*(SET|RESET)\b", blanked_q, re.IGNORECASE)
+        cacheable = self._plan_cacheable(
+            query, {t.name.lower() for t in refs}, blanked=blanked_q
+        )
+        while True:
+            with self._sql_lock:
+                gen = self._conf_gen
+                text_key = None
+                if cacheable:
+                    try:
+                        tz = self.spark.conf.get("spark.sql.session.timeZone", "")
+                    except Exception:
+                        tz = ""
                     # dialect/UDF registry content hash: a hot-added or
                     # redefined function in-session must not serve a plan
                     # analyzed against the old binding (VERDICT r11 #5)
-                    registry_fingerprint(),
-                    tuple(
-                        # file-list DIGEST pins the scan (the full tuple held
-                        # every path string — ~100 bytes × 1500 files × 64
-                        # cache entries; an md5 over the sorted list keeps the
-                        # staleness-impossible-by-key property at 32 bytes);
-                        # schema+partition_by pin the empty-relation DataFrame
-                        # shape when no files
-                        (
-                            t.name,
-                            len(files),
-                            hashlib.md5(
-                                "\n".join(sorted(files)).encode()
-                            ).hexdigest(),
-                            tuple(t.schema.items()),
-                            tuple(t.partition_by),
-                        )
-                        for t, files in per_table
-                    ),
-                )
-                hit = self._plan_cache.get(key)
-                if hit is not None:
-                    self._plan_cache.move_to_end(key)
-                    return hit
-            for t, files in per_table:
-                self.table_df(t, files=files).createOrReplaceTempView(t.name)
-            df = self.spark.sql(query)
-            if key is not None:
-                self._plan_cache[key] = df
-                if len(self._plan_cache) > self._plan_cache_cap:
-                    self._plan_cache.popitem(last=False)
-            return df
+                    text_key = (db, query, tz, registry_fingerprint())
+                bounds = self._time_bounds(text_key, query, blanked_q, refs)
+                per_table: list[tuple[Table, list[str]]] = []
+                for t in refs:
+                    # a custom order_by indexes a different column: comparing
+                    # time bounds against its min/max would prune wrong files
+                    tracks_ts = (
+                        t.order_by[0] if t.order_by else "__timestamp"
+                    ) == "__timestamp"
+                    lo, hi = bounds.get(t.name, (None, None)) if tracks_ts else (None, None)
+                    per_table.append((t, self.table_files(t, lo, hi)))
+                key = None
+                if text_key is not None:
+                    key = text_key + (
+                        tuple(
+                            # file-list DIGEST pins the scan (the full tuple held
+                            # every path string — ~100 bytes × 1500 files × 64
+                            # cache entries; an md5 over the sorted list keeps the
+                            # staleness-impossible-by-key property at 32 bytes);
+                            # schema+partition_by pin the empty-relation DataFrame
+                            # shape when no files
+                            (
+                                t.name,
+                                len(files),
+                                hashlib.md5(
+                                    "\n".join(sorted(files)).encode()
+                                ).hexdigest(),
+                                tuple(t.schema.items()),
+                                tuple(t.partition_by),
+                            )
+                            for t, files in per_table
+                        ),
+                    )
+                    hit = self._plan_cache.get(key)
+                    if hit is not None:
+                        self._plan_cache.move_to_end(key)
+                        return hit
+            # a scan over files reads their footers (a Spark job): built
+            # unlocked, so one query's plan-cache miss does not stall the
+            # others
+            views = [(t, self.table_df(t, files=files)) for t, files in per_table]
+            with self._sql_lock:
+                if self._conf_gen != gen:
+                    continue  # a SET/RESET ran meanwhile: ranges may differ
+                for t, view in views:
+                    view.createOrReplaceTempView(t.name)
+                df = self.spark.sql(query)
+                if conf_change:
+                    # a conf change (ansi.enabled, caseSensitive, …) can
+                    # alter the semantics of an already-analyzed plan — the
+                    # keys only pin the timezone, so flush everything and
+                    # send queries that read the old conf round again.
+                    # (Conf mutations made directly on the SparkSession
+                    # bypass this engine and are out of scope.)
+                    self._conf_gen += 1
+                    self._plan_cache.clear()
+                    self._bounds_memo.clear()
+                elif key is not None:
+                    self._plan_cache[key] = df
+                    if len(self._plan_cache) > self._plan_cache_cap:
+                        self._plan_cache.popitem(last=False)
+                return df

@@ -174,7 +174,8 @@ def _split_top(s: str) -> list[str]:
 
 
 def _split_fields(s: str) -> list[str]:
-    """Split the field section on unquoted, unescaped commas."""
+    """Split the field section on unquoted, unescaped commas. An empty
+    last piece (a trailing comma) is kept, so the caller rejects it."""
     out, cur, i, in_quote = [], [], 0, False
     while i < len(s):
         c = s[i]
@@ -192,8 +193,7 @@ def _split_fields(s: str) -> list[str]:
         else:
             cur.append(c)
         i += 1
-    if cur:
-        out.append("".join(cur))
+    out.append("".join(cur))
     return out
 
 
@@ -289,15 +289,14 @@ def _split_top_quoted(s: str) -> list[str]:
 
 def _split_fields_quoted(s: str) -> list[str]:
     """``_split_fields`` for a backslash-free field section: split on
-    commas outside quotes and drop an empty last piece."""
+    commas outside quotes, keeping an empty last piece."""
     out, i = [], 0
     j = _find_unquoted(s, ",")
     while j != -1:
         out.append(s[i:j])
         i = j + 1
         j = _find_unquoted(s, ",", i)
-    if i < len(s):
-        out.append(s[i:])
+    out.append(s[i:])
     return out
 
 
@@ -308,8 +307,7 @@ def parse_line(line: str, precision: str = "ns") -> tuple[str, list[tuple[str, s
 
     - no ``\\`` and no ``"`` (most telemetry): ``str.split`` on spaces
       and commas, which is what the general scanner does without those
-      characters — except that a trailing comma in the field section
-      leaves an empty piece that is rejected here and dropped there;
+      characters;
     - ``"`` but no ``\\`` (string fields): ``_split_top_quoted`` and
       ``_split_fields_quoted`` jump between quotes with ``str.find``
       instead of walking every character;
@@ -325,7 +323,9 @@ def parse_line(line: str, precision: str = "ns") -> tuple[str, list[tuple[str, s
     (unterminated quotes, trailing commas, extra tokens) and compares the
     result or the ``ValueError`` text. The driver HTTP door
     (``parse_lines``) and the distributed parse's per-line fallback both
-    run through here."""
+    run through here. Every route keeps an empty last field piece, so a
+    trailing comma in the field section (``m f=1, 5``) is rejected as
+    ``malformed field ''`` whatever else the line holds."""
     mult = _PRECISION_NS.get(precision)
     if mult is None:
         raise ValueError(f"unknown precision {precision!r}")

@@ -31,3 +31,59 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     yield con
     con.close()
+
+
+# The time-pruning corpus: SQL texts asserted on across the test files
+# run through one helper. Every relation a text may name is a schema-only
+# view with the corpus columns; only the tables a case lists as catalog
+# tables are pruning leaves, the rest stand for session views.
+_CORPUS_RELATIONS = (
+    "events", "ev", "aux", "orders", "other", "t", "u", "a", "b", "ta",
+    "tb", "ticks", "ticks2", "weather", "myview", "m",
+)
+_CORPUS_SCHEMA = (
+    "__timestamp bigint, v bigint, k bigint, x bigint, id bigint, "
+    "event_id bigint, event__timestamp bigint, ts timestamp, a bigint, "
+    "b bigint, c bigint, w bigint, flag boolean, note string, q string, "
+    "`where` bigint, `x'y` string, date date, hour int"
+)
+
+
+@pytest.fixture(scope="session")
+def time_bounds(spark):
+    """``time_bounds(sql, tables, analyzes=True)`` → the per-table
+    ``{table: (lo, hi)}`` that ``QueryEngine.sql`` derives for ``sql``
+    when ``tables`` are its catalog tables: the text is dialect-rewritten
+    and handed to ``extract_time_bounds_per_table`` with the schema-only
+    views registered. ``analyzes`` states whether Spark accepts the text
+    at all, so a ``{}`` expectation never holds only because a column or
+    relation is missing from the corpus schema."""
+    from quackpipe_spark.functions.dialect import register_dialect, rewrite_sql
+    from quackpipe_spark.query import extract_time_bounds_per_table
+
+    register_dialect(spark)
+    state = spark._jsparkSession.sessionState()
+    skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+    views = {}
+    for name in _CORPUS_RELATIONS:
+        df = spark.createDataFrame([], _CORPUS_SCHEMA)
+        views[name] = (df, df._jdf.queryExecution().analyzed().rdd().id())
+
+    def bounds(sql, tables, analyzes=True):
+        sql = rewrite_sql(sql)
+        for name, (df, _rid) in views.items():
+            df.createOrReplaceTempView(name)
+        try:
+            try:  # analyze only: a WITH … INSERT must not run here either
+                state.executePlan(state.sqlParser().parsePlan(sql), skip).assertAnalyzed()
+                ok = True
+            except Exception:
+                ok = False
+            assert ok == analyzes, f"analyzes={ok}: {sql}"
+            leaves = {views[t][1]: t for t in tables if t in views}
+            return extract_time_bounds_per_table(spark, sql, leaves)
+        finally:
+            for name in views:
+                spark.catalog.dropTempView(name)
+
+    return bounds

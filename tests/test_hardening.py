@@ -8,31 +8,29 @@ import threading
 
 import pytest
 
-from quackpipe_spark.query import extract_time_bounds
 
-
-def test_time_bounds_ignore_or_queries():
+def test_time_bounds_ignore_or_queries(time_bounds):
     """ANDing bounds from OR branches prunes to the (often empty)
-    intersection — any OR must disable index pruning entirely."""
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE __timestamp < 100 OR __timestamp > 200"
-    ) == (None, None)
+    intersection — an OR with an unbounded branch must not prune."""
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp < 100 OR __timestamp > 200", ["t"]
+    ) == {}
 
 
-def test_time_bounds_require_exact_unqualified_column():
+def test_time_bounds_require_exact_unqualified_column(time_bounds):
     # a different column that merely ends in __timestamp must not prune
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE event__timestamp >= 500"
-    ) == (None, None)
-    # a qualified predicate binds to one table of a join — the pruner
-    # can't attribute it, so it must not extract
-    assert extract_time_bounds(
-        "SELECT * FROM a JOIN b ON a.k = b.k WHERE a.__timestamp >= 500"
-    ) == (None, None)
+    assert time_bounds(
+        "SELECT * FROM t WHERE event__timestamp >= 500", ["t"]
+    ) == {}
+    # a qualified predicate binds to its own side of a join: only that
+    # table prunes
+    assert time_bounds(
+        "SELECT * FROM a JOIN b ON a.k = b.k WHERE a.__timestamp >= 500", ["a", "b"]
+    ) == {"a": (500, None)}
     # the plain form still prunes
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE __timestamp >= 500 AND __timestamp < 900"
-    ) == (500, 900)
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp >= 500 AND __timestamp < 900", ["t"]
+    ) == {"t": (500, 900)}
 
 
 def test_locked_index_concurrent_writers(tmp_path):
@@ -529,11 +527,11 @@ def test_split_statements_double_quoted_literals_and_nested_comments():
     ]
 
 
-def test_where_scope_excludes_spark_clause_tails():
+def test_where_scope_excludes_spark_clause_tails(time_bounds):
     """SORT BY / DISTRIBUTE BY / CLUSTER BY are Spark clause tails — a
     __timestamp comparison there is a sort/partition key, never a row
     filter, and must not prune."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     assert ex(
         "SELECT * FROM events WHERE v > 0 SORT BY __timestamp >= 99",
@@ -770,12 +768,12 @@ def test_strip_passages_null_text_token_counts(spark):
     assert rows[1]["n_tokens"] == 8
 
 
-def test_double_quoted_literals_protected_everywhere():
+def test_double_quoted_literals_protected_everywhere(time_bounds):
     """Spark parses "…" as a string literal (doubleQuotedIdentifiers off):
     the dialect rewriter must not rewrite count()/read_parquet() inside
     one, and the pruner must not extract a bound fabricated by one."""
     from quackpipe_spark.functions.dialect import rewrite_sql
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     out = rewrite_sql('SELECT count() FROM t WHERE msg = "count()"')
     assert out == 'SELECT count(*) FROM t WHERE msg = "count()"'
@@ -806,7 +804,7 @@ def test_ndjson_batch_cap_splits_before_append():
     assert batches[1].num_rows() == 5
 
 
-def test_backslash_escaped_quotes_protected_everywhere():
+def test_backslash_escaped_quotes_protected_everywhere(time_bounds):
     """Spark's default parser honors backslash escapes in string
     literals: a literal containing \\' must not desync the pruner's
     blanking (fabricated bound → silent missing rows), the dialect
@@ -814,7 +812,7 @@ def test_backslash_escaped_quotes_protected_everywhere():
     statement splitter."""
     from quackpipe_spark.__main__ import split_statements
     from quackpipe_spark.functions.dialect import rewrite_sql
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     q = r"SELECT * FROM ev WHERE note = 'ab\' AND __timestamp >= 400 AND x = \'cd'"
     assert ex(q, ["ev"]) == {}

@@ -55,6 +55,17 @@ def test_malformed_lines_raise():
             parse_line(bad)
 
 
+@pytest.mark.parametrize(
+    "line", ["m f=1, 5", "m,t=a\\ b f=1, 5", 'm s="x", 5', 'm,t=a\\ b s="x", 5']
+)
+def test_trailing_field_comma_rejected_on_every_route(line):
+    """A trailing comma in the field section leaves an empty last field,
+    whichever route parses the line: plain, quoted (a string field) or
+    the general scanner (an escape)."""
+    with pytest.raises(ValueError, match="malformed field ''"):
+        parse_line(line)
+
+
 # -- schema fingerprint invariants (TestGetSchemaId parity) -----------------
 
 def test_schema_id_order_invariant():

@@ -217,7 +217,7 @@ def _outcome(fn, *args):
 @given(line=st.one_of(_quoted_line(), st.text(st.sampled_from('ab"=, 1'), max_size=20)))
 @example(line='m,t=a"b s="x, y=z" 5')  # quote in a tag is literal
 @example(line='m s="open, to the end 5')  # unterminated quote
-@example(line='m s="x",')  # trailing comma dropped
+@example(line='m s="x",')  # trailing comma rejected
 @example(line='m s="x",,n=1 5')  # empty middle piece
 @example(line='m s="x" 5 6')  # extra token
 @example(line='m s="x" "5"')  # bad timestamp

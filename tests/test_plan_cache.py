@@ -167,6 +167,46 @@ def test_cache_is_bounded(qe):
     assert len(qe._plan_cache) <= qe._plan_cache_cap
 
 
+def test_repeat_text_runs_no_schema_only_analysis(qe, monkeypatch):
+    """The time range of a cacheable text is memoized: a repeat runs no
+    schema-only analysis, even when the plan itself misses (new files).
+    A SET flushes the memo with the plan cache; the memo has the plan
+    cache's bound."""
+    import quackpipe_spark.query as Q
+
+    calls = []
+    real = Q.extract_time_bounds_per_table
+
+    def spy(*a, **k):
+        calls.append(a[1])
+        return real(*a, **k)
+
+    monkeypatch.setattr(Q, "extract_time_bounds_per_table", spy)
+    q = "SELECT sum(v) AS s FROM ev WHERE __timestamp >= 15"
+    assert qe.sql(q, db="d").collect()[0]["s"] == 5
+    assert qe.sql(q, db="d").collect()[0]["s"] == 5
+    assert len(calls) == 1
+    qe._ingest.store("d", "ev", {"v": [100], "__timestamp": [40]})
+    qe._ingest.flush()
+    assert qe.sql(q, db="d").collect()[0]["s"] == 105  # plan miss, memo hit
+    assert len(calls) == 1
+    qe.sql("SET spark.sql.ansi.enabled=false", db="d")
+    qe.sql(q, db="d")
+    assert len(calls) == 2
+    # a text the key can't pin (a session view) is analyzed every time
+    qe.spark.createDataFrame([(1,)], "k long").createOrReplaceTempView("pc_side")
+    try:
+        q2 = "SELECT count(*) AS n FROM ev JOIN pc_side ON ev.v = pc_side.k WHERE __timestamp >= 5"
+        qe.sql(q2, db="d")
+        qe.sql(q2, db="d")
+        assert len(calls) == 4
+    finally:
+        qe.spark.catalog.dropTempView("pc_side")
+    for i in range(qe._plan_cache_cap + 8):
+        qe.sql(f"SELECT v + {i} AS v2 FROM ev WHERE __timestamp >= {i}", db="d")
+    assert len(qe._bounds_memo) <= qe._plan_cache_cap
+
+
 def test_tz_change_misses(qe):
     q = "SELECT count(*) AS n FROM ev"
     df1 = qe.sql(q, db="d")
@@ -198,6 +238,36 @@ def test_set_statement_flushes_cache(qe):
     assert qe.sql(q, db="d") is df3
     qe.sql("/* hint */ RESET spark.sql.ansi.enabled", db="d")
     assert qe.sql(q, db="d") is not df3
+
+
+def test_set_between_ranges_and_execution_replans(qe, monkeypatch):
+    """A SET that runs after a query derived its time ranges but before
+    the query executes sends the query round again: ranges derived under
+    the old session zone would prune files the new zone needs."""
+    real = qe.table_df
+    fired = []
+
+    def table_df(t, *a, **k):
+        if not qe._sql_lock.locked() and not fired:  # the unlocked scan build
+            fired.append(1)
+            qe.sql("SET spark.sql.session.timeZone=UTC", db="d")
+        return real(t, *a, **k)
+
+    q = (
+        "SELECT count(*) AS n FROM ev "
+        "WHERE __timestamp >= epoch_ns('1970-01-01 00:00:00'::TIMESTAMP)"
+    )
+    qe.sql("SET spark.sql.session.timeZone=America/New_York", db="d")
+    try:
+        # under New York the bound is 05:00 UTC: every file is pruned
+        assert qe.sql(q, db="d").collect()[0]["n"] == 0
+        qe.sql("SET spark.sql.session.timeZone=America/New_York", db="d")
+        monkeypatch.setattr(qe, "table_df", table_df)
+        assert qe.sql(q, db="d").collect()[0]["n"] == 3
+        assert fired
+    finally:
+        monkeypatch.undo()
+        qe.sql("SET spark.sql.session.timeZone=UTC", db="d")
 
 
 def test_curdate_never_caches(qe):

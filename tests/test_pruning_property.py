@@ -1,10 +1,13 @@
 """Differential property test for time-range file pruning: ANY query the
 pruner touches must return the same rows as the same query with pruning
 disabled. Wrong pruning is silent missing rows — this is the generative
-backstop behind test_query_pruning's example-based cases, covering the
-WHERE-conjunct scoping and the round-9 CTE-chain reach."""
+backstop behind test_query_pruning's example-based cases, covering
+WHERE scoping, CTEs, derived tables, joins, subqueries, set operations
+and the session time zone."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -39,6 +42,16 @@ def store(spark, tmp_path_factory):
             {"k": [i % 7 for i in range(lo, lo + 50)], "__timestamp": list(range(lo, lo + 50))},
         )
         svc.flush()
+    # a day of half-hourly rows in four 6-hour files, for bounds written
+    # as epoch_ns('…'::TIMESTAMP) literals in the session time zone
+    half_hour = 1800 * 10**9
+    for f in range(4):
+        svc.store(
+            "d",
+            "tzev",
+            {"v": list(range(12)), "__timestamp": [(f * 12 + i) * half_hour for i in range(12)]},
+        )
+        svc.flush()
     qe = QueryEngine(spark, cat)
     assert len(qe.table_files(cat.get("d", "ev"))) == 4
     return qe
@@ -46,6 +59,11 @@ def store(spark, tmp_path_factory):
 
 bound_val = st.integers(min_value=-20, max_value=450)
 cmp_op = st.sampled_from([">=", ">", "<", "<="])
+
+
+def _qual(pred: str, alias: str) -> str:
+    """``pred`` with its column qualified by ``alias``."""
+    return re.sub(r"\b(__timestamp|v)\b", rf"{alias}.\1", pred, count=1)
 
 
 @st.composite
@@ -65,7 +83,44 @@ def query(draw):
     p2 = draw(ts_predicate())
     glue = draw(st.sampled_from(["AND", "OR"]))
     where = f"{p1} {glue} {p2}"
-    shape = draw(st.integers(0, 21))
+    shape = draw(st.integers(0, 28))
+    # shapes the SQL-text pruner refused outright; Catalyst bounds them
+    if shape == 22:  # self-join, both sides bounded
+        return (
+            f"SELECT count(*) AS n, sum(a.v) AS s FROM ev a JOIN ev b ON a.k = b.k "
+            f"WHERE {_qual(p1, 'a')} AND {_qual(p2, 'b')}"
+        )
+    if shape == 23:  # CTE self-join
+        return (
+            f"WITH c AS (SELECT * FROM ev WHERE {p1}) "
+            f"SELECT count(*) AS n FROM c x JOIN c y ON x.k = y.k WHERE {_qual(p2, 'y')}"
+        )
+    if shape == 24:  # comma join
+        return (
+            f"SELECT count(*) AS n FROM ev e, aux x WHERE e.k = x.k AND {_qual(p1, 'e')} "
+            f"AND x.__timestamp {draw(cmp_op)} {draw(bound_val)}"
+        )
+    if shape == 25:  # same-table scalar subquery
+        return (
+            f"SELECT count(*) AS n, sum(v) AS s FROM ev "
+            f"WHERE {p1} AND v > (SELECT avg(v) FROM ev WHERE {p2})"
+        )
+    if shape == 26:  # same-table IN subquery
+        return (
+            f"SELECT count(*) AS n, sum(v) AS s FROM ev "
+            f"WHERE {p1} AND k IN (SELECT k FROM ev WHERE {p2})"
+        )
+    if shape == 27:  # IN list (more than 10 values becomes an InSet)
+        vals = draw(st.lists(bound_val, min_size=1, max_size=14))
+        return (
+            f"SELECT count(*) AS n, sum(v) AS s FROM ev "
+            f"WHERE __timestamp IN ({', '.join(map(str, vals))}) {glue} {p1}"
+        )
+    if shape == 28:  # UNION ALL
+        return (
+            f"SELECT count(*) AS n, sum(v) AS s FROM "
+            f"(SELECT v FROM ev WHERE {p1} UNION ALL SELECT v FROM ev WHERE {p2})"
+        )
     if shape == 21:  # redundantly NESTED OR group (r15 unwrap): any depth
         # of whole-body parens peels to the same envelope; non-ts
         # branches must still refuse after peeling
@@ -184,21 +239,52 @@ def query(draw):
     return f"SELECT count(*) AS n FROM ev -- don't\nWHERE {p1}"
 
 
+def _unpruned(store, monkeypatch, q):
+    """``q``'s rows with time pruning switched off. The bounds memo is
+    cleared on both sides, or a repeat would reuse the pruned ranges."""
+    import quackpipe_spark.query as Q
+
+    store._bounds_memo.clear()
+    monkeypatch.setattr(Q, "extract_time_bounds_per_table", lambda *a, **k: {})
+    try:
+        return sorted(map(tuple, store.sql(q, db="d").collect()))
+    finally:
+        monkeypatch.undo()
+        store._bounds_memo.clear()
+
+
 @settings(
-    max_examples=60,
+    max_examples=80,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(q=query())
 def test_pruned_equals_unpruned(store, monkeypatch, q):
-    import quackpipe_spark.query as Q
-
     pruned = sorted(map(tuple, store.sql(q, db="d").collect()))
-    monkeypatch.setattr(
-        Q, "extract_time_bounds_per_table", lambda sql, tables, blanked=None: {}
+    assert pruned == _unpruned(store, monkeypatch, q), q
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    tz=st.sampled_from(["America/New_York", "Asia/Kolkata", "-03:00", "+05:45", "UTC"]),
+    hour=st.integers(0, 23),
+    op=cmp_op,
+)
+def test_pruned_equals_unpruned_under_session_timezone(store, monkeypatch, tz, hour, op):
+    """A SET of the session time zone sent through QueryEngine.sql moves
+    where epoch_ns('…'::TIMESTAMP) bounds fall; pruning must follow the
+    zone the query executes in."""
+    q = (
+        "SELECT count(*) AS n, sum(v) AS s FROM tzev WHERE __timestamp "
+        f"{op} epoch_ns('1970-01-01 {hour:02d}:15:00'::TIMESTAMP)"
     )
+    store.sql(f"SET spark.sql.session.timeZone={tz}", db="d")
     try:
-        unpruned = sorted(map(tuple, store.sql(q, db="d").collect()))
+        pruned = sorted(map(tuple, store.sql(q, db="d").collect()))
+        assert pruned == _unpruned(store, monkeypatch, q), (tz, q)
     finally:
-        monkeypatch.undo()
-    assert pruned == unpruned, q
+        store.sql("SET spark.sql.session.timeZone=UTC", db="d")

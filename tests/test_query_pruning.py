@@ -5,23 +5,28 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quackpipe_spark.query import extract_time_bounds
-
 NS = 10**9
 
 
-def test_extract_literal_bounds():
-    assert extract_time_bounds("SELECT * FROM t WHERE __timestamp >= 100 AND __timestamp < 200") == (100, 200)
-    assert extract_time_bounds("WHERE __timestamp BETWEEN 5 AND 9") == (5, 9)
-    assert extract_time_bounds("SELECT 1") == (None, None)
+def test_extract_literal_bounds(time_bounds):
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp >= 100 AND __timestamp < 200", ["t"]
+    ) == {"t": (100, 200)}
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp BETWEEN 5 AND 9", ["t"]
+    ) == {"t": (5, 9)}
+    # a bare WHERE fragment is not a statement: nothing to analyze
+    assert time_bounds("WHERE __timestamp BETWEEN 5 AND 9", ["t"], analyzes=False) == {}
+    assert time_bounds("SELECT 1", ["t"]) == {}
 
 
-def test_extract_epoch_ns_idiom():
+def test_extract_epoch_ns_idiom(time_bounds):
     # README.md:121 documented form
-    lo, hi = extract_time_bounds(
+    lo, hi = time_bounds(
         "SELECT * FROM weather WHERE __timestamp >= epoch_ns('2024-01-05 00:00:00'::TIMESTAMP) "
-        "AND __timestamp < epoch_ns(TIMESTAMP '2024-01-06 12:30:00')"
-    )
+        "AND __timestamp < epoch_ns(TIMESTAMP '2024-01-06 12:30:00')",
+        ["weather"],
+    )["weather"]
     assert lo == 1704412800 * NS  # 2024-01-05 00:00:00 UTC
     assert hi == 1704544200 * NS  # 2024-01-06 12:30:00 UTC
 
@@ -239,49 +244,57 @@ def test_rewrite_sql_tolerates_options():
     assert out == "SELECT count(*) FROM parquet.`/x/y.parquet`"
 
 
-def test_bounds_disabled_for_non_conjunctive_contexts():
+def test_bounds_disabled_for_non_conjunctive_contexts(time_bounds):
     """Constructs under which an ANDed bound silently loses rows must
     disable pruning entirely: set ops across SELECT scopes, NOT(...)
     negation, CASE expressions, and subqueries."""
-    assert extract_time_bounds(
+    # UNION ALL of two one-sided branches: the envelope is unbounded
+    assert time_bounds(
         "SELECT * FROM t WHERE __timestamp < 100 "
-        "UNION ALL SELECT * FROM t WHERE __timestamp >= 200"
-    ) == (None, None)
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE NOT (__timestamp >= 1000)"
-    ) == (None, None)
-    assert extract_time_bounds(
-        "SELECT CASE WHEN __timestamp >= 50 THEN 'new' ELSE 'old' END FROM t"
-    ) == (None, None)
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE a IN (SELECT a FROM u WHERE __timestamp > 7)"
-    ) == (None, None)
+        "UNION ALL SELECT * FROM t WHERE __timestamp >= 200",
+        ["t"],
+    ) == {}
+    # NOT(x >= 1000) is x < 1000: Catalyst pushes the negation inward
+    assert time_bounds(
+        "SELECT * FROM t WHERE NOT (__timestamp >= 1000)", ["t"]
+    ) == {"t": (None, 1000)}
+    assert time_bounds(
+        "SELECT CASE WHEN __timestamp >= 50 THEN 'new' ELSE 'old' END FROM t", ["t"]
+    ) == {}
+    # the subquery's bound is u's, not t's
+    assert time_bounds(
+        "SELECT * FROM t WHERE a IN (SELECT a FROM u WHERE __timestamp > 7)", ["t"]
+    ) == {}
+    assert time_bounds(
+        "SELECT * FROM t WHERE a IN (SELECT a FROM u WHERE __timestamp > 7)", ["t", "u"]
+    ) == {"u": (7, None)}
     # plain IS NOT NULL must NOT disable pruning (NOT without a group)
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE a IS NOT NULL AND __timestamp >= 100"
-    ) == (100, None)
+    assert time_bounds(
+        "SELECT * FROM t WHERE a IS NOT NULL AND __timestamp >= 100", ["t"]
+    ) == {"t": (100, None)}
 
 
-def test_parenless_not_disables_pruning(spark, tmp_path):
+def test_parenless_not_disables_pruning(spark, tmp_path, time_bounds):
     """NOT binds looser than a comparison: 'NOT __timestamp >= x' inverts
     the bound without parentheses, so any NOT (except IS NOT NULL /
     IS NOT DISTINCT) must disable pruning — applying the bound as a
     positive prune silently drops exactly the rows the query wants."""
-    from quackpipe_spark.query import extract_time_bounds
 
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE NOT __timestamp >= 1000"
-    ) == (None, None)
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE NOT __timestamp BETWEEN 5 AND 9"
-    ) == (None, None)
+    # negated bounds never prune as the positive bound: NOT(x >= 1000)
+    # is x < 1000, and NOT BETWEEN is an OR of two one-sided ranges
+    assert time_bounds(
+        "SELECT * FROM t WHERE NOT __timestamp >= 1000", ["t"]
+    ) == {"t": (None, 1000)}
+    assert time_bounds(
+        "SELECT * FROM t WHERE NOT __timestamp BETWEEN 5 AND 9", ["t"]
+    ) == {}
     # the safe forms still prune
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE __timestamp >= 1000 AND v IS NOT NULL"
-    )[0] == 1000
-    assert extract_time_bounds(
-        "SELECT * FROM t WHERE __timestamp >= 7 AND a IS NOT DISTINCT FROM b"
-    )[0] == 7
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp >= 1000 AND v IS NOT NULL", ["t"]
+    )["t"][0] == 1000
+    assert time_bounds(
+        "SELECT * FROM t WHERE __timestamp >= 7 AND a IS NOT DISTINCT FROM b", ["t"]
+    )["t"][0] == 7
 
 
 def test_mixed_case_table_reference_reregisters_view(spark, tmp_path):
@@ -306,8 +319,8 @@ def test_mixed_case_table_reference_reregisters_view(spark, tmp_path):
     assert qe.sql("SELECT count(*) AS n FROM Weather", db="db").collect()[0]["n"] == 2
 
 
-def test_per_table_bounds_qualified_join():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_per_table_bounds_qualified_join(time_bounds):
+    ex = time_bounds
 
     q = (
         "SELECT a.v, b.v FROM ta a JOIN tb b ON a.v = b.v "
@@ -315,23 +328,34 @@ def test_per_table_bounds_qualified_join():
         "AND b.__timestamp BETWEEN 50 AND 80"
     )
     assert ex(q, ["ta", "tb"]) == {"ta": (100, 200), "tb": (50, 80)}
-    # unaliased relations resolve by their own (last-segment) name
+    # unaliased relations resolve by their own name
     q2 = (
-        "SELECT * FROM db.ta JOIN tb ON ta.v = tb.v "
+        "SELECT * FROM ta JOIN tb ON ta.v = tb.v "
         "WHERE ta.__timestamp >= 7 AND tb.__timestamp < 9"
     )
     assert ex(q2, ["ta", "tb"]) == {"ta": (7, None), "tb": (None, 9)}
-    # unqualified bound in a join is unattributable — no pruning
-    assert ex("SELECT * FROM ta JOIN tb ON ta.v=tb.v WHERE __timestamp >= 5", ["ta", "tb"]) == {}
-    # unknown / unresolvable qualifier: that bound is skipped, others kept
+    # a db-qualified name is not the engine's temp view: Spark rejects it
+    q2db = (
+        "SELECT * FROM db.ta JOIN tb ON ta.v = tb.v "
+        "WHERE ta.__timestamp >= 7 AND tb.__timestamp < 9"
+    )
+    assert ex(q2db, ["ta", "tb"], analyzes=False) == {}
+    # unqualified bound in a join is ambiguous: Spark rejects the text
+    assert ex(
+        "SELECT * FROM ta JOIN tb ON ta.v=tb.v WHERE __timestamp >= 5",
+        ["ta", "tb"],
+        analyzes=False,
+    ) == {}
+    # an unknown qualifier does not resolve: nothing is pruned
     assert ex(
         "SELECT * FROM ta a JOIN tb b ON a.v=b.v WHERE zz.__timestamp >= 5 AND a.__timestamp >= 3",
         ["ta", "tb"],
-    ) == {"ta": (3, None)}
+        analyzes=False,
+    ) == {}
 
 
-def test_per_table_bounds_alias_shadowing_and_ambiguity():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_per_table_bounds_alias_shadowing_and_ambiguity(time_bounds):
+    ex = time_bounds
 
     # an alias that equals ANOTHER table's name must win over the bare
     # table (standard SQL: aliased relations are addressable only by
@@ -340,11 +364,11 @@ def test_per_table_bounds_alias_shadowing_and_ambiguity():
     assert ex(q, ["ta", "tb"]) == {"ta": (5, None)}
     # a name claimed by two different tables is ambiguous → dropped
     q2 = "SELECT * FROM ta x JOIN tb x ON 1=1 WHERE x.__timestamp >= 5"
-    assert ex(q2, ["ta", "tb"]) == {}
+    assert ex(q2, ["ta", "tb"], analyzes=False) == {}
 
 
-def test_per_table_bounds_outer_join_scoping():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_per_table_bounds_outer_join_scoping(time_bounds):
+    ex = time_bounds
 
     # ON-clause bound on the PRESERVED side of a LEFT JOIN does not
     # filter its rows — must not prune
@@ -356,13 +380,18 @@ def test_per_table_bounds_outer_join_scoping():
         "WHERE a.__timestamp >= 100 AND b.__timestamp < 50"
     )
     assert ex(q2, ["ta", "tb"]) == {"ta": (100, None), "tb": (None, 50)}
-    # unqualified single-table: an ON bound under LEFT JOIN is likewise
-    # ignored (the old single-table path would have mis-pruned here)
-    q3 = "SELECT * FROM ta LEFT JOIN _rp_x ON __timestamp >= 100"
+    # the NULL-extended side's ON bound does filter that side's rows
+    q2b = "SELECT * FROM ta a LEFT JOIN tb b ON a.v = b.v AND b.__timestamp >= 100"
+    assert ex(q2b, ["ta", "tb"]) == {"tb": (100, None)}
+    # an ON bound on the preserved side against a session view (not a
+    # catalog table) is likewise ignored
+    q3 = "SELECT * FROM ta LEFT JOIN myview ON ta.__timestamp >= 100"
     assert ex(q3, ["ta"]) == {}
+    q3x = "SELECT * FROM ta LEFT JOIN _rp_x ON __timestamp >= 100"
+    assert ex(q3x, ["ta"], analyzes=False) == {}
 
 
-def test_join_query_prunes_both_tables_files(spark, tmp_path):
+def test_join_query_prunes_both_tables_files(spark, tmp_path, monkeypatch):
     """End-to-end: a two-big-table join with qualified __timestamp bounds
     reads only the overlapping files of EACH side, and returns the same
     rows as the unpruned plan."""
@@ -389,43 +418,49 @@ def test_join_query_prunes_both_tables_files(spark, tmp_path):
     pruned_inputs = df.inputFiles()
     assert len(pruned_inputs) == 2  # one file per side, not 2+2
     got = sorted(r["v"] for r in df.collect())
-    # unpruned truth: same query with bounds the pruner cannot use
-    full = qe.sql(
-        "SELECT a.v AS v FROM pa a JOIN pb b ON a.v = b.v "
-        f"WHERE a.__timestamp + 0 >= {t0 + day} AND b.__timestamp + 0 >= {t0 + day}",
-        db="d",
-    )
+    # unpruned truth: the same query with time pruning switched off
+    import quackpipe_spark.query as Q
+
+    monkeypatch.setattr(Q, "extract_time_bounds_per_table", lambda *a, **k: {})
+    full = qe.sql(q + " ORDER BY v", db="d")
     assert len(full.inputFiles()) == 4
     assert got == sorted(r["v"] for r in full.collect())
 
 
-def test_self_join_never_prunes():
+def test_self_join_never_prunes(time_bounds):
     """Both aliases of a self-joined table read the SAME registered view,
     so per-alias bounds must not prune it: a one-sided bound would drop
     the other alias's rows, and conflicting per-alias bounds would
     intersect to an empty range that prunes every file."""
-    from quackpipe_spark.query import extract_time_bounds_per_table
 
     # one-sided qualified bound on a self-join: no pruning
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
         "SELECT a.v, b.v FROM events a JOIN events b ON a.k = b.k "
         "WHERE a.__timestamp >= 100",
         ["events"],
     ) == {}
     # conflicting per-alias bounds (recent vs historical self-join):
     # must NOT intersect to the impossible (200, 100)
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
         "SELECT * FROM events a JOIN events b ON a.k = b.k "
         "WHERE a.__timestamp >= 200 AND b.__timestamp < 100",
         ["events"],
     ) == {}
-    # unqualified bound with the table referenced twice: also skipped
-    assert extract_time_bounds_per_table(
+    # unqualified bound with the table referenced twice: ambiguous, so
+    # Spark rejects the text
+    assert time_bounds(
         "SELECT * FROM events a JOIN events b USING (k) WHERE __timestamp >= 100",
         ["events"],
+        analyzes=False,
     ) == {}
+    # both sides bounded: the table prunes to the envelope of the two
+    assert time_bounds(
+        "SELECT * FROM events a JOIN events b ON a.k = b.k "
+        "WHERE a.__timestamp BETWEEN 100 AND 150 AND b.__timestamp BETWEEN 300 AND 400",
+        ["events"],
+    ) == {"events": (100, 400)}
     # a distinct second table in the same query still prunes normally
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
         "SELECT * FROM events a JOIN events b ON a.k = b.k "
         "JOIN ticks t ON t.k = a.k "
         "WHERE a.__timestamp >= 100 AND t.__timestamp >= 7",
@@ -433,48 +468,51 @@ def test_self_join_never_prunes():
     ) == {"ticks": (7, None)}
 
 
-def test_comma_join_disables_pruning():
-    """Legacy comma-join relations aren't captured by the FROM/JOIN
-    relation scan, so a comma SELF-join would evade the referenced-twice
-    guard — a qualified bound on one alias would prune files the comma
-    alias still reads (silent missing rows). Any top-level comma in a
-    FROM scope therefore disables pruning outright."""
-    from quackpipe_spark.query import extract_time_bounds_per_table
+def test_comma_join_disables_pruning(time_bounds):
+    """A legacy comma join is a join like any other to Catalyst: a comma
+    SELF-join with a one-sided bound must not prune (the other alias
+    still reads every file), while a bound on a distinct table does."""
 
     # the motivating bug: comma self-join + one-sided qualified bound
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
         "SELECT * FROM events e, events e2 "
         "WHERE e.__timestamp >= 123 AND e.k = e2.k",
         ["events"],
     ) == {}
-    # comma-join over two distinct tables: also conservative (the comma
-    # relation is invisible to the alias map, so nothing is attributable)
-    assert extract_time_bounds_per_table(
+    # comma-join over two distinct tables: the bounded one prunes
+    assert time_bounds(
         "SELECT * FROM events e, ticks t "
         "WHERE e.__timestamp >= 5 AND e.k = t.k",
         ["events", "ticks"],
-    ) == {}
-    # mixed JOIN ... ON cond, tbl — the comma hides after the ON clause
-    assert extract_time_bounds_per_table(
+    ) == {"events": (5, None)}
+    # mixed JOIN ... ON cond, tbl
+    assert time_bounds(
         "SELECT * FROM ticks a JOIN ticks2 b ON a.x = b.x, events e2 "
         "WHERE a.__timestamp >= 5",
         ["ticks", "ticks2", "events"],
-    ) == {}
+    ) == {"ticks": (5, None)}
     # non-FROM commas must NOT disable pruning: SELECT list, EXTRACT's
     # internal FROM, function args, GROUP BY lists
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
+        "SELECT EXTRACT(MONTH FROM ts), coalesce(a, b) FROM events "
+        "WHERE __timestamp >= 1 GROUP BY a, b, ts",
+        ["events"],
+    ) == {"events": (1, None)}
+    # (ts ungrouped: Spark rejects the text)
+    assert time_bounds(
         "SELECT EXTRACT(MONTH FROM ts), coalesce(a, b) FROM events "
         "WHERE __timestamp >= 1 GROUP BY a, b",
         ["events"],
-    ) == {"events": (1, None)}
+        analyzes=False,
+    ) == {}
 
-def test_bounds_only_from_where_clause_body():
+def test_bounds_only_from_where_clause_body(time_bounds):
     """A __timestamp comparison OUTSIDE the WHERE clause body is not a
     row filter: in a SELECT list it's a projected boolean, in ORDER BY
     a sort key, in HAVING a post-aggregation predicate over possibly
     different rows. Extracting a bound from any of those prunes files
     whose rows the query still wants — silent missing rows."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     # the ADVICE repro: projected qualified comparison in a join query
     assert ex(
@@ -506,16 +544,17 @@ def test_bounds_only_from_where_clause_body():
     assert ex("SELECT __timestamp >= 5 FROM events", ["events"]) == {}
 
 
-def test_bounds_require_top_level_conjunct():
+def test_bounds_require_top_level_conjunct(time_bounds):
     """Inside the WHERE body a bound must be a TOP-LEVEL conjunct:
     chained comparisons, function arguments, and parenthesized operand
     groups all change its meaning and must not prune."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
-    # chained comparison: (__timestamp >= 1000) = false selects OLD rows
+    # chained comparison: (__timestamp >= 1000) = false selects OLD rows,
+    # which Catalyst reads as __timestamp < 1000
     assert ex(
         "SELECT * FROM events WHERE __timestamp >= 1000 = false", ["events"]
-    ) == {}
+    ) == {"events": (None, 1000)}
     # function argument
     assert ex(
         "SELECT * FROM events WHERE coalesce(__timestamp >= 1000, true)",
@@ -537,12 +576,11 @@ def test_bounds_require_top_level_conjunct():
     ) == {"events": (5, 9)}
 
 
-def test_string_literals_cannot_move_scope_or_fabricate_bounds():
-    """Keyword scanning runs over literal-blanked text: user data like
-    'WHERE __timestamp >= 1' must neither fabricate a bound nor shift
-    the detected WHERE position; epoch_ns('...') bound literals are
-    still read from the original text."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_string_literals_cannot_move_scope_or_fabricate_bounds(time_bounds):
+    """User data like 'WHERE __timestamp >= 1' inside a string literal
+    is a value, never a bound; epoch_ns('...') literals fold to their
+    nanosecond value."""
+    ex = time_bounds
 
     # a literal containing WHERE + a bound fabricates nothing
     assert ex(
@@ -565,12 +603,12 @@ def test_string_literals_cannot_move_scope_or_fabricate_bounds():
     assert got == {"events": (1704412800 * NS, None)}
 
 
-def test_cte_bounds_simple_chain():
+def test_cte_bounds_simple_chain(time_bounds):
     """WITH x AS (bounded single-table SELECT) SELECT ... — the #1
     real-user shape: bounds inside a CTE body attribute to that body's
     one table (reference prunes by timerange regardless of SQL shape,
     README.md:115)."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     assert ex(
         "WITH recent AS (SELECT * FROM events WHERE __timestamp >= 100) "
@@ -598,11 +636,11 @@ def test_cte_bounds_simple_chain():
     ) == {"events": (10, None), "ticks": (None, 50)}
 
 
-def test_cte_bounds_multi_scope_reads_never_prune():
+def test_cte_bounds_multi_scope_reads_never_prune(time_bounds):
     """A table read by MORE THAN ONE scope (two bodies, or body + main
     subquery) is the self-join hazard in CTE clothing: one scope's
     bound would drop the other scope's rows."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     # body + main both read events
     assert ex(
@@ -633,16 +671,17 @@ def test_cte_bounds_multi_scope_reads_never_prune():
     ) == {"ticks": (7, None)}
 
 
-def test_cte_bounds_shadowing_and_unsafe_scopes():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_cte_bounds_shadowing_and_unsafe_scopes(time_bounds):
+    ex = time_bounds
 
     # CTE shadowing a real table: the main query's `events` is the CTE,
-    # so its bound must NOT prune the real table the body reads
+    # so its bound never prunes the real events — it filters the ticks
+    # rows the body reads
     assert ex(
         "WITH events AS (SELECT k, __timestamp FROM ticks) "
         "SELECT * FROM events WHERE __timestamp >= 5",
         ["events", "ticks"],
-    ) == {}
+    ) == {"ticks": (5, None)}
     # non-recursive self-shadowing: inside the body, `events` is still
     # the REAL table — the body's bound prunes it
     assert ex(
@@ -666,33 +705,34 @@ def test_cte_bounds_shadowing_and_unsafe_scopes():
     ) == {}
 
 
-def test_cte_bounds_refused_shapes():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_cte_bounds_refused_shapes(time_bounds):
+    ex = time_bounds
 
-    # RECURSIVE
+    # RECURSIVE with a body that does not recurse: an ordinary CTE
     assert ex(
         "WITH RECURSIVE r AS (SELECT * FROM events WHERE __timestamp >= 1) "
         "SELECT * FROM r",
         ["events"],
-    ) == {}
-    # column-list form doesn't parse → refuse
+    ) == {"events": (1, None)}
+    # the column-list form is a CTE like any other
     assert ex(
         "WITH r(k) AS (SELECT k FROM events WHERE __timestamp >= 1) "
         "SELECT * FROM r",
         ["events"],
-    ) == {}
-    # comma-join ANYWHERE poisons the whole statement (its relations
-    # evade reference counting)
+    ) == {"events": (1, None)}
+    # a comma join in the main query: the CTE body still prunes
     assert ex(
         "WITH a AS (SELECT * FROM events WHERE __timestamp >= 10) "
         "SELECT * FROM a, ticks WHERE a.k = ticks.k",
         ["events", "ticks"],
-    ) == {}
-    # main that isn't a plain SELECT
+    ) == {"events": (10, None)}
+    # main that isn't a plain SELECT: analyzed without running, and an
+    # insert into the engine's view does not analyze
     assert ex(
         "WITH a AS (SELECT * FROM events WHERE __timestamp >= 10) "
         "INSERT INTO t SELECT * FROM a",
         ["events"],
+        analyzes=False,
     ) == {}
     # 'WITH' inside a string literal is data, not a CTE — normal path
     assert ex(
@@ -701,7 +741,7 @@ def test_cte_bounds_refused_shapes():
     ) == {"events": (4, None)}
 
 
-def test_cte_query_prunes_files_end_to_end(spark, tmp_path):
+def test_cte_query_prunes_files_end_to_end(spark, tmp_path, time_bounds):
     """A CTE-bounded query reads only the overlapping files and returns
     the same rows as the unpruned plan."""
     from quackpipe_spark.catalog import Catalog
@@ -728,9 +768,8 @@ def test_cte_query_prunes_files_end_to_end(spark, tmp_path):
     got = qe.sql(q, db="d").collect()[0]["s"]
     assert got == 3
     # the registered view for ev held ONE file during that query
-    from quackpipe_spark.query import extract_time_bounds_per_table
 
-    bounds = extract_time_bounds_per_table(q, ["ev"])
+    bounds = time_bounds(q, ["ev"])
     assert bounds == {"ev": (t0 + 86_000 * NS, None)}
     assert len(qe.table_files(tbl, *bounds["ev"])) == 1
     # unpruned result identical
@@ -741,11 +780,11 @@ def test_cte_query_prunes_files_end_to_end(spark, tmp_path):
     )
 
 
-def test_derived_table_bounds_prune():
+def test_derived_table_bounds_prune(time_bounds):
     """round-10: `FROM (SELECT … WHERE __timestamp >= X) t` prunes like
     the CTE spelling — the reference prunes by time range regardless of
     SQL shape (README.md:115)."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     assert ex(
         "SELECT count(*) AS n FROM "
@@ -767,21 +806,25 @@ def test_derived_table_bounds_prune():
     ) == {"events": (7, None)}
 
 
-def test_derived_table_bounds_refused_shapes():
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_derived_table_bounds_refused_shapes(time_bounds):
+    """Derived-table shapes the SQL-text pruner refused: Catalyst pushes
+    each subquery's filter to its own scan, so all but the unsound ones
+    (a table also read unbounded, a disjunction with a non-time branch)
+    now prune."""
+    ex = time_bounds
 
-    # nested derived tables → two FROM-( groups → refuse
+    # nested derived tables
     assert ex(
         "SELECT * FROM (SELECT * FROM "
         "(SELECT * FROM events WHERE __timestamp >= 5) u) t",
         ["events"],
-    ) == {}
-    # two derived tables → refuse
+    ) == {"events": (5, None)}
+    # two derived tables
     assert ex(
         "SELECT * FROM (SELECT k FROM events WHERE __timestamp >= 5) a "
         "JOIN (SELECT k FROM orders WHERE __timestamp >= 5) b ON a.k = b.k",
         ["events", "orders"],
-    ) == {}
+    ) == {"events": (5, None), "orders": (5, None)}
     # same table read by inner AND outer → self-join hazard → no prune
     assert ex(
         "SELECT count(*) AS n FROM "
@@ -789,43 +832,44 @@ def test_derived_table_bounds_refused_shapes():
         "JOIN events e ON t.k = e.k",
         ["events"],
     ) == {}
-    # alias shadowing a real table name: outer bound must NOT attribute
-    # to the real table through the alias
+    # alias shadowing a real table name: the outer bound filters the
+    # orders rows behind the alias, never the real events table
     assert ex(
         "SELECT * FROM (SELECT * FROM orders WHERE k = 1) events "
         "WHERE events.__timestamp >= 5",
         ["events", "orders"],
-    ) == {}
-    # unqualified OUTER bound never attributes through the derived wall
+    ) == {"orders": (5, None)}
+    # an OUTER bound pushes through the derived table to its scan
     assert ex(
         "SELECT * FROM (SELECT * FROM events) t WHERE __timestamp >= 5",
         ["events"],
-    ) == {}
+    ) == {"events": (5, None)}
     # unsafe construct INSIDE the subquery refuses its bounds
     assert ex(
         "SELECT * FROM "
         "(SELECT * FROM events WHERE __timestamp >= 5 OR k = 1) t",
         ["events"],
     ) == {}
-    # IN (SELECT …) is not a derived table — still refused outright
+    # IN (SELECT …): the outer table prunes, the unbounded subquery
+    # table does not
     assert ex(
         "SELECT * FROM events WHERE __timestamp >= 5 "
         "AND k IN (SELECT k FROM orders)",
         ["events", "orders"],
-    ) == {}
-    # comma-join anywhere still disables everything
+    ) == {"events": (5, None)}
+    # a comma join next to the derived table
     assert ex(
         "SELECT * FROM (SELECT * FROM events WHERE __timestamp >= 5) t, orders",
         ["events", "orders"],
-    ) == {}
+    ) == {"events": (5, None)}
 
 
-def test_derived_query_prunes_files_end_to_end(spark, tmp_path):
+def test_derived_query_prunes_files_end_to_end(spark, tmp_path, time_bounds):
     """The derived-table spelling reads only the overlapping files and
     matches the unpruned plan."""
     from quackpipe_spark.catalog import Catalog
     from quackpipe_spark.ingest import IngestService
-    from quackpipe_spark.query import QueryEngine, extract_time_bounds_per_table
+    from quackpipe_spark.query import QueryEngine
 
     NS = 10**9
     cat = Catalog(str(tmp_path / "root"))
@@ -844,7 +888,7 @@ def test_derived_query_prunes_files_end_to_end(spark, tmp_path):
         f"(SELECT * FROM ev WHERE __timestamp >= {t0 + 86_000 * NS}) recent"
     )
     assert qe.sql(q, db="d").collect()[0]["s"] == 3
-    bounds = extract_time_bounds_per_table(q, ["ev"])
+    bounds = time_bounds(q, ["ev"])
     assert bounds == {"ev": (t0 + 86_000 * NS, None)}
     assert len(qe.table_files(tbl, *bounds["ev"])) == 1
     assert (
@@ -854,12 +898,12 @@ def test_derived_query_prunes_files_end_to_end(spark, tmp_path):
     )
 
 
-def test_derived_table_bounds_nested_contexts():
+def test_derived_table_bounds_nested_contexts(time_bounds):
     """A subquery's own WHERE conjunct filters THAT scope's table read in
     every consuming context — pruned files contain only rows the scope's
     WHERE rejects, so the scope's output (and anything composed on top,
     EXISTS and set-ops included) is identical after pruning."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     # derived inside EXISTS: still prunes the inner table
     assert ex(
@@ -926,12 +970,11 @@ def test_rp_interception_ignores_literals_and_comments(spark, tmp_path):
     assert got[0]["n"] == 2
 
 
-def test_unified_scope_analyzer_r14_semantics():
-    """Round-14 consolidation: the single-SELECT path runs through
-    _scope_bounds/_merge_scopes — one extraction path. Pins the two
-    intentionally-improved (strictly safe) attributions the unification
-    brought, plus the preserved sentinel/bare-fragment shapes."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+def test_unified_scope_analyzer_r14_semantics(time_bounds):
+    """Attribution pins carried over from the SQL-text pruner: a bound
+    reaches only the relation it filters, a session view is never a
+    pruning target, and a bare WHERE fragment is not a statement."""
+    ex = time_bounds
 
     # MULTI-candidate table list + a FROM reading exactly one of them:
     # the unqualified bound can only bind to that one relation, so it now
@@ -948,12 +991,15 @@ def test_unified_scope_analyzer_r14_semantics():
         "WHERE __timestamp >= 100) SELECT * FROM a",
         ["events"],
     ) == {"events": (100, None)}
-    # preserved: bare fragment, sentinel wrapper, self-join refusal
-    assert ex("WHERE __timestamp >= 5", ["_"]) == {"_": (5, None)}
-    assert ex("WHERE __timestamp >= 5", ["events"]) == {"events": (5, None)}
+    # bare fragments and unknown relations do not analyze: no pruning
+    assert ex("WHERE __timestamp >= 5", ["_"], analyzes=False) == {}
+    assert ex("WHERE __timestamp >= 5", ["events"], analyzes=False) == {}
     assert ex(
-        "SELECT * FROM anything WHERE __timestamp BETWEEN 3 AND 9", ["_"]
-    ) == {"_": (3, 9)}
+        "SELECT * FROM anything WHERE __timestamp BETWEEN 3 AND 9", ["_"], analyzes=False
+    ) == {}
+    assert ex(
+        "SELECT * FROM t WHERE __timestamp BETWEEN 3 AND 9", ["t"]
+    ) == {"t": (3, 9)}
     assert (
         ex(
             "SELECT * FROM ta a JOIN ta b ON a.k = b.k "
@@ -964,12 +1010,13 @@ def test_unified_scope_analyzer_r14_semantics():
     )
 
 
-def test_or_of_time_ranges_envelope_r14():
+def test_or_of_time_ranges_envelope_r14(time_bounds):
     """VERDICT r13 #7: a top-level conjunct of the exact shape
     ``( range OR range [OR ...] )`` prunes by its interval-union ENVELOPE
     (min lo, max hi) — a file outside the envelope satisfies no branch.
-    Anything else about an OR still refuses."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    An OR with an unbounded branch (another column, the other join
+    side) does not prune."""
+    ex = time_bounds
 
     # two BETWEEN windows: envelope spans both (and the gap — conservative)
     assert ex(
@@ -1031,18 +1078,18 @@ def test_or_of_time_ranges_envelope_r14():
         "OR __timestamp BETWEEN 3 AND 4) OR v = 1",
         ["ev"],
     ) == {}
-    # a second, non-envelopable OR elsewhere poisons the scope
+    # a second OR over other columns is unbounded and intersects away
     assert ex(
         "SELECT * FROM ev WHERE (__timestamp BETWEEN 1 AND 2 "
         "OR __timestamp BETWEEN 3 AND 4) AND (v = 1 OR k = 2)",
         ["ev"],
-    ) == {}
-    # conjunction inside a branch: not the exact shape
+    ) == {"ev": (1, 4)}
+    # a conjunction inside a branch folds to that branch's range
     assert ex(
         "SELECT * FROM ev WHERE (__timestamp >= 1 AND __timestamp <= 2 "
         "OR __timestamp BETWEEN 3 AND 4)",
         ["ev"],
-    ) == {}
+    ) == {"ev": (1, 4)}
     # self-join: envelopes obey the referenced-twice guard
     assert ex(
         "SELECT * FROM ev a JOIN ev b ON a.k = b.k "
@@ -1060,13 +1107,13 @@ def test_or_of_time_ranges_envelope_r14():
     assert got["ev"][1] == 1677715200 * 10**9
 
 
-def test_or_envelope_unwraps_redundant_nesting_r15():
+def test_or_envelope_unwraps_redundant_nesting_r15(time_bounds):
     """VERDICT r14 optional #6: a conjunct group whose WHOLE body is
     itself one parenthesized group peels before the OR split, so
     ``((a OR b))`` (any depth, any spacing) prunes by the same envelope
     as ``(a OR b)``. Only whole-body wraps peel — a group whose parens
     are operand structure still refuses."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     assert ex(
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 100 AND 200 "
@@ -1086,20 +1133,104 @@ def test_or_envelope_unwraps_redundant_nesting_r15():
         "AND a.__timestamp >= 7",
         ["ev", "aux"],
     ) == {"ev": (1, 9), "aux": (7, None)}
-    # NOT the whole body: '( (a OR b) AND v = 1 )' must still refuse
+    # not a whole-body wrap: '( (a OR b) AND v = 1 )' is the envelope
+    # ANDed with an unbounded conjunct
     assert ex(
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2 "
         "OR __timestamp BETWEEN 3 AND 4) AND v = 1)",
         ["ev"],
-    ) == {}
-    # parenthesized BRANCHES are not the exact one-comparison shape
+    ) == {"ev": (1, 4)}
+    # parenthesized branches
     assert ex(
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2) "
         "OR (__timestamp BETWEEN 3 AND 4))",
         ["ev"],
-    ) == {}
+    ) == {"ev": (1, 4)}
     # nested wrap with a non-ts branch still refuses after peeling
     assert ex(
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2 OR v >= 5))",
         ["ev"],
     ) == {}
+
+
+def test_commands_through_sql_take_effect_once(spark, tmp_path):
+    """The time-range analysis never runs a statement: SET, CREATE TEMP
+    VIEW and INSERT sent through QueryEngine.sql each take effect once,
+    the WITH … INSERT form (which is analyzed, being a WITH statement
+    naming __timestamp) included."""
+    import quackpipe_spark.query as Q
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine
+
+    cat = Catalog(str(tmp_path / "root"))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    svc.store("d", "ev", {"v": [1, 2, 3], "__timestamp": [10, 20, 30]})
+    svc.flush()
+    qe = QueryEngine(spark, cat)
+    calls = []
+    real = Q.extract_time_bounds_per_table
+
+    def spy(*a, **k):
+        calls.append(a[1])
+        return real(*a, **k)
+
+    Q.extract_time_bounds_per_table = spy
+    spark.sql(f"CREATE TABLE once_sink (v BIGINT) USING parquet LOCATION '{tmp_path}/sink'")
+    try:
+        qe.sql("SET quackpipe.test.note=__timestamp", db="d")
+        assert spark.conf.get("quackpipe.test.note") == "__timestamp"
+        # run twice, CREATE TEMP VIEW (no OR REPLACE) raises "already exists"
+        qe.sql("CREATE TEMP VIEW once_v AS SELECT * FROM ev WHERE __timestamp >= 1", db="d")
+        assert spark.sql("SELECT count(*) AS n FROM once_v").collect()[0]["n"] == 3
+        qe.sql("INSERT INTO once_sink SELECT v FROM ev WHERE __timestamp >= 15", db="d")
+        assert calls == []  # none of the three is a query
+        # an aggregate yields a row even over the empty schema-only
+        # relation, so running the statement during analysis would show
+        qe.sql(
+            "WITH a AS (SELECT count(*) AS v FROM ev WHERE __timestamp >= 25) "
+            "INSERT INTO once_sink SELECT v FROM a",
+            db="d",
+        )
+        assert len(calls) == 1
+        rows = sorted(r["v"] for r in spark.sql("SELECT v FROM once_sink").collect())
+        assert rows == [1, 2, 3]
+    finally:
+        Q.extract_time_bounds_per_table = real
+        spark.sql("DROP TABLE IF EXISTS once_sink")
+        spark.catalog.dropTempView("once_v")
+        spark.conf.unset("quackpipe.test.note")
+
+
+def test_metadata_column_query_matches_unpruned(spark, tmp_path, monkeypatch):
+    """`_metadata` does not resolve on the schema-only relations, so the
+    analysis raises and the table is not pruned — the query fails or
+    answers exactly as it does with pruning off (the engine's views are
+    DataFrame views, which do not expose `_metadata` either)."""
+    import quackpipe_spark.query as Q
+    from pyspark.errors import AnalysisException
+
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine, extract_time_bounds_per_table
+
+    cat = Catalog(str(tmp_path / "root"))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    for ts in (10, 20):
+        svc.store("d", "ev", {"v": [ts], "__timestamp": [ts]})
+        svc.flush()
+    qe = QueryEngine(spark, cat)
+    q = "SELECT _metadata.file_path AS f FROM ev WHERE __timestamp >= 15"
+    with qe._sql_lock:
+        leaves = qe._schema_leaves([cat.get("d", "ev")])
+    assert extract_time_bounds_per_table(spark, q, leaves) == {}
+
+    def outcome():
+        try:
+            return sorted(r["f"] for r in qe.sql(q, db="d").collect())
+        except AnalysisException as e:
+            return e.getCondition()
+
+    pruned = outcome()
+    monkeypatch.setattr(Q, "extract_time_bounds_per_table", lambda *a, **k: {})
+    assert outcome() == pruned

@@ -2,21 +2,20 @@
 backtick identifiers lex (quote parity can't desync), time-dependent
 dialect sugar and WINDOW-clause names never cache, reference detection
 ignores literals/comments, read_parquet interception anchors on a word
-boundary and unfolds ''-escapes, and the unqualified-bound guard matches
-_scope_bounds' stricter rule."""
+boundary and unfolds ''-escapes, and an unqualified bound over two
+relations prunes nothing."""
 
 from __future__ import annotations
 
 import pytest
 
-from quackpipe_spark.query import extract_time_bounds_per_table
 from quackpipe_spark.sqltext import blank_noncode, scan_segments
 
 
 # ------------------------------------------------------------- sqltext
 
 
-def test_backtick_apostrophe_cannot_desync_quote_parity():
+def test_backtick_apostrophe_cannot_desync_quote_parity(time_bounds):
     """The review's confirmed repro: an apostrophe inside a backtick
     identifier started a phantom literal, hiding a real OR and exposing
     literal contents as code — the pruner fabricated a bound under a
@@ -25,13 +24,13 @@ def test_backtick_apostrophe_cannot_desync_quote_parity():
         "SELECT * FROM events WHERE `x'y` = 'p' "
         "OR q = ' AND __timestamp >= 100 AND z = '"
     )
-    assert extract_time_bounds_per_table(q, ["events"]) == {}
+    assert time_bounds(q, ["events"]) == {}
     b = blank_noncode(q)
     assert "OR" in b  # the real OR is visible as code
     assert "__timestamp" not in b  # the literal's contents are blanked
 
 
-def test_backtick_ident_lexed_and_weird_contents_blanked():
+def test_backtick_ident_lexed_and_weird_contents_blanked(time_bounds):
     kinds = [k for k, _a, _b in scan_segments("SELECT `a``b;c` FROM t")]
     assert "ident" in kinds
     b = blank_noncode("SELECT `a;b` FROM t; SELECT 2")
@@ -42,7 +41,7 @@ def test_backtick_ident_lexed_and_weird_contents_blanked():
     # an identifier NAMED like a bound cannot fabricate one
     q = "SELECT `__timestamp >= 100` FROM events"
     assert "__timestamp" not in blank_noncode(q)
-    assert extract_time_bounds_per_table(q, ["events"]) == {}
+    assert time_bounds(q, ["events"], analyzes=False) == {}
 
 
 def test_statement_split_ignores_semicolon_in_backticks():
@@ -148,49 +147,50 @@ def test_rewrite_sql_unfolds_quote_escapes_in_paths():
 # ------------------------------------------------- unqualified bounds
 
 
-def test_unqualified_bound_refuses_two_relation_scope():
+def test_unqualified_bound_refuses_two_relation_scope(time_bounds):
     """`FROM events JOIN myview` has TWO relations in scope: an
-    unqualified __timestamp could bind to either, so no pruning — the
-    main path had drifted looser than _scope_bounds (review r12)."""
+    unqualified __timestamp could bind to either, so Spark rejects the
+    text and nothing is pruned."""
     q = "SELECT * FROM events e JOIN myview v ON e.id = v.id WHERE __timestamp >= 100"
-    assert extract_time_bounds_per_table(q, ["events"]) == {}
-    # qualified bounds still attribute through the alias map
+    assert time_bounds(q, ["events"], analyzes=False) == {}
+    # a qualified bound prunes its own relation
     q2 = "SELECT * FROM events e JOIN myview v ON e.id = v.id WHERE e.__timestamp >= 100"
-    assert extract_time_bounds_per_table(q2, ["events"]) == {"events": (100, None)}
-    # the single-relation and bare-fragment shapes keep pruning
-    assert extract_time_bounds_per_table(
+    assert time_bounds(q2, ["events"]) == {"events": (100, None)}
+    # the single-relation shape keeps pruning; a bare fragment is no
+    # statement
+    assert time_bounds(
         "SELECT * FROM events WHERE __timestamp >= 100", ["events"]
     ) == {"events": (100, None)}
-    assert extract_time_bounds_per_table("WHERE __timestamp >= 5", ["_"]) == {
-        "_": (5, None)
-    }
+    assert time_bounds("WHERE __timestamp >= 5", ["_"], analyzes=False) == {}
     # a sole NON-catalog relation must not inherit the bound either
     assert (
-        extract_time_bounds_per_table(
+        time_bounds(
             "SELECT * FROM myview WHERE __timestamp >= 100", ["events"]
         )
         == {}
     )
 
 
-def test_backticked_relations_count_and_pin(qe):
+def test_backticked_relations_count_and_pin(qe, time_bounds):
     """Backtick-quoted relations are visible to the relation scan (review
     r12 follow-up): a backticked second relation still defeats unqualified
     attribution, a plain-word backticked catalog table behaves like the
     bare word, and a backticked unknown view is never judged cacheable."""
     # the follow-up repro: backticked join partner must veto the bound
     q = "SELECT * FROM events JOIN `myview` v ON events.id = v.id WHERE __timestamp >= 100"
-    assert extract_time_bounds_per_table(q, ["events"]) == {}
+    assert time_bounds(q, ["events"], analyzes=False) == {}
     q2 = "SELECT * FROM `events` JOIN `myview` v ON 1=1 WHERE __timestamp >= 100"
-    assert extract_time_bounds_per_table(q2, ["events"]) == {}
+    assert time_bounds(q2, ["events"], analyzes=False) == {}
     # plain-word backticked single relation = the bare word
-    assert extract_time_bounds_per_table(
+    assert time_bounds(
         "SELECT * FROM `events` WHERE __timestamp >= 100", ["events"]
     ) == {"events": (100, None)}
-    # a weird-content backticked relation is opaque: counts, never attributes
+    # a weird-content backticked relation is no catalog table
     assert (
-        extract_time_bounds_per_table(
-            "SELECT * FROM `my view` WHERE __timestamp >= 100", ["events"]
+        time_bounds(
+            "SELECT * FROM `my view` WHERE __timestamp >= 100",
+            ["events"],
+            analyzes=False,
         )
         == {}
     )

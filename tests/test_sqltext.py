@@ -55,10 +55,10 @@ def test_blank_noncode_unterminated_tokens():
     assert blank_noncode(r"x = 'a\'b' AND y") == "x = '    ' AND y"
 
 
-def test_comments_cannot_fabricate_pruning_bounds():
+def test_comments_cannot_fabricate_pruning_bounds(time_bounds):
     """ADVICE(high) repro: a commented-out time filter must contribute
     NO bound (a fabricated bound prunes files → silent missing rows)."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     ns = 1750000000000000000
     assert ex(
@@ -82,11 +82,11 @@ def test_comments_cannot_fabricate_pruning_bounds():
     ) == {"events": (7, None)}
 
 
-def test_comment_apostrophe_does_not_desync_pruner():
+def test_comment_apostrophe_does_not_desync_pruner(time_bounds):
     """``-- don't`` must not flip quote parity: the literal after it is
     still a literal (no fabricated bound), and a real bound after it is
     still code."""
-    from quackpipe_spark.query import extract_time_bounds_per_table as ex
+    ex = time_bounds
 
     assert ex(
         "SELECT * FROM events -- don't\n"
