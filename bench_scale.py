@@ -119,7 +119,7 @@ def prune_stress(n_files: int) -> dict:
         ts = []
         for _ in range(5):
             qe._plan_cache.clear()
-            qe._bounds_memo.clear()
+            qe._judgments.clear()
             if disable_prune:
                 import quackpipe_spark.query as Q
 

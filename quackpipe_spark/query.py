@@ -8,15 +8,28 @@ range**, then execute the SQL against that file list. Two pruning layers:
    ``__timestamp`` range selects only the files whose [min_time,
    max_time] overlap (the reference's "resolve data location based on
    database, table and timerange", README.md:115). At 100 TB this keeps
-   the Spark file listing itself small — partition pruning can't help if
-   the driver enumerates a million files first. The range is not parsed
-   from the SQL text: the query is analyzed once against schema-only
-   relations and read off Catalyst's optimized plan
-   (:func:`extract_time_bounds_per_table`), so every shape the optimizer
-   pushes a filter through — joins, CTEs, derived tables, subqueries,
-   set operations — prunes, and every shape it can't stays unpruned.
+   the Spark file listing itself small — partition pruning can't help
+   once a million files have been listed.
 2. **Catalyst pruning (built-in)** — remaining predicates push into the
    parquet scan (footer stats, partition columns date/hour).
+
+Nothing is read from the SQL text. Each fresh text is analyzed once,
+never executed, with every catalog table of the database bound to a
+schema-only relation, and that one ``QueryExecution`` decides the serving
+path (:func:`judge` and :func:`extract_time_bounds_per_table`):
+
+- **references** — the tables whose schema-only relation the analyzed
+  plan reaches, inside session views, CTE bodies and subqueries too;
+- **time ranges** — read off the optimized plan, so every shape the
+  optimizer pushes a filter through (joins, CTEs, derived tables,
+  subqueries, set operations) prunes, and every shape it can't stays
+  unpruned;
+- **cacheability** — a repeat may reuse the analyzed plan only if it is
+  no command, deterministic, folds no current time/user/database, samples
+  nothing, and reads only the engine's relations or constants.
+
+Scans are built with the catalog schema (schema-on-write), so a pruned
+scan, an unpruned one and the schema-only relation have one schema.
 
 Reading via the index file list (not directory glob) is also what makes
 compaction safe for readers: during the tombstone window both the merged
@@ -31,7 +44,8 @@ import os
 import re
 import threading
 from collections import OrderedDict
-from functools import reduce
+from functools import lru_cache, reduce
+from typing import NamedTuple
 
 from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
@@ -45,77 +59,6 @@ from quackpipe_spark.functions.dialect import (
     rewrite_sql,
 )
 from quackpipe_spark.plans.index import PartitionIndex
-
-_ALIAS_STOPWORDS = frozenset(
-    "on where group order limit having join left right full inner cross outer "
-    "semi anti using union intersect except as qualify lateral window natural "
-    "tablesample values select distinct".split()
-)
-# FROM/JOIN relation + optional alias, for the plan-cache pin. The
-# relation may be db-qualified (dotted). The alias group must REFUSE
-# keywords via lookahead (not post-filter): consuming the JOIN of
-# `FROM a JOIN b` as a's "alias" would swallow the next clause and hide
-# b from the scan entirely.
-_FROM_JOIN = re.compile(
-    r"\b(?:FROM|JOIN)\s+(`[^`]*`[^\s,()]*|[A-Za-z_][\w.]*)"
-    r"(?:\s+(?:AS\s+)?(?!(?:" + "|".join(sorted(_ALIAS_STOPWORDS)) + r")\b)"
-    r"([A-Za-z_]\w*))?",
-    re.IGNORECASE,
-)
-
-# a backtick-quoted relation: a plain \w+ name means exactly the bare
-# word (Spark resolution); anything else — blanked weird contents,
-# qualified `db`.`tbl` forms — is an OPAQUE relation whose contents the
-# plan-cache key can't pin.
-_PLAIN_QUOTED = re.compile(r"^`(\w+)`$")
-_OPAQUE_REL = "\x00opaque"
-
-
-def _rel_name(raw: str) -> str:
-    if raw.startswith("`"):
-        m = _PLAIN_QUOTED.match(raw)
-        return m.group(1).lower() if m else _OPAQUE_REL
-    return raw.split(".")[-1].lower()
-
-
-# a parenthesized RELATION (`FROM (events e1 JOIN events e2 ON …)`) —
-# valid Spark SQL whose relations _FROM_JOIN cannot see, so
-# _plan_cacheable can't pin an unseen temp view's contents and refuses
-# the shape. Conservatively also matches `IS DISTINCT FROM (expr)` —
-# that query just loses caching. The positive lookahead requires a
-# relation-ish first token, so `FROM (SELECT …` is not this shape.
-_PAREN_REL = re.compile(
-    r"\b(?:FROM|JOIN)\s*\(\s*(?!SELECT\b|VALUES\b|WITH\b)(?=[`A-Za-z_])",
-    re.IGNORECASE,
-)
-
-
-def _paren_relation_present(sql: str) -> bool:
-    return bool(_PAREN_REL.search(sql))
-
-
-_WITH_HEAD = re.compile(r"^\s*WITH\b", re.IGNORECASE)
-_CTE_NAME_AS = re.compile(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", re.IGNORECASE)
-
-
-def _match_paren(blanked: str, open_idx: int) -> int:
-    """Index of the ')' matching blanked[open_idx] == '(', or -1.
-    Literals are blanked, so every paren seen is code."""
-    depth = 0
-    for i in range(open_idx, len(blanked)):
-        if blanked[i] == "(":
-            depth += 1
-        elif blanked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
-# A statement's time range is derived only for a query (SELECT/WITH)
-# that names the time column; anything else is never analyzed.
-_QUERY_HEAD = re.compile(r"\s*(SELECT|WITH)\b", re.IGNORECASE)
-_TS_TOKEN = re.compile(r"\b__timestamp\b", re.IGNORECASE)
 
 Range = tuple[int | None, int | None]
 _UNBOUNDED: Range = (None, None)
@@ -245,13 +188,15 @@ def _walk(node, conds: list, leaves: dict[int, str], found: dict[str, list]) -> 
 
 
 def extract_time_bounds_per_table(
-    spark: SparkSession, sql: str, leaves: dict[int, str]
+    spark: SparkSession, sql: str, leaves: dict[int, str], execution=None
 ) -> dict[str, tuple[int | None, int | None]]:
     """Per-table inclusive ``__timestamp`` range ``{table: (lo, hi)}``
     (None = unbounded side) that ``sql`` can read, from Catalyst's
     optimized plan. ``leaves`` maps the RDD id of each table's
     schema-only relation — registered under the table's name by the
-    caller — to the table name.
+    caller — to the table name. ``execution`` is the text's
+    ``QueryExecution`` when the caller has already built it (see
+    :func:`judge`), so the text is analyzed once.
 
     Each instance of a table in the plan gets the range of the Filter
     conditions directly above it (after pushdown); the table's range is
@@ -263,12 +208,11 @@ def extract_time_bounds_per_table(
     the schema-only relations. The statement is analyzed and optimized
     only, never executed: a ``WITH … INSERT`` runs no command here."""
     found: dict[str, list[Range]] = {}
-    state = spark._jsparkSession.sessionState()
-    skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
     _ANALYZING.on = True
     try:
-        plan = state.executePlan(state.sqlParser().parsePlan(sql), skip).optimizedPlan()
-        _walk(plan, [], leaves, found)
+        if execution is None:
+            execution = _execution(spark, sql)
+        _walk(execution.optimizedPlan(), [], leaves, found)
     except (Py4JError, PySparkException):
         return {}
     finally:
@@ -279,6 +223,98 @@ def extract_time_bounds_per_table(
         if rng != _UNBOUNDED:
             out[name] = rng
     return out
+
+
+def _execution(spark: SparkSession, sql: str):
+    """The ``QueryExecution`` of ``sql`` in SKIP mode: analysis and
+    optimization never run a command (a ``WITH … INSERT`` inserts
+    nothing)."""
+    state = spark._jsparkSession.sessionState()
+    skip = spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+    return state.executePlan(state.sqlParser().parsePlan(sql), skip)
+
+
+# leaves a reusable plan may hold besides the engine's own: constant
+# relations, and a CTE reference (its body is walked where it is defined)
+_CONSTANT_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range", "CTERelationRef"})
+
+
+def _reach(node, leaves: dict[int, str], reached: set[str]) -> bool:
+    """Add the table of every schema-only leaf under ``node`` (View,
+    CTE and subquery bodies included) to ``reached``. True when every
+    leaf is the engine's own or a constant relation, every View is the
+    engine's own (a view straight over its leaf) and no Sample draws
+    rows."""
+    kind = node.nodeName()
+    if kind == "LogicalRDD":
+        name = leaves.get(node.rdd().id())
+        if name is not None:
+            reached.add(name)
+        return name is not None
+    kids = _seq(node.children())
+    if kind == "View" and kids[0].nodeName() == "LogicalRDD":
+        return _reach(kids[0], leaves, reached)
+    ok = kind not in ("Sample", "View") if kids else kind in _CONSTANT_LEAVES
+    for sub in _seq(node.subqueries()) + kids:
+        ok = _reach(sub, leaves, reached) and ok
+    return ok
+
+
+@lru_cache(maxsize=1)
+def _plan_classes(spark: SparkSession) -> tuple:
+    """Catalyst's ``Command`` class and the ``CURRENT_LIKE`` tree
+    pattern, looked up once for the latest session (each py4j lookup
+    is a few round trips)."""
+    jvm = spark._jvm
+    return (
+        jvm.java.lang.Class.forName("org.apache.spark.sql.catalyst.plans.logical.Command"),
+        jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE(),
+    )
+
+
+class Judgment(NamedTuple):
+    """What one schema-only analysis of a text decides."""
+
+    execution: object  # the text's QueryExecution (py4j)
+    refs: set[str] | None  # reached tables; None: a command hides its input
+    command: bool
+    cacheable: bool
+
+
+def judge(spark: SparkSession, sql: str, leaves: dict[int, str]) -> Judgment | None:
+    """Analyze ``sql`` once against the schema-only relations ``leaves``
+    (RDD id → table, registered under the tables' names by the caller)
+    and judge it from the analyzed plan; None when it does not analyze.
+
+    A repeat may reuse the plan only when it is no command (a command
+    runs when ``spark.sql`` is called, so a hit would skip it), it is
+    deterministic (a cached plan replays ``rand()``'s seed), folds no
+    current time, date, user or database (``ComputeCurrentTime`` and
+    ``ReplaceCurrentLike`` would freeze them at the first run), holds no
+    Sample, and reads only the engine's relations and constants — the
+    plan-cache key pins nothing else. A command without children (SET,
+    CREATE VIEW, CTAS, EXPLAIN, …) may keep its input query out of the
+    plan tree, so its references are unknown (``refs`` None)."""
+    command_class, current_like = _plan_classes(spark)
+    _ANALYZING.on = True
+    try:
+        execution = _execution(spark, sql)
+        plan = execution.analyzed()
+        reached: set[str] = set()
+        own = _reach(plan, leaves, reached)
+        command = command_class.isInstance(plan)
+        cacheable = (
+            own
+            and not command
+            and plan.deterministic()
+            and not plan.containsPattern(current_like)
+        )
+    except (Py4JError, PySparkException):
+        return None
+    finally:
+        _ANALYZING.on = False
+    hidden = command and plan.children().isEmpty()
+    return Judgment(execution, None if hidden else reached, command, cacheable)
 
 
 class QueryEngine:
@@ -307,118 +343,22 @@ class QueryEngine:
         # fresh per rep.
         self._plan_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
         self._plan_cache_cap = 64
-        # time ranges of plan-cacheable texts, same bound and flush as the
-        # plan cache: (db, SQL, tz, registry fingerprint, referenced table
-        # schemas) → {table: (lo, hi)}, so a repeat runs no schema-only
-        # analysis. Ranges depend on the text and schemas, not on files.
-        self._bounds_memo: "OrderedDict[tuple, dict]" = OrderedDict()
-        # (db, table) → (schema signature, schema-only DataFrame, RDD id)
+        # judgments of plan-cacheable texts, same bound and flush as the
+        # plan cache: (db, SQL, tz, registry fingerprint) → (the reached
+        # tables with their shapes, {table: (lo, hi)}), so a repeat runs
+        # no schema-only analysis. Both depend on the text and the
+        # schemas, not on files; an entry is used only while the reached
+        # tables keep their shapes.
+        self._judgments: "OrderedDict[tuple, tuple]" = OrderedDict()
+        # (db, table) → (shape, schema-only TemporaryViewRelation, RDD id)
         self._schema_views: dict[tuple[str, str], tuple] = {}
-        # bumped by each SET/RESET run through sql(); a query whose ranges
+        # bumped by each command run through sql(); a query whose ranges
         # were derived under an older value is planned again
         self._conf_gen = 0
         register_dialect(spark)
         from quackpipe_spark.sources.tables import _ensure_read_confs
 
         _ensure_read_confs(spark)
-
-    # time-dependent or nondeterministic expressions: a cached
-    # DataFrame's optimized plan is memoized by Spark, so Catalyst's
-    # ComputeCurrentTime fold would freeze now()/current_date at first
-    # execution and rand()/uuid() would replay a fixed seed — a repeat
-    # query must keep per-call semantics, so these never cache.
-    # TABLESAMPLE (seedless) is nondeterministic too.
-    _CACHE_UNSAFE = re.compile(
-        r"\b(?:now|curdate|rand|randn|random|randstr|uniform|uuid|shuffle"
-        r"|monotonically_increasing_id"
-        r"|input_file_name|spark_partition_id"
-        # today()/yesterday() are OUR dialect sugar over current_date —
-        # they inline at analysis and ComputeCurrentTime freezes them, so
-        # a cached plan would serve yesterday's rows after midnight (r12)
-        r"|today|yesterday"
-        r"|user|current_database|current_schema|current_catalog)\s*\("
-        r"|\b(?:current_timestamp|current_date|localtimestamp|current_timezone"
-        r"|current_user|session_user|tablesample)\b"
-        r"|\bunix_timestamp\s*\(\s*\)",
-        re.IGNORECASE,
-    )
-    @staticmethod
-    def _with_chain_names(blanked: str) -> set[str]:
-        """Names DEFINED by the statement's WITH chain (lowered), by
-        walking ``WITH [RECURSIVE] name AS ( …balanced… )[, …]``. A bare '<name> AS (' regex also
-        matched Spark's WINDOW clause (``WINDOW w AS (ORDER BY x)``),
-        which defines no relation — a FROM over a session temp view
-        named w was wrongly judged pinnable and could serve a stale
-        cached plan after the view changed (review r12). Walk failures
-        return what was collected so far: unrecognized names then read
-        as unpinnable relations — under-caching, never staleness."""
-        names: set[str] = set()
-        m = _WITH_HEAD.match(blanked)
-        if not m:
-            return names
-        i = m.end()
-        rec = re.compile(r"\s*RECURSIVE\b", re.IGNORECASE).match(blanked, i)
-        if rec:
-            i = rec.end()
-        while True:
-            nm = _CTE_NAME_AS.match(blanked, i)
-            if nm is None:
-                return names
-            close = _match_paren(blanked, nm.end() - 1)
-            if close < 0:
-                return names
-            names.add(nm.group(1).lower())
-            i = close + 1
-            while i < len(blanked) and blanked[i].isspace():
-                i += 1
-            if i < len(blanked) and blanked[i] == ",":
-                i += 1
-                continue
-            return names
-
-    def _plan_cacheable(
-        self, query: str, catalog_names: set[str], blanked: str | None = None
-    ) -> bool:
-        """True when a repeat of ``query`` may serve the cached
-        DataFrame. Requirements: a plain SELECT/WITH statement (commands
-        — SET/CREATE/INSERT/… — execute eagerly inside spark.sql, so a
-        cache hit would silently skip re-execution), no time-dependent
-        or nondeterministic expressions (see _CACHE_UNSAFE), and every
-        FROM/JOIN relation resolves to a catalog table (whose file list
-        is in the key) or a name defined in the query itself (CTE) — an
-        unknown name is a session temp view or path table whose contents
-        the key can't pin."""
-        from quackpipe_spark.sqltext import blank_noncode
-
-        blanked = blanked if blanked is not None else blank_noncode(query)
-        if not _QUERY_HEAD.match(blanked):
-            return False
-        if self._CACHE_UNSAFE.search(blanked) or "parquet.`" in query:
-            return False
-        if _paren_relation_present(blanked):
-            # a parenthesized relation's names are invisible to the
-            # _FROM_JOIN loop below — `FROM (my_temp_view)` would be
-            # judged cacheable with the view's contents unpinned and a
-            # redefinition would keep serving the old plan (review r13)
-            return False
-        local = self._with_chain_names(blanked)
-        for m in _FROM_JOIN.finditer(blanked):
-            raw = m.group(1)
-            if raw.startswith("`"):
-                # a plain-word quoted name means the bare word; anything
-                # else (blanked contents, `db`.`tbl`) is unpinnable
-                name = _rel_name(raw)
-                if name == _OPAQUE_REL:
-                    return False
-            elif "." in raw:
-                # a qualified name bypasses the bare temp view — resolves
-                # in the session catalog, whose contents the key can't pin
-                return False
-            else:
-                name = raw.lower()
-            if name not in catalog_names and name not in local:
-                return False
-        return True
 
     def table_files(
         self, table: Table, lo: int | None = None, hi: int | None = None
@@ -442,79 +382,72 @@ class QueryEngine:
         hi: int | None = None,
         files: list[str] | None = None,
     ) -> DataFrame:
+        """A scan of ``files`` (default: the live files in [lo, hi]) with
+        the catalog schema plus the hive partition columns (date DATE,
+        hour INT) — whatever subset of files is read, including none, and
+        with no footer-reading job. A column a file lacks reads null."""
+        from pyspark.sql.types import DateType, IntegerType, StructField, StructType
+
+        from quackpipe_spark.types import CANONICAL
+
         if files is None:
             files = self.table_files(table, lo, hi)
+        fields = [StructField(c, CANONICAL[t], True) for c, t in table.schema.items()]
+        for pcol, ptype in zip(table.partition_by, (DateType(), IntegerType())):
+            if pcol not in table.schema:
+                fields.append(StructField(pcol, ptype, True))
+        schema = StructType(fields)
         if not files:
-            # empty relation with the table's known schema PLUS the hive
-            # partition columns a non-empty read would discover (date
-            # inferred DATE, hour inferred INT) — otherwise a query
-            # touching `date`/`hour` works only while files match and
-            # errors with UNRESOLVED_COLUMN once pruning empties the list
-            from quackpipe_spark.types import CANONICAL
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).option("basePath", table.path).parquet(*files)
 
-            from pyspark.sql.types import (
-                DateType,
-                IntegerType,
-                StructField,
-                StructType,
-            )
-
-            fields = [
-                StructField(c, CANONICAL[t], True) for c, t in table.schema.items()
-            ]
-            have = set(table.schema)
-            for pcol, ptype in zip(table.partition_by, (DateType(), IntegerType())):
-                if pcol not in have:
-                    fields.append(StructField(pcol, ptype, True))
-            return self.spark.createDataFrame([], StructType(fields))
-        return (
-            self.spark.read.option("mergeSchema", "true")  # union_by_name parity
-            .option("basePath", table.path)
-            .parquet(*files)
-        )
-
-    def _schema_leaves(self, refs: list[Table]) -> dict[int, str]:
-        """Register each table's schema-only relation (``table_df`` with
-        no files: a LogicalRDD carrying the hive partition columns) under
-        its bare name and map the relation's RDD id to the table name.
-        The relation is built once per table schema. Caller holds
+    def _schema_leaves(self, tables: list[Table]) -> dict[int, str]:
+        """Bind each table's bare name to its schema-only relation
+        (``table_df`` with no files: a LogicalRDD) and map the relation's
+        RDD id to the table name. The relation is built once per table
+        shape and rebound straight into the session catalog. Caller holds
         ``_sql_lock``."""
+        views = self.spark._jsparkSession.sessionState().catalog()
         leaves = {}
-        for t in refs:
-            sig = _table_shape(t)
+        for t in tables:
+            shape = _table_shape(t)
             hit = self._schema_views.get((t.database, t.name))
-            if hit is None or hit[0] != sig:
+            if hit is None or hit[0] != shape:
                 df = self.table_df(t, files=[])
+                df.createOrReplaceTempView(t.name)
                 rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
-                hit = self._schema_views[(t.database, t.name)] = (sig, df, rdd_id)
-            hit[1].createOrReplaceTempView(t.name)
+                hit = (shape, views.getRawTempView(t.name).get(), rdd_id)
+                self._schema_views[(t.database, t.name)] = hit
+            else:
+                views.createTempView(t.name, hit[1], True)
             leaves[hit[2]] = t.name
         return leaves
 
-    def _time_bounds(
-        self, text_key: tuple | None, query: str, blanked: str, refs: list[Table]
-    ) -> dict[str, tuple[int | None, int | None]]:
-        """Per-table time range of ``query`` (see
-        extract_time_bounds_per_table), memoized under ``text_key`` —
-        set only for plan-cacheable texts, whose relations are all
-        catalog tables or CTEs. Caller holds ``_sql_lock``."""
-        if not (refs and _QUERY_HEAD.match(blanked) and _TS_TOKEN.search(blanked)):
-            return {}
-        mkey = None
-        if text_key is not None:
-            mkey = text_key + (tuple((t.name, _table_shape(t)) for t in refs),)
-            hit = self._bounds_memo.get(mkey)
-            if hit is not None:
-                self._bounds_memo.move_to_end(mkey)
-                return hit
-        bounds = extract_time_bounds_per_table(
-            self.spark, query, self._schema_leaves(refs)
-        )
-        if mkey is not None:
-            self._bounds_memo[mkey] = bounds
-            if len(self._bounds_memo) > self._plan_cache_cap:
-                self._bounds_memo.popitem(last=False)
-        return bounds
+    def _analyze(
+        self, query: str, tables: list[Table]
+    ) -> tuple[Judgment | None, dict[str, tuple[int | None, int | None]]]:
+        """Judge ``query`` (see :func:`judge`) with every table of
+        ``tables`` bound to its schema-only relation, and derive its time
+        ranges from the same analysis. The session's temp views under
+        those names are put back afterwards, so a session view the query
+        does not read is left as it was. Caller holds ``_sql_lock``."""
+        views = self.spark._jsparkSession.sessionState().catalog()
+        saved = [(t.name, views.getRawTempView(t.name)) for t in tables]
+        try:
+            leaves = self._schema_leaves(tables)
+            judged = judge(self.spark, query, leaves)
+            bounds = {}
+            if judged is not None and judged.refs:
+                bounds = extract_time_bounds_per_table(
+                    self.spark, query, leaves, execution=judged.execution
+                )
+        finally:
+            for name, prev in saved:
+                if prev.isDefined():
+                    views.createTempView(name, prev.get(), True)
+                else:
+                    views.dropTempView(name)
+        return judged, bounds
 
     # read_parquet(<ARRAY[...] | 'path'> [, key = value ...]) — the
     # reference's scan idiom in both forms (merge_service_fs.go:215:
@@ -664,45 +597,18 @@ class QueryEngine:
             out.append(query[last:])
             query = "".join(out)
         query = rewrite_sql(query)
-        # ONE blanked view of the final text, shared by the reference
-        # scan, the SET/RESET check, cacheability and the time-range gate —
-        # each was independently re-blanking the same string on the
-        # serving hot path, two of them inside the lock (review r12)
-        blanked_q = blank_noncode(query)
-        # case-INSENSITIVE reference scan: Spark resolves view names
-        # case-insensitively, so "FROM Weather" hits the temp view
-        # registered for table "weather" — the detection must agree or a
-        # differently-cased query reuses a STALE pruned view from an
-        # earlier query (silent missing rows) or misses registration.
-        # Scanned over the BLANKED text (review r12): a table named only
-        # inside a string literal or comment is data, not a reference —
-        # matching it cost index I/O inside the lock and clobbered any
-        # same-named user temp view via createOrReplaceTempView.
-        refs = [
-            t
-            for t in self.catalog.tables(db)
-            if re.search(rf"\b{re.escape(t.name)}\b", blanked_q, re.IGNORECASE)
-        ]
-        # match against the comment-blanked text: '-- note\nSET ...'
-        # still executes the conf change, so it must still flush
-        conf_change = re.match(r"\s*(SET|RESET)\b", blanked_q, re.IGNORECASE)
-        cacheable = self._plan_cacheable(
-            query, {t.name.lower() for t in refs}, blanked=blanked_q
-        )
         while True:
             with self._sql_lock:
                 gen = self._conf_gen
-                text_key = None
-                if cacheable:
-                    try:
-                        tz = self.spark.conf.get("spark.sql.session.timeZone", "")
-                    except Exception:
-                        tz = ""
-                    # dialect/UDF registry content hash: a hot-added or
-                    # redefined function in-session must not serve a plan
-                    # analyzed against the old binding (VERDICT r11 #5)
-                    text_key = (db, query, tz, registry_fingerprint())
-                bounds = self._time_bounds(text_key, query, blanked_q, refs)
+                try:
+                    tz = self.spark.conf.get("spark.sql.session.timeZone", "")
+                except Exception:
+                    tz = ""
+                # dialect/UDF registry content hash: a hot-added or
+                # redefined function in-session must not serve a plan
+                # analyzed against the old binding (VERDICT r11 #5)
+                text_key = (db, query, tz, registry_fingerprint())
+                refs, bounds, command, cacheable = self._judgment(text_key, query, db)
                 per_table: list[tuple[Table, list[str]]] = []
                 for t in refs:
                     # a custom order_by indexes a different column: comparing
@@ -713,15 +619,14 @@ class QueryEngine:
                     lo, hi = bounds.get(t.name, (None, None)) if tracks_ts else (None, None)
                     per_table.append((t, self.table_files(t, lo, hi)))
                 key = None
-                if text_key is not None:
+                if cacheable:
                     key = text_key + (
                         tuple(
                             # file-list DIGEST pins the scan (the full tuple held
                             # every path string — ~100 bytes × 1500 files × 64
                             # cache entries; an md5 over the sorted list keeps the
                             # staleness-impossible-by-key property at 32 bytes);
-                            # schema+partition_by pin the empty-relation DataFrame
-                            # shape when no files
+                            # schema+partition_by pin the scan's schema
                             (
                                 t.name,
                                 len(files),
@@ -738,28 +643,61 @@ class QueryEngine:
                     if hit is not None:
                         self._plan_cache.move_to_end(key)
                         return hit
-            # a scan over files reads their footers (a Spark job): built
-            # unlocked, so one query's plan-cache miss does not stall the
-            # others
+            # built unlocked: a scan over more than 32 files lists them
+            # with a Spark job, which must not stall the other queries
             views = [(t, self.table_df(t, files=files)) for t, files in per_table]
             with self._sql_lock:
                 if self._conf_gen != gen:
-                    continue  # a SET/RESET ran meanwhile: ranges may differ
+                    continue  # a command ran meanwhile: ranges may differ
                 for t, view in views:
                     view.createOrReplaceTempView(t.name)
                 df = self.spark.sql(query)
-                if conf_change:
-                    # a conf change (ansi.enabled, caseSensitive, …) can
-                    # alter the semantics of an already-analyzed plan — the
-                    # keys only pin the timezone, so flush everything and
-                    # send queries that read the old conf round again.
-                    # (Conf mutations made directly on the SparkSession
-                    # bypass this engine and are out of scope.)
+                if command:
+                    # a command can change what an analyzed plan means (a
+                    # conf, a SQL function, a view) and the keys pin only
+                    # the timezone and the registry, so flush everything
+                    # and send queries judged before it round again.
+                    # (Changes made directly on the SparkSession bypass
+                    # this engine and are out of scope.)
                     self._conf_gen += 1
                     self._plan_cache.clear()
-                    self._bounds_memo.clear()
+                    self._judgments.clear()
                 elif key is not None:
                     self._plan_cache[key] = df
                     if len(self._plan_cache) > self._plan_cache_cap:
                         self._plan_cache.popitem(last=False)
                 return df
+
+    def _judgment(
+        self, text_key: tuple, query: str, db: str
+    ) -> tuple[list[Table], dict, bool, bool]:
+        """(referenced tables, their time ranges, command?, cacheable?)
+        for ``query`` on ``db``: a memoized judgment while the tables it
+        reached keep their shapes, else a fresh one. A text whose
+        references can't be read — it does not analyze against the
+        schema-only relations, or a command hides its input — reads every
+        table of ``db`` unpruned and counts as a command. Caller holds
+        ``_sql_lock``."""
+        hit = self._judgments.get(text_key)
+        if hit is not None:
+            shapes, bounds = hit
+            refs = [self.catalog.get(db, name) for name, _ in shapes]
+            if all(t is not None and _table_shape(t) == s for t, (_, s) in zip(refs, shapes)):
+                self._judgments.move_to_end(text_key)
+                return refs, bounds, False, True
+        tables = self.catalog.tables(db)
+        # taken before the analysis: a schema change racing it leaves a
+        # memo entry that no longer matches, never a stale one that does
+        shapes = [(t.name, _table_shape(t)) for t in tables]
+        judged, bounds = self._analyze(query, tables)
+        if judged is None or judged.refs is None:
+            return tables, {}, True, False
+        refs = [t for t in tables if t.name in judged.refs]
+        if judged.cacheable:
+            self._judgments[text_key] = (
+                tuple(s for s in shapes if s[0] in judged.refs),
+                bounds,
+            )
+            if len(self._judgments) > self._plan_cache_cap:
+                self._judgments.popitem(last=False)
+        return refs, bounds, judged.command, judged.cacheable

@@ -68,10 +68,6 @@ def resolve(type_name: str) -> str:
     return canon
 
 
-def spark_type(type_name: str) -> DataType:
-    return CANONICAL[resolve(type_name)]
-
-
 def infer_canonical(value) -> str:
     """Infer canonical type of a python scalar (bool before int: bool is an
     int subclass in python)."""

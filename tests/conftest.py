@@ -87,3 +87,44 @@ def time_bounds(spark):
                 spark.catalog.dropTempView(name)
 
     return bounds
+
+
+# Session views the plan-cacheability corpus reads: the engine does not
+# own them, so a text reading one is never cacheable, while a text that
+# does not analyze at all is a separate case (``analyzes=False``).
+_SESSION_VIEWS = ("some_session_view", "tv", "my_temp_view", "w", "pc_side")
+
+
+@pytest.fixture(scope="session")
+def plan_cacheable(spark):
+    """``plan_cacheable(sql, tables, analyzes=True)`` → whether
+    ``QueryEngine.sql`` may reuse its analyzed plan of ``sql`` when
+    ``tables`` are its catalog tables: the text is dialect-rewritten and
+    judged (``query.judge``) with those tables bound to schema-only
+    relations and the corpus's session views registered. ``analyzes``
+    states whether Spark accepts the text at all."""
+    from quackpipe_spark.functions.dialect import register_dialect, rewrite_sql
+    from quackpipe_spark.query import judge
+
+    register_dialect(spark)
+    schema = _CORPUS_SCHEMA + ", d date, today bigint"
+    frames = {}
+    for name in _CORPUS_RELATIONS + _SESSION_VIEWS:
+        df = spark.createDataFrame([], schema)
+        frames[name] = (df, df._jdf.queryExecution().analyzed().rdd().id())
+
+    def cacheable(sql, tables, analyzes=True):
+        sql = rewrite_sql(sql)
+        bound = [n for n in frames if n in tables or n in _SESSION_VIEWS]
+        for name in bound:
+            frames[name][0].createOrReplaceTempView(name)
+        try:
+            leaves = {frames[t][1]: t for t in tables}
+            judged = judge(spark, sql, leaves)
+            assert (judged is not None) == analyzes, f"analyzes={judged is not None}: {sql}"
+            return judged is not None and judged.cacheable
+        finally:
+            for name in bound:
+                spark.catalog.dropTempView(name)
+
+    return cacheable

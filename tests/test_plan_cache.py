@@ -134,31 +134,38 @@ def test_udf_fingerprint_sees_closures_defaults_and_helpers(spark):
     assert registry_fingerprint() != fph
 
 
-def test_commands_and_nondeterminism_never_cache(qe):
-    names = {"ev"}
-    ok = qe._plan_cacheable
-    assert ok("SELECT v FROM ev", names)
-    assert ok("WITH a AS (SELECT v FROM ev) SELECT * FROM a", names)
+def test_commands_and_nondeterminism_never_cache(plan_cacheable):
+    def ok(q, **k):
+        return plan_cacheable(q, ["ev"], **k)
+
+    assert ok("SELECT v FROM ev")
+    assert ok("WITH a AS (SELECT v FROM ev) SELECT * FROM a")
     # commands execute eagerly inside spark.sql — a hit would skip them
-    assert not ok("SET spark.sql.session.timeZone=UTC", names)
-    assert not ok("CREATE TEMP VIEW x AS SELECT 1", names)
-    assert not ok("INSERT INTO ev VALUES (1, 2)", names)
-    assert not ok("EXPLAIN SELECT v FROM ev", names)
+    assert not ok("SET spark.sql.session.timeZone=UTC")
+    assert not ok("CREATE TEMP VIEW x AS SELECT 1")
+    # an insert into the engine's relation does not analyze: no
+    # catalog table is writable through SQL
+    assert not ok("INSERT INTO ev VALUES (1, 2)", analyzes=False)
+    assert not ok("EXPLAIN SELECT v FROM ev")
     # time-dependent / nondeterministic must stay per-call
-    assert not ok("SELECT now() AS t FROM ev", names)
-    assert not ok("SELECT current_date FROM ev", names)
-    assert not ok("SELECT rand() FROM ev", names)
-    assert not ok("SELECT unix_timestamp() FROM ev", names)
-    assert not ok("SELECT * FROM ev TABLESAMPLE (10 PERCENT)", names)
+    assert not ok("SELECT now() AS t FROM ev")
+    assert not ok("SELECT current_date FROM ev")
+    assert not ok("SELECT rand() FROM ev")
+    assert not ok("SELECT unix_timestamp() FROM ev")
+    assert not ok("SELECT * FROM ev TABLESAMPLE (10 PERCENT)")
+    assert not ok("SELECT input_file_name() AS f FROM ev")
+    assert not ok("SELECT * FROM (SELECT rand() AS r FROM ev) s")
+    assert not ok("SELECT v FROM ev WHERE v IN (SELECT unix_timestamp())")
+    assert not ok("SELECT current_database(), current_user() FROM ev")
     # ...but the same tokens inside literals/comments are fine
-    assert ok("SELECT v FROM ev WHERE note = 'now()' -- rand()", names)
-    assert ok("SELECT unix_timestamp(note) FROM ev", names)
+    assert ok("SELECT v FROM ev WHERE note = 'now()' -- rand()")
+    assert ok("SELECT unix_timestamp(note) FROM ev")
     # relations the key can't pin: session views, qualified names, paths
-    assert not ok("SELECT * FROM some_session_view", names)
-    assert not ok("SELECT * FROM db1.ev", names)
-    assert not ok("SELECT * FROM parquet.`/tmp/x`", names)
+    assert not ok("SELECT * FROM some_session_view")
+    assert not ok("SELECT * FROM db1.ev", analyzes=False)
+    assert not ok("SELECT * FROM parquet.`/tmp/x`", analyzes=False)
     # WITHDRAWALS is not WITH
-    assert not ok("WITHDRAWALS", names)
+    assert not ok("WITHDRAWALS", analyzes=False)
 
 
 def test_cache_is_bounded(qe):
@@ -168,10 +175,10 @@ def test_cache_is_bounded(qe):
 
 
 def test_repeat_text_runs_no_schema_only_analysis(qe, monkeypatch):
-    """The time range of a cacheable text is memoized: a repeat runs no
-    schema-only analysis, even when the plan itself misses (new files).
-    A SET flushes the memo with the plan cache; the memo has the plan
-    cache's bound."""
+    """The judgment of a cacheable text (its references and time
+    ranges) is memoized: a repeat runs no schema-only analysis, even when
+    the plan itself misses (new files). A SET flushes the memo with the
+    plan cache; the memo has the plan cache's bound."""
     import quackpipe_spark.query as Q
 
     calls = []
@@ -204,7 +211,7 @@ def test_repeat_text_runs_no_schema_only_analysis(qe, monkeypatch):
         qe.spark.catalog.dropTempView("pc_side")
     for i in range(qe._plan_cache_cap + 8):
         qe.sql(f"SELECT v + {i} AS v2 FROM ev WHERE __timestamp >= {i}", db="d")
-    assert len(qe._bounds_memo) <= qe._plan_cache_cap
+    assert len(qe._judgments) <= qe._plan_cache_cap
 
 
 def test_tz_change_misses(qe):
@@ -270,11 +277,11 @@ def test_set_between_ranges_and_execution_replans(qe, monkeypatch):
         qe.sql("SET spark.sql.session.timeZone=UTC", db="d")
 
 
-def test_curdate_never_caches(qe):
+def test_curdate_never_caches(plan_cacheable):
     # curdate() is Spark's alias of current_date — folded at first
     # analysis, so a cached plan would serve yesterday's date
-    assert not qe._plan_cacheable("SELECT curdate() AS d FROM ev", {"ev"})
-    assert qe._plan_cacheable("SELECT v FROM ev WHERE note = 'curdate()'", {"ev"})
+    assert not plan_cacheable("SELECT curdate() AS d FROM ev", ["ev"])
+    assert plan_cacheable("SELECT v FROM ev WHERE note = 'curdate()'", ["ev"])
 
 
 def test_plan_cache_randomized_interleaving(qe, spark):
@@ -351,3 +358,31 @@ def test_http_query_path_uses_cache_and_sees_new_writes(spark, tmp_path):
         assert got["n"] == 2 and got["s"] == 3.0
     finally:
         srv.stop()
+
+
+def test_with_insert_runs_every_time(qe, spark, tmp_path):
+    """`WITH … INSERT` is a command: a repeat must insert again, not be
+    served from the plan cache (3 rows instead of 6, silently)."""
+    spark.sql(f"CREATE TABLE fsink (v BIGINT) USING parquet LOCATION '{tmp_path}/fsink'")
+    try:
+        q = "WITH a AS (SELECT v FROM ev) INSERT INTO fsink SELECT v FROM a"
+        qe.sql(q, db="d")
+        qe.sql(q, db="d")
+        assert spark.sql("SELECT count(*) AS n FROM fsink").collect()[0]["n"] == 6
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fsink")
+
+
+def test_sql_function_redefined_through_sql_invalidates(qe):
+    """A SQL temporary function redefined through the engine changes what
+    a cached plan means: every command flushes the caches, so the next
+    repeat is planned again against the new body."""
+    try:
+        qe.sql("CREATE OR REPLACE TEMPORARY FUNCTION plus1(x BIGINT) RETURNS BIGINT RETURN x + 1", db="d")
+        q = "SELECT sum(plus1(v)) AS s FROM ev"
+        assert qe.sql(q, db="d").collect()[0]["s"] == 9
+        assert qe.sql(q, db="d").collect()[0]["s"] == 9
+        qe.sql("CREATE OR REPLACE TEMPORARY FUNCTION plus1(x BIGINT) RETURNS BIGINT RETURN x + 100", db="d")
+        assert qe.sql(q, db="d").collect()[0]["s"] == 306
+    finally:
+        qe.spark.sql("DROP TEMPORARY FUNCTION IF EXISTS plus1")

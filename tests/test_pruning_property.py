@@ -240,17 +240,17 @@ def query(draw):
 
 
 def _unpruned(store, monkeypatch, q):
-    """``q``'s rows with time pruning switched off. The bounds memo is
-    cleared on both sides, or a repeat would reuse the pruned ranges."""
+    """``q``'s rows with time pruning switched off. The judgment memo
+    is cleared on both sides, or a repeat would reuse the pruned ranges."""
     import quackpipe_spark.query as Q
 
-    store._bounds_memo.clear()
+    store._judgments.clear()
     monkeypatch.setattr(Q, "extract_time_bounds_per_table", lambda *a, **k: {})
     try:
         return sorted(map(tuple, store.sql(q, db="d").collect()))
     finally:
         monkeypatch.undo()
-        store._bounds_memo.clear()
+        store._judgments.clear()
 
 
 @settings(

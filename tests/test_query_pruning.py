@@ -1154,10 +1154,11 @@ def test_or_envelope_unwraps_redundant_nesting_r15(time_bounds):
 
 
 def test_commands_through_sql_take_effect_once(spark, tmp_path):
-    """The time-range analysis never runs a statement: SET, CREATE TEMP
-    VIEW and INSERT sent through QueryEngine.sql each take effect once,
-    the WITH … INSERT form (which is analyzed, being a WITH statement
-    naming __timestamp) included."""
+    """The schema-only analysis never runs a statement: SET, CREATE TEMP
+    VIEW, INSERT and WITH … INSERT sent through QueryEngine.sql each take
+    effect once. A command whose input query is kept out of its plan
+    tree (CREATE VIEW, CTAS) reads every table unpruned, even right after
+    a pruned query on the same table."""
     import quackpipe_spark.query as Q
     from quackpipe_spark.catalog import Catalog
     from quackpipe_spark.ingest import IngestService
@@ -1183,8 +1184,10 @@ def test_commands_through_sql_take_effect_once(spark, tmp_path):
         # run twice, CREATE TEMP VIEW (no OR REPLACE) raises "already exists"
         qe.sql("CREATE TEMP VIEW once_v AS SELECT * FROM ev WHERE __timestamp >= 1", db="d")
         assert spark.sql("SELECT count(*) AS n FROM once_v").collect()[0]["n"] == 3
-        qe.sql("INSERT INTO once_sink SELECT v FROM ev WHERE __timestamp >= 15", db="d")
-        assert calls == []  # none of the three is a query
+        assert calls == []  # no input query in the plan tree: nothing to prune
+        ins = "INSERT INTO once_sink SELECT v FROM ev WHERE __timestamp >= 15"
+        qe.sql(ins, db="d")
+        assert calls == [ins]  # the insert's query is its child: it prunes
         # an aggregate yields a row even over the empty schema-only
         # relation, so running the statement during analysis would show
         qe.sql(
@@ -1192,14 +1195,102 @@ def test_commands_through_sql_take_effect_once(spark, tmp_path):
             "INSERT INTO once_sink SELECT v FROM a",
             db="d",
         )
-        assert len(calls) == 1
+        assert len(calls) == 2
         rows = sorted(r["v"] for r in spark.sql("SELECT v FROM once_sink").collect())
         assert rows == [1, 2, 3]
+        # CTAS keeps its query out of the plan tree: after a pruned query
+        # left a one-file scan bound to ev, it must still read every row
+        assert qe.sql("SELECT count(*) AS n FROM ev WHERE __timestamp >= 25", db="d").collect()[0]["n"] == 1
+        qe.sql(f"CREATE TABLE once_ctas USING parquet LOCATION '{tmp_path}/ctas' AS SELECT * FROM ev", db="d")
+        assert spark.sql("SELECT count(*) AS n FROM once_ctas").collect()[0]["n"] == 3
     finally:
         Q.extract_time_bounds_per_table = real
         spark.sql("DROP TABLE IF EXISTS once_sink")
+        spark.sql("DROP TABLE IF EXISTS once_ctas")
         spark.catalog.dropTempView("once_v")
         spark.conf.unset("quackpipe.test.note")
+
+
+def test_session_view_over_catalog_table_reads_current_files(spark, tmp_path):
+    """A SQL temp view over a catalog table resolves the table when it is
+    read: the engine must find the table inside the view and bind its
+    current scan, not leave the previous query's pruned file list bound
+    (a count of 1 instead of 3, silently)."""
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine
+
+    cat = Catalog(str(tmp_path / "root"))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    for ts in (10, 20, 30):
+        svc.store("d", "ev", {"v": [ts], "__timestamp": [ts]})
+        svc.flush()
+    qe = QueryEngine(spark, cat)
+    try:
+        qe.sql("CREATE TEMP VIEW allev AS SELECT * FROM ev", db="d")
+        pruned = qe.sql("SELECT count(*) AS n FROM ev WHERE __timestamp >= 25", db="d")
+        assert pruned.collect()[0]["n"] == 1
+        assert len(pruned.inputFiles()) == 1
+        for _ in range(2):  # a user view is never served from the plan cache
+            assert qe.sql("SELECT count(*) AS n FROM allev", db="d").collect()[0]["n"] == 3
+        # the view's own filter prunes the table it reaches
+        q = "SELECT count(*) AS n FROM allev WHERE __timestamp >= 25"
+        df = qe.sql(q, db="d")
+        assert df.collect()[0]["n"] == 1 and len(df.inputFiles()) == 1
+    finally:
+        spark.catalog.dropTempView("allev")
+
+
+def test_scan_schema_is_the_catalog_schema(spark, tmp_path):
+    """A scan of any pruned file list — old files only, new files only,
+    none — has the schema a mergeSchema read of every file has (names,
+    order, types), and the rows a mergeSchema read of its own files has,
+    with a column those files lack read as null. Building it over up to
+    32 files starts no Spark job (no footer read)."""
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine
+
+    cat = Catalog(str(tmp_path / "root"))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    hour = 3600 * NS
+    svc.store("d", "ev", {"v": [1], "__timestamp": [hour]})
+    svc.flush()
+    svc.store("d", "ev", {"v": [2], "__timestamp": [2 * hour]})
+    svc.flush()
+    svc.store("d", "ev", {"v": [3], "__timestamp": [3 * hour], "note": ["new"]})
+    svc.flush()
+    qe = QueryEngine(spark, cat)
+    t = cat.get("d", "ev")
+
+    def merged(files):
+        return spark.read.option("mergeSchema", "true").option("basePath", t.path).parquet(*files)
+
+    def rows(df, cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    every = qe.table_files(t)
+    assert len(every) == 3
+    want = [(f.name, f.dataType) for f in merged(every).schema]
+    assert [c for c, _ in want] == ["v", "__timestamp", "note", "date", "hour"]
+    cols = [c for c, _ in want]
+    for files in (qe.table_files(t, hi=2 * hour), qe.table_files(t, lo=3 * hour), []):
+        got = qe.table_df(t, files=files)
+        assert [(f.name, f.dataType) for f in got.schema] == want
+        if files:
+            truth = merged(files)
+            have = set(truth.columns)
+            truth = truth.select(*[c if c in have else F.lit(None).alias(c) for c in cols])
+            assert rows(got, cols) == rows(truth, cols)
+        else:
+            assert got.count() == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-schema-probe", "table_df builds no job")
+    try:
+        qe.table_df(t, files=every)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("scan-schema-probe")) == []
 
 
 def test_metadata_column_query_matches_unpruned(spark, tmp_path, monkeypatch):

@@ -75,32 +75,34 @@ def qe(spark, tmp_path):
     return engine
 
 
-def test_today_yesterday_never_cache(qe):
+def test_today_yesterday_never_cache(plan_cacheable):
     """today()/yesterday() inline to current_date, which Catalyst
     freezes at first execution — a cached plan would serve yesterday's
     rows after midnight."""
-    ok = qe._plan_cacheable
-    names = {"ev"}
-    assert not ok("SELECT count(*) FROM ev WHERE d = today()", names)
-    assert not ok("SELECT count(*) FROM ev WHERE d >= yesterday()", names)
+
+    def ok(q):
+        return plan_cacheable(q, ["ev"])
+
+    assert not ok("SELECT count(*) FROM ev WHERE d = today()")
+    assert not ok("SELECT count(*) FROM ev WHERE d >= yesterday()")
     # ...but the same words as identifiers/literals are fine
-    assert ok("SELECT today FROM ev", names)
-    assert ok("SELECT v FROM ev WHERE note = 'today()'", names)
+    assert ok("SELECT today FROM ev")
+    assert ok("SELECT v FROM ev WHERE note = 'today()'")
 
 
-def test_window_clause_name_is_not_a_cte(qe):
+def test_window_clause_name_is_not_a_cte(plan_cacheable):
     """`WINDOW w AS (...)` defines no relation: a FROM over a session
     temp view named w must read as unpinnable (never cacheable), while a
     real WITH-defined w still caches."""
-    names = {"ev"}
-    assert not qe._plan_cacheable(
+    names = ["ev"]
+    assert not plan_cacheable(
         "SELECT sum(x) OVER w FROM w WINDOW w AS (ORDER BY x)", names
     )
-    assert qe._plan_cacheable(
+    assert plan_cacheable(
         "WITH w AS (SELECT v FROM ev) SELECT sum(v) OVER (ORDER BY v) FROM w",
         names,
     )
-    assert qe._plan_cacheable(
+    assert plan_cacheable(
         "WITH a AS (SELECT v FROM ev), b AS (SELECT v FROM a) SELECT * FROM b",
         names,
     )
@@ -171,7 +173,7 @@ def test_unqualified_bound_refuses_two_relation_scope(time_bounds):
     )
 
 
-def test_backticked_relations_count_and_pin(qe, time_bounds):
+def test_backticked_relations_count_and_pin(plan_cacheable, time_bounds):
     """Backtick-quoted relations are visible to the relation scan (review
     r12 follow-up): a backticked second relation still defeats unqualified
     attribution, a plain-word backticked catalog table behaves like the
@@ -195,11 +197,11 @@ def test_backticked_relations_count_and_pin(qe, time_bounds):
         == {}
     )
     # cacheability: backticked unknown view unpinnable; backticked catalog ok
-    names = {"ev"}
-    assert not qe._plan_cacheable("SELECT * FROM `tv`", names)
-    assert not qe._plan_cacheable("SELECT * FROM `a b`", names)
-    assert not qe._plan_cacheable("SELECT * FROM `db`.`ev`", names)
-    assert qe._plan_cacheable("SELECT * FROM `ev`", names)
+    names = ["ev"]
+    assert not plan_cacheable("SELECT * FROM `tv`", names)
+    assert not plan_cacheable("SELECT * FROM `a b`", names, analyzes=False)
+    assert not plan_cacheable("SELECT * FROM `db`.`ev`", names, analyzes=False)
+    assert plan_cacheable("SELECT * FROM `ev`", names)
 
 
 def test_oracle_normalizer_canonical_forms():

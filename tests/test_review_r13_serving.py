@@ -32,18 +32,14 @@ def test_paren_join_relations_refuse_pruning(time_bounds):
     assert time_bounds(q4, ["events"]) == {"events": (7, None)}
 
 
-def test_paren_temp_view_not_plan_cacheable(spark, tmp_path):
+def test_paren_temp_view_not_plan_cacheable(plan_cacheable):
     """`FROM (my_temp_view)` hid the view name from the cacheability
     scan: the query was judged cacheable with the view's contents
     unpinned, so redefining the view kept serving the old plan."""
-    from quackpipe_spark.catalog import Catalog
-    from quackpipe_spark.query import QueryEngine
-
-    qe = QueryEngine(spark, Catalog(str(tmp_path / "root")))
-    assert qe._plan_cacheable("SELECT * FROM (my_temp_view) WHERE x = 1", set()) is False
-    assert qe._plan_cacheable("SELECT * FROM my_temp_view WHERE x = 1", set()) is False
+    assert plan_cacheable("SELECT * FROM (my_temp_view) WHERE x = 1", []) is False
+    assert plan_cacheable("SELECT * FROM my_temp_view WHERE x = 1", []) is False
     # catalog-table queries stay cacheable
-    assert qe._plan_cacheable("SELECT * FROM events WHERE x = 1", {"events"}) is True
+    assert plan_cacheable("SELECT * FROM events WHERE x = 1", ["events"]) is True
 
 
 def test_backticked_where_column_opens_no_phantom_scope(time_bounds):
