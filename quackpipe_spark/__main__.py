@@ -85,9 +85,11 @@ def main(argv: list[str] | None = None) -> int:
         qe = QueryEngine(spark, Catalog(args.root))
         for stmt in split_statements(sys.stdin.read()):
             df = qe.sql(stmt, db=args.db)
-            # toLocalIterator: one partition in driver memory at a time —
-            # a bootstrap script can SELECT an entire table without an
-            # unbounded driver materialization
+            # toLocalIterator, not the /query path's one Arrow collect: one
+            # partition in driver memory at a time — a bootstrap script can
+            # SELECT an entire table without an unbounded driver
+            # materialization, and a one-shot script has no repeat for a
+            # result cache to serve nor a status line to send before rows
             for row in df.toLocalIterator():
                 print("\t".join(str(v) for v in row))
         return 0

@@ -19,12 +19,14 @@ import gzip
 import json
 import threading
 from concurrent.futures import TimeoutError as FuturesTimeout
-from itertools import chain
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import pyarrow as pa
+
 from quackpipe_spark.catalog import Catalog
 from quackpipe_spark.ingest import IngestService, ingest_lines
+from quackpipe_spark.jsonrows import json_rows, row_form
 from quackpipe_spark.query import QueryEngine
 from quackpipe_spark.writer import PartialWriteError
 
@@ -203,29 +205,31 @@ class GigapiServer:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def _stream_rows(self, df):
-                """Stream {"results": [...]} row by row (toLocalIterator +
-                connection-close framing): the previous collect()+dumps
-                held TWO full copies of an unbounded result on the driver
-                — a big SELECT would OOM the server process, taking ingest
-                and the merge ticker with it. Peak memory is now one
-                partition of rows; the reference streams its response too.
-                HTTP/1.0 connection-close framing (the handler default)
-                keeps this valid without chunked encoding.
+            def _stream_rows(self, table: pa.Table):
+                """Send {"results": [...]} from ``table``, the query's
+                result materialized once as Arrow (QueryEngine.result: one
+                Spark job, or none for a held result), written batch by
+                batch with connection-close framing (HTTP/1.0, the handler
+                default). The bytes equal the row-by-row path's
+                ``json.dumps(row.asDict(recursive=True), default=str)``
+                joined by ", " (see :mod:`quackpipe_spark.jsonrows`).
+                Driver memory is bounded by the result held once as Arrow
+                — Spark's ``spark.driver.maxResultSize`` caps it — plus
+                one batch of Python rows.
 
-                Error contract: the FIRST row is pulled before the 200
-                header goes out, so execution errors (not just analysis
-                errors) almost always surface as the documented JSON 500/
-                400 shape. A failure after streaming began cannot un-send
-                the 200 — instead the body closes as
-                ``{"results": [...], "error": "..."}``: still valid JSON,
-                unambiguously not a success shape, never a second status
-                line spliced mid-body."""
-                it = df.toLocalIterator()
-                try:
-                    first_row = next(it)
-                except StopIteration:
-                    first_row = None
+                Error contract: the result is complete before the 200
+                header goes out, so every analysis or execution failure is
+                the documented JSON 400 shape. Only a failure while
+                encoding or writing (a value JSON can't render, the client
+                gone) comes after the committed 200: the body then closes
+                as ``{"results": [...], "error": "..."}`` — still valid
+                JSON, unambiguously not a success shape, never a second
+                status line spliced mid-body."""
+                bytes_ok = (
+                    server.spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true").lower()
+                    == "true"
+                )
+                forms = [row_form(f.type, bytes_ok) for f in table.schema]
                 # past here the 200 is committed
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
@@ -233,10 +237,11 @@ class GigapiServer:
                 w = self.wfile
                 w.write(b'{"results": [')
                 try:
-                    rows = chain([first_row], it) if first_row is not None else ()
-                    for i, row in enumerate(rows):
-                        chunk = json.dumps(row.asDict(recursive=True), default=str)
-                        w.write((b", " if i else b"") + chunk.encode())
+                    sep = b""
+                    for batch in table.to_batches():
+                        if batch.num_rows:
+                            w.write(sep + json_rows(batch, forms).encode())
+                            sep = b", "
                     w.write(b"]}")
                 except Exception as e:
                     try:
@@ -442,8 +447,8 @@ class GigapiServer:
                         self.end_headers()
                     elif path == "/query":
                         body = json.loads(self._body() or b"{}")
-                        df = server.query.sql(body["query"], db=q.get("db", "default"))
-                        self._stream_rows(df)
+                        table = server.query.result(body["query"], db=q.get("db", "default"))
+                        self._stream_rows(table)
                     else:
                         self._send(404, {"error": "not found"})
                 except Exception as e:  # error shape parity: JSON error body

@@ -290,16 +290,18 @@ def test_query_response_is_streamed_shape(server):
     assert [r["v"] for r in rows] == list(range(50))
 
 
-def test_query_error_shapes_around_streaming(server, spark):
-    """Two error paths of the streamed /query response:
+def test_query_error_shapes_around_streaming(server, spark, monkeypatch):
+    """Two error paths of the /query response:
 
-    - execution fails BEFORE the first row (first partition): the first
-      row is pulled before the 200 header commits, so the client gets
-      the documented JSON 400 error shape, not a broken 200;
-    - execution fails MID-STREAM (a later partition): the 200 cannot be
-      un-sent, so the body must close as valid JSON with an "error" key
-      — never a second status line spliced into the body."""
+    - execution fails, in the first partition or a later one: the result
+      is materialized before the 200 header commits, so the client gets
+      the documented JSON 400 error shape with no partial rows;
+    - encoding fails after the 200 committed: the body must close as
+      valid JSON with an "error" key after the rows already written —
+      never a second status line spliced into the body."""
     from pyspark.sql.types import LongType
+
+    import quackpipe_spark.api as api
 
     def boom_late(x):
         if x >= 750:
@@ -327,11 +329,93 @@ def test_query_error_shapes_around_streaming(server, spark):
             {"query": "SELECT qp_test_boom_late(id) AS v FROM range(0, 1000, 1, 4)"}
         ).encode(),
     )
-    assert status == 200  # header was already committed when the job died
-    doc = json.loads(body)  # still valid JSON
+    assert status == 400  # the late partition failed before any header
+    doc = json.loads(body)
     assert "kaboom-late" in doc["error"]
-    assert doc["results"]  # the early partitions streamed
-    assert all(r["v"] < 750 for r in doc["results"])
+    assert "results" not in doc
+    # a type with no Row form fails before the header, as the row path did
+    status, body = _post(
+        server.base + "/query", json.dumps({"query": "SELECT make_interval(1, 2) AS i"}).encode()
+    )
+    assert status == 400 and "CalendarIntervalType" in json.loads(body)["error"]
+
+    real, calls = api.json_rows, []
+
+    def encode_fails_second_batch(batch, forms):
+        calls.append(batch.num_rows)
+        if len(calls) == 2:
+            raise ValueError("encode-boom")
+        return real(batch, forms)
+
+    monkeypatch.setattr(api, "json_rows", encode_fails_second_batch)
+    status, body = _post(
+        server.base + "/query",
+        json.dumps({"query": "SELECT id AS v FROM range(0, 25000, 1, 3) ORDER BY id"}).encode(),
+    )
+    assert status == 200  # the header was committed before encoding
+    doc = json.loads(body)  # still valid JSON
+    assert "encode-boom" in doc["error"]
+    assert [r["v"] for r in doc["results"]] == list(range(calls[0]))
+    assert 0 < calls[0] < 25000
+
+
+# every type /query serves, with a null in each column on every third row
+_ALL_TYPES = """
+SELECT id, if(id % 3 = 0, NULL, x) AS x FROM (SELECT id, named_struct(
+  'i', CAST(id AS INT), 'b8', CAST(id AS TINYINT), 's16', CAST(-id AS SMALLINT),
+  'l', id * 3000000000, 'f', CAST(id / 10 AS FLOAT), 'd', id / 7,
+  'nan', double('NaN'), 'pinf', double('inf'), 'ninf', double('-inf'),
+  'dec', CAST(id / 8 AS DECIMAL(10, 3)), 'tiny', CAST(id / 10000000 AS DECIMAL(20, 9)),
+  'dz', CAST(0 AS DECIMAL(20, 9)), 'big', CAST(id * 1e20 AS DECIMAL(38, 1)),
+  's', concat('héllo ☃ 𝄞 "q" \\ ', id), 'bin', unhex(hex(id * 255)),
+  'bo', id % 2 = 0, 'dt', date_add(DATE'1969-12-30', CAST(id AS INT)),
+  'ts', TIMESTAMP'2024-03-10 01:59:59.5' + make_interval(0, 0, 0, 0, CAST(id AS INT)),
+  'old', TIMESTAMP'1960-01-01 00:00:00.25' + make_interval(0, 0, 0, CAST(id AS INT)),
+  'ntz', TIMESTAMP_NTZ'2024-01-02 03:04:05.6' + make_interval(0, 0, 0, CAST(id AS INT)),
+  'arr', array(id, NULL, -id),
+  'm', map_from_arrays(transform(sequence(0, 30), k -> concat('k', k * id)), sequence(0, 30)),
+  'mi', map_from_arrays(sequence(0, 40, 8), transform(sequence(0, 40, 8), k -> k + id)),
+  'ml', map(id * 4294967296, 'hi', -id, 'neg'),
+  'mb', map(true, id, false, -id),
+  'mt', map_from_arrays(transform(sequence(0, 40), k -> k * 64 + id), sequence(0, 40)),
+  'nest', named_struct('t', TIMESTAMP'2020-01-01 00:00:00' + make_interval(0, 0, 0, CAST(id AS INT)),
+                       'bb', X'00FF', 'arr', array(named_struct('q', CAST(id AS DECIMAL(5, 2)))),
+                       'mm', map('k', X'01'))) AS x
+FROM range(0, 12, 1, 3))
+"""
+
+
+def test_query_json_equals_the_row_path(server, monkeypatch):
+    """/query renders its one Arrow collect byte for byte as the
+    row-by-row path rendered ``json.dumps(row.asDict(recursive=True),
+    default=str)``: ints, NaN and ±inf, decimals (tiny ones in Java's
+    engineering notation), unicode, binary, bools, dates, timestamps as
+    naive local time (here in a zone with a DST gap), timestamp_ntz,
+    arrays, maps in Java HashMap order (tree bins too), nested structs and nulls; and a
+    multi-partition ORDER BY over several Arrow batches keeps its order."""
+    import time
+
+    def both(q):
+        status, body = _post(server.base + "/query", json.dumps({"query": q}).encode())
+        rows = server.query.sql(q).toLocalIterator()
+        want = ", ".join(json.dumps(r.asDict(recursive=True), default=str) for r in rows)
+        return status, body.decode(), '{"results": [' + want + "]}"
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        for q in (
+            _ALL_TYPES,
+            "SELECT x.* FROM (" + _ALL_TYPES + ")",
+            "SELECT id, id / 3 AS q, CAST(id AS STRING) AS s FROM range(0, 25000, 1, 4) ORDER BY id DESC",
+            "SELECT id FROM range(0, 0)",
+        ):
+            status, got, want = both(q)
+            assert status == 200
+            assert got == want, q
+    finally:
+        monkeypatch.delenv("TZ")
+        time.tzset()
 
 
 def test_streaming_dead_letter_table(spark, tmp_path):

@@ -286,8 +286,9 @@ def test_curdate_never_caches(plan_cacheable):
 
 def test_plan_cache_randomized_interleaving(qe, spark):
     """Seeded random interleaving of queries and ingests: every result
-    served by the caching engine equals a cache-free engine's result on
-    the same store at the same moment — the staleness-impossible-by-key
+    served by the caching engine — as a plan through sql() or as a held
+    result through result() — equals a cache-free engine's result on the
+    same store at the same moment: the staleness-impossible-by-key
     claim, exercised across hits, misses, and evictions."""
     import random
 
@@ -313,7 +314,10 @@ def test_plan_cache_randomized_interleaving(qe, spark):
             next_ts += 10
         q = rng.choice(templates)
         before = len(qe._plan_cache)
-        got = sorted(map(tuple, qe.sql(q, db="d").collect()))
+        if rng.random() < 0.5:
+            got = sorted(tuple(r.values()) for r in qe.result(q, db="d").to_pylist())
+        else:
+            got = sorted(map(tuple, qe.sql(q, db="d").collect()))
         if len(qe._plan_cache) == before:
             hits += 1
         want = sorted(map(tuple, nocache.sql(q, db="d").collect()))
@@ -386,3 +390,283 @@ def test_sql_function_redefined_through_sql_invalidates(qe):
         assert qe.sql(q, db="d").collect()[0]["s"] == 306
     finally:
         qe.spark.sql("DROP TEMPORARY FUNCTION IF EXISTS plus1")
+
+
+def test_miss_binds_current_scan_and_spares_other_views(qe, spark):
+    """A miss binds each pruned scan under the table's bare name straight
+    into the session catalog: the binding reads the current file list
+    (a file flushed after the first query is read), and a session view
+    under another name is left as it was."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    spark.range(7).createOrReplaceTempView("pc_other_view")
+    try:
+        before = catalog.getRawTempView("pc_other_view").get()
+        q = "SELECT count(*) AS n FROM ev"
+        assert qe.sql(q, db="d").collect()[0]["n"] == 3
+        qe._ingest.store("d", "ev", {"v": [100], "__timestamp": [40]})
+        qe._ingest.flush()
+        assert qe.sql(q, db="d").collect()[0]["n"] == 4
+        bound = spark.table("ev")
+        live = qe.table_files(qe.catalog.get("d", "ev"))
+        assert len(live) == 2
+        assert sorted(f.rsplit("/", 1)[1] for f in bound.inputFiles()) == sorted(
+            f.rsplit("/", 1)[1] for f in live
+        )
+        assert bound.count() == 4
+        assert catalog.getRawTempView("pc_other_view").get().equals(before)
+        assert spark.table("pc_other_view").count() == 7
+    finally:
+        spark.catalog.dropTempView("pc_other_view")
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it started on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "result-cache probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_result_runs_no_spark_job(qe, spark):
+    """A repeat text with unchanged files is served from the held Arrow
+    table, which replaced the DataFrame under the same key: no Spark job.
+    sql() on that key still gets a DataFrame with the same rows."""
+    import pyarrow as pa
+
+    q = "SELECT v, __timestamp FROM ev WHERE __timestamp >= 15 ORDER BY v"
+    first, jobs = _jobs(spark, lambda: qe.result(q, db="d"))
+    assert jobs >= 1 and first.column("v").to_pylist() == [2, 3]
+    again, jobs = _jobs(spark, lambda: qe.result(q, db="d"))
+    assert jobs == 0 and again is first
+    [entry] = qe._plan_cache.values()
+    assert isinstance(entry, pa.Table)
+    assert [r["v"] for r in qe.sql(q, db="d").collect()] == [2, 3]
+    assert qe._plan_cache[next(iter(qe._plan_cache))] is entry
+
+
+def test_large_result_keeps_the_plan(qe, spark, monkeypatch):
+    """A result at or over RESULT_CACHE_BYTES is not held: the key keeps
+    the DataFrame and a repeat executes it again."""
+    import quackpipe_spark.query as Q
+    from pyspark.sql import DataFrame
+
+    monkeypatch.setattr(Q, "RESULT_CACHE_BYTES", 1)
+    q = "SELECT v FROM ev ORDER BY v"
+    assert qe.result(q, db="d").column("v").to_pylist() == [1, 2, 3]
+    [entry] = qe._plan_cache.values()
+    assert isinstance(entry, DataFrame)
+    again, jobs = _jobs(spark, lambda: qe.result(q, db="d"))
+    assert jobs >= 1 and again.column("v").to_pylist() == [1, 2, 3]
+    assert qe._plan_cache[next(iter(qe._plan_cache))] is entry
+
+
+def test_result_cache_is_never_stale(qe, spark):
+    """An ingest or a compaction changes the key (its file list), so the
+    repeat runs again and sees the new rows; a SET or a CREATE FUNCTION
+    through sql() flushes every held result."""
+    from quackpipe_spark.plans.compactor import Compactor
+
+    q = "SELECT count(*) AS n, sum(v) AS s FROM ev"
+
+    def ask():
+        return _jobs(spark, lambda: qe.result(q, db="d").to_pylist())
+
+    rows, jobs = ask()
+    assert rows == [{"n": 3, "s": 6}] and jobs >= 1
+    assert ask() == (rows, 0)
+    qe._ingest.store("d", "ev", {"v": [100], "__timestamp": [40]})
+    qe._ingest.flush()
+    rows, jobs = ask()
+    assert rows == [{"n": 4, "s": 106}] and jobs >= 1
+    ev = qe.catalog.get("d", "ev")
+    before = qe.table_files(ev)
+    Compactor(spark, ev, drop_delay_s=0.0).run_once(levels=[1])
+    assert qe.table_files(ev) != before
+    rows, jobs = ask()
+    assert rows == [{"n": 4, "s": 106}] and jobs >= 1
+    assert ask()[1] == 0
+    qe.sql(f"SET spark.sql.ansi.enabled={spark.conf.get('spark.sql.ansi.enabled')}", db="d")
+    assert ask()[1] >= 1
+    try:
+        f = "SELECT sum(bump(v)) AS s FROM ev"
+        qe.sql("CREATE OR REPLACE TEMPORARY FUNCTION bump(x BIGINT) RETURNS BIGINT RETURN x + 1", db="d")
+        assert qe.result(f, db="d").to_pylist() == [{"s": 110}]
+        assert qe.result(f, db="d").to_pylist() == [{"s": 110}]
+        qe.sql("CREATE OR REPLACE TEMPORARY FUNCTION bump(x BIGINT) RETURNS BIGINT RETURN x + 10", db="d")
+        assert qe.result(f, db="d").to_pylist() == [{"s": 146}]
+    finally:
+        qe.spark.sql("DROP TEMPORARY FUNCTION IF EXISTS bump")
+
+
+def test_command_racing_a_store_leaves_no_result(qe, spark, monkeypatch):
+    """A command run through sql() while a result is being collected
+    flushes the cache; the result, keyed before the command, must not be
+    stored after it."""
+    import pyarrow as pa
+
+    import quackpipe_spark.query as Q
+
+    real, raced = Q._to_arrow, []
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+
+    def racing(df):
+        raced.append(qe.sql(f"SET spark.sql.ansi.enabled={ansi}", db="d"))
+        return real(df)
+
+    monkeypatch.setattr(Q, "_to_arrow", racing)
+    q = "SELECT sum(v) AS s FROM ev"
+    assert qe.result(q, db="d").to_pylist() == [{"s": 6}]
+    monkeypatch.undo()
+    assert raced
+    assert not any(isinstance(e, pa.Table) for e in qe._plan_cache.values())
+    assert _jobs(spark, lambda: qe.result(q, db="d"))[1] >= 1
+
+
+def test_result_cache_under_concurrent_ingest(qe):
+    """More reader threads than cores, with a short switch interval,
+    serve one text through result() while rows are flushed one file at
+    a time: every answer lies between the rows flushed before the call
+    and the rows being flushed after it, and once the last flush is done
+    the answer is the final count — no held result outlives its files."""
+    import sys
+    import threading
+
+    q = "SELECT count(*) AS n FROM ev"
+    lock, done, bad = threading.Lock(), threading.Event(), []
+    rows = {"flushed": 3, "flushing": 3}
+
+    def reader():
+        while not done.is_set():
+            with lock:
+                lo = rows["flushed"]
+            n = qe.result(q, db="d").column("n")[0].as_py()
+            with lock:
+                hi = rows["flushing"]
+            if not lo <= n <= hi:
+                bad.append((lo, n, hi))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader) for _ in range(6)]
+    try:
+        for t in threads:
+            t.start()
+        for i in range(8):
+            with lock:
+                rows["flushing"] += 1
+            qe._ingest.store("d", "ev", {"v": [i], "__timestamp": [100 + i]})
+            qe._ingest.flush()
+            with lock:
+                rows["flushed"] += 1
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad
+    assert qe.result(q, db="d").column("n")[0].as_py() == 11
+
+
+def test_nondeterministic_result_never_held(qe, spark):
+    for q in ("SELECT v, rand() AS r FROM ev", "SELECT v, now() AS t FROM ev"):
+        for _ in range(2):
+            assert _jobs(spark, lambda: qe.result(q, db="d"))[1] >= 1
+    assert not qe._plan_cache
+
+
+def test_today_yesterday_never_cache(plan_cacheable):
+    """today()/yesterday() inline to current_date, which Catalyst
+    freezes at first execution — a cached plan would serve yesterday's
+    rows after midnight."""
+
+    def ok(q):
+        return plan_cacheable(q, ["ev"])
+
+    assert not ok("SELECT count(*) FROM ev WHERE d = today()")
+    assert not ok("SELECT count(*) FROM ev WHERE d >= yesterday()")
+    # ...but the same words as identifiers/literals are fine
+    assert ok("SELECT today FROM ev")
+    assert ok("SELECT v FROM ev WHERE note = 'today()'")
+
+
+def test_window_clause_name_is_not_a_cte(plan_cacheable):
+    """`WINDOW w AS (...)` defines no relation: a FROM over a session
+    temp view named w must read as unpinnable (never cacheable), while a
+    real WITH-defined w still caches."""
+    names = ["ev"]
+    assert not plan_cacheable(
+        "SELECT sum(x) OVER w FROM w WINDOW w AS (ORDER BY x)", names
+    )
+    assert plan_cacheable(
+        "WITH w AS (SELECT v FROM ev) SELECT sum(v) OVER (ORDER BY v) FROM w",
+        names,
+    )
+    assert plan_cacheable(
+        "WITH a AS (SELECT v FROM ev), b AS (SELECT v FROM a) SELECT * FROM b",
+        names,
+    )
+
+
+def test_table_named_in_literal_is_not_a_reference(qe, spark):
+    """A catalog table mentioned only inside a string literal must not be
+    resolved/registered — previously it clobbered a same-named session
+    temp view and paid its index I/O inside the serving lock."""
+    qe._ingest.store("d", "other", {"v": [99], "__timestamp": [10]})
+    qe._ingest.flush()
+    spark.createDataFrame([(123,)], "user_col long").createOrReplaceTempView("other")
+    try:
+        rows = qe.sql("SELECT count(*) AS n FROM ev WHERE 'other' = 'x'", db="d")
+        assert rows.collect()[0]["n"] == 0
+        # the user's view survived (no clobber by the engine's pruned view)
+        assert spark.sql("SELECT user_col FROM other").collect()[0]["user_col"] == 123
+    finally:
+        spark.catalog.dropTempView("other")
+
+
+def test_backticked_relations_count_and_pin(plan_cacheable, time_bounds):
+    """Backtick-quoted relations are visible to the relation scan: a
+    backticked second relation still defeats unqualified attribution, a
+    plain-word backticked catalog table behaves like the
+    bare word, and a backticked unknown view is never judged cacheable."""
+    # the follow-up repro: backticked join partner must veto the bound
+    q = "SELECT * FROM events JOIN `myview` v ON events.id = v.id WHERE __timestamp >= 100"
+    assert time_bounds(q, ["events"], analyzes=False) == {}
+    q2 = "SELECT * FROM `events` JOIN `myview` v ON 1=1 WHERE __timestamp >= 100"
+    assert time_bounds(q2, ["events"], analyzes=False) == {}
+    # plain-word backticked single relation = the bare word
+    assert time_bounds(
+        "SELECT * FROM `events` WHERE __timestamp >= 100", ["events"]
+    ) == {"events": (100, None)}
+    # a weird-content backticked relation is no catalog table
+    assert (
+        time_bounds(
+            "SELECT * FROM `my view` WHERE __timestamp >= 100",
+            ["events"],
+            analyzes=False,
+        )
+        == {}
+    )
+    # cacheability: backticked unknown view unpinnable; backticked catalog ok
+    names = ["ev"]
+    assert not plan_cacheable("SELECT * FROM `tv`", names)
+    assert not plan_cacheable("SELECT * FROM `a b`", names, analyzes=False)
+    assert not plan_cacheable("SELECT * FROM `db`.`ev`", names, analyzes=False)
+    assert plan_cacheable("SELECT * FROM `ev`", names)
+
+
+def test_paren_temp_view_not_plan_cacheable(plan_cacheable):
+    """`FROM (my_temp_view)` hid the view name from the cacheability
+    scan: the query was judged cacheable with the view's contents
+    unpinned, so redefining the view kept serving the old plan."""
+    assert plan_cacheable("SELECT * FROM (my_temp_view) WHERE x = 1", []) is False
+    assert plan_cacheable("SELECT * FROM my_temp_view WHERE x = 1", []) is False
+    # catalog-table queries stay cacheable
+    assert plan_cacheable("SELECT * FROM events WHERE x = 1", ["events"]) is True

@@ -5,6 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from quackpipe_spark.sqltext import blank_noncode, scan_segments
+
 NS = 10**9
 
 
@@ -1325,3 +1327,214 @@ def test_metadata_column_query_matches_unpruned(spark, tmp_path, monkeypatch):
     pruned = outcome()
     monkeypatch.setattr(Q, "extract_time_bounds_per_table", lambda *a, **k: {})
     assert outcome() == pruned
+
+
+def test_backtick_apostrophe_cannot_desync_quote_parity(time_bounds):
+    """The confirmed repro: an apostrophe inside a backtick
+    identifier started a phantom literal, hiding a real OR and exposing
+    literal contents as code — the pruner fabricated a bound under a
+    disjunct (silent missing rows)."""
+    q = (
+        "SELECT * FROM events WHERE `x'y` = 'p' "
+        "OR q = ' AND __timestamp >= 100 AND z = '"
+    )
+    assert time_bounds(q, ["events"]) == {}
+    b = blank_noncode(q)
+    assert "OR" in b  # the real OR is visible as code
+    assert "__timestamp" not in b  # the literal's contents are blanked
+
+
+def test_backtick_ident_lexed_and_weird_contents_blanked(time_bounds):
+    kinds = [k for k, _a, _b in scan_segments("SELECT `a``b;c` FROM t")]
+    assert "ident" in kinds
+    b = blank_noncode("SELECT `a;b` FROM t; SELECT 2")
+    assert ";" not in b.split("FROM")[0]  # the identifier ';' is blanked
+    # plain-word identifiers stay visible (`events` must still read as a
+    # table reference; `__timestamp` as the time column)
+    assert "events" in blank_noncode("SELECT * FROM `events`")
+    # an identifier NAMED like a bound cannot fabricate one
+    q = "SELECT `__timestamp >= 100` FROM events"
+    assert "__timestamp" not in blank_noncode(q)
+    assert time_bounds(q, ["events"], analyzes=False) == {}
+
+
+def test_statement_split_ignores_semicolon_in_backticks():
+    from quackpipe_spark.__main__ import split_statements
+
+    got = split_statements("SELECT `a;b` FROM t; SELECT 2")
+    assert len(got) == 2
+    assert got[0] == "SELECT `a;b` FROM t"
+
+
+def test_unterminated_backtick_is_conservative():
+    b = blank_noncode("SELECT `oops FROM t WHERE __timestamp >= 5")
+    assert "__timestamp" not in b
+
+
+def test_read_parquet_interception_requires_word_boundary():
+    from quackpipe_spark.query import QueryEngine
+
+    assert QueryEngine._RP_CALL.search("SELECT my_read_parquet('/tmp/x')") is None
+    assert QueryEngine._RP_CALL.search("SELECT * FROM read_parquet('/tmp/x')")
+    assert (
+        QueryEngine._RPMT_CALL.search("SELECT x_read_parquet_mergetree(ARRAY['a'], 'k')")
+        is None
+    )
+
+
+def test_rewrite_sql_unfolds_quote_escapes_in_paths():
+    from quackpipe_spark.functions.dialect import rewrite_sql
+
+    out = rewrite_sql("SELECT * FROM read_parquet('/tmp/a''b.parquet')")
+    assert "parquet.`/tmp/a'b.parquet`" in out
+    assert "''" not in out
+
+
+def test_unqualified_bound_refuses_two_relation_scope(time_bounds):
+    """`FROM events JOIN myview` has TWO relations in scope: an
+    unqualified __timestamp could bind to either, so Spark rejects the
+    text and nothing is pruned."""
+    q = "SELECT * FROM events e JOIN myview v ON e.id = v.id WHERE __timestamp >= 100"
+    assert time_bounds(q, ["events"], analyzes=False) == {}
+    # a qualified bound prunes its own relation
+    q2 = "SELECT * FROM events e JOIN myview v ON e.id = v.id WHERE e.__timestamp >= 100"
+    assert time_bounds(q2, ["events"]) == {"events": (100, None)}
+    # the single-relation shape keeps pruning; a bare fragment is no
+    # statement
+    assert time_bounds(
+        "SELECT * FROM events WHERE __timestamp >= 100", ["events"]
+    ) == {"events": (100, None)}
+    assert time_bounds("WHERE __timestamp >= 5", ["_"], analyzes=False) == {}
+    # a sole NON-catalog relation must not inherit the bound either
+    assert (
+        time_bounds(
+            "SELECT * FROM myview WHERE __timestamp >= 100", ["events"]
+        )
+        == {}
+    )
+
+
+def test_oracle_normalizer_canonical_forms():
+    """The differential helper's canonicalizer: NaN is NOT
+    null (a Spark NaN vs an oracle NULL must FAIL, two NaNs must match —
+    including np.float32's, which is not a float subclass), ==-equal
+    multisets pair correctly regardless of str() sort order (-0.0/0.0,
+    Decimal dtype noise), arrays compare element-wise instead of raising,
+    and DuckDB's midnight-datetime DATE carrier equals Spark's date."""
+    import datetime
+
+    import numpy as np
+    import pandas as pd
+
+    from tests.oracle_utils import _canon, _normalize
+
+    assert _canon(float("nan")) == _canon(np.float32("nan")) == ("nan",)
+    assert _canon(float("nan")) != _canon(None)
+    assert _canon(-0.0) == _canon(0.0) == _canon(np.float64(0.0))
+    from decimal import Decimal
+
+    assert _canon(Decimal("1.50")) == _canon(1.5) == _canon(np.int64(1) + 0.5)
+    assert _canon(np.array([1, 2])) == _canon([1, 2])
+    assert _canon(pd.Timestamp("1996-07-01")) == _canon(datetime.date(1996, 7, 1))
+    # the verified mispairing repro: equal multisets whose str() sort
+    # orders differ must normalize identically
+    a = pd.DataFrame({"v": [-0.0, -1.0]})
+    b = pd.DataFrame({"v": [0.0, -1.0]})
+    assert _normalize(a) == _normalize(b)
+
+
+def test_dialect_session_registry_purges_dead_sessions(spark):
+    from quackpipe_spark.workloads import sql_surface as S
+
+    class _JSC:  # classic probe path reporting a STOPPED context
+        def sc(self):
+            return self
+
+        def isStopped(self):
+            return True
+
+    class _SCHolder:
+        _jsc = _JSC()
+
+    class StoppedSession:
+        _sc = _SCHolder()
+
+    class UnknownShapeSession:  # probe path absent (Spark Connect shape)
+        @property
+        def _sc(self):
+            raise RuntimeError("no classic context")
+
+    S._DIALECT_SESSIONS[-7] = StoppedSession()
+    S._DIALECT_SESSIONS[-8] = UnknownShapeSession()
+    # force a fresh registration: the purge runs only on the (rare)
+    # register path, and earlier tests may have registered this session
+    S._DIALECT_SESSIONS.pop(id(spark), None)
+    S._dialect(spark)
+    # provably stopped → purged; unknown probe shape → kept (judging
+    # Connect sessions dead purged live caches on every miss)
+    assert -7 not in S._DIALECT_SESSIONS
+    assert -8 in S._DIALECT_SESSIONS
+    S._DIALECT_SESSIONS.pop(-8, None)  # cleanup
+    assert S._DIALECT_SESSIONS.get(id(spark)) is spark
+
+
+def test_paren_join_relations_refuse_pruning(time_bounds):
+    """`FROM (events e1 JOIN events e2 ON …)`: a qualified bound on one
+    alias must not prune the shared view the other alias still reads."""
+    q = (
+        "SELECT * FROM (events e1 JOIN events e2 ON e1.event_id = e2.event_id) "
+        "WHERE e2.__timestamp >= 1000"
+    )
+    assert time_bounds(q, ["events"]) == {}
+    # unparenthesized control: the self-join guard already refuses
+    q2 = (
+        "SELECT * FROM events e1 JOIN events e2 ON e1.event_id = e2.event_id "
+        "WHERE e2.__timestamp >= 1000"
+    )
+    assert time_bounds(q2, ["events"]) == {}
+    # plain single-relation control still prunes
+    q3 = "SELECT * FROM events WHERE __timestamp >= 1000"
+    assert time_bounds(q3, ["events"]) == {"events": (1000, None)}
+    # a parenthesized subquery prunes
+    q4 = "SELECT * FROM (SELECT * FROM events WHERE __timestamp >= 7) t"
+    assert time_bounds(q4, ["events"]) == {"events": (7, None)}
+
+
+def test_backticked_where_column_opens_no_phantom_scope(time_bounds):
+    """A projected column named `where` (plain-word backtick contents
+    stay visible after blanking) must not shift the WHERE scope into the
+    SELECT list — a projected boolean is not a row filter."""
+    q = "SELECT `where`, a AND __timestamp >= 5 AND b FROM events WHERE c = 1"
+    assert time_bounds(q, ["events"], analyzes=False) == {}  # a, b: bigint
+    q1 = "SELECT `where`, flag AND __timestamp >= 5 AND flag FROM events WHERE c = 1"
+    assert time_bounds(q1, ["events"]) == {}
+    # the real WHERE keyword still opens the scope
+    q2 = "SELECT `where`, x FROM events WHERE __timestamp >= 5"
+    assert time_bounds(q2, ["events"]) == {"events": (5, None)}
+
+
+def test_trailing_semicolon_keeps_pruning(time_bounds):
+    """Spark accepts a trailing ';'; leaving it inside the WHERE scope
+    failed the conjunct's scope-end check and silently disabled pruning
+    for every copy-pasted query."""
+    q = "SELECT * FROM events WHERE __timestamp >= 1000;"
+    assert time_bounds(q, ["events"]) == {"events": (1000, None)}
+    q2 = "SELECT * FROM events WHERE __timestamp >= 1000 AND __timestamp < 2000 ;"
+    # strict `<` keeps hi at the literal (conservative: a file with
+    # min_time == hi is kept though the predicate excludes it)
+    assert time_bounds(q2, ["events"]) == {"events": (1000, 2000)}
+
+
+def test_pre_epoch_fractional_literal_floors(time_bounds):
+    """A fractional pre-epoch literal bounds on the right side of zero:
+    truncating toward zero once gave +0.5 s instead of -0.5 s and pruned
+    files still satisfying the true predicate. The bound is Catalyst's
+    own fold of epoch_ns(…), the value execution compares against."""
+    for lit, ns in (
+        ("1969-12-31 23:59:59.5", -500_000_000),
+        ("1970-01-01 00:00:00.5", 500_000_000),
+        ("1969-12-31 23:59:59", -1_000_000_000),
+        ("2024-06-01 12:00:00.25", 1_717_243_200_000_000_000 + 250_000_000),
+    ):
+        q = f"SELECT * FROM events WHERE __timestamp >= epoch_ns('{lit}'::TIMESTAMP)"
+        assert time_bounds(q, ["events"]) == {"events": (ns, None)}
